@@ -762,3 +762,49 @@ def test_decode_media_dispatches_avi(spark):
     assert r.n_values == n * w * h
     assert r.value_sum == sum(lvl * w * h for lvl in levels)
     assert r.value_min == min(levels) and r.value_max == max(levels)
+
+
+def _jpeg_grid():
+    """Every encoder's output on a seeded grid of sizes, qualities and
+    restart intervals (450 encodes)."""
+    import random
+
+    for w, ht in ((1, 1), (7, 5), (8, 8), (17, 9), (16, 16), (33, 20)):
+        rng = random.Random(w * 1000 + ht)
+        gray = bytes(rng.randrange(256) for _ in range(w * ht))
+        rgb = bytes(rng.randrange(256) for _ in range(3 * w * ht))
+        for q in (1, 25, 50, 90, 100):
+            for ri in (0, 1, 3):
+                for data in (
+                    M.encode_jpeg_gray(gray, w, ht, q, ri),
+                    M.encode_jpeg_rgb(rgb, w, ht, q, ri, subsampling="444"),
+                    M.encode_jpeg_rgb(rgb, w, ht, q, ri, subsampling="420"),
+                    M.encode_jpeg_gray_progressive(gray, w, ht, q, ri),
+                    M.encode_jpeg_rgb_progressive(rgb, w, ht, q, ri),
+                ):
+                    yield data
+
+
+def _grid_digest(blobs) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for data in blobs:
+        h.update(len(data).to_bytes(4, "big") + data)
+    return h.hexdigest()
+
+
+def test_jpeg_encoder_bytes_pinned():
+    """Every encoder's output is pinned byte for byte: a refactor of the
+    codec may change its code, never the files it writes."""
+    assert _grid_digest(_jpeg_grid()) == (
+        "c636ece819679981bdccfd2a48d5f7f9a3e17150dee376f2b14b8dabd10fdf14"
+    )
+
+
+def test_jpeg_decoder_pixels_pinned():
+    """Decoded pixels of the same grid are pinned too, so the decoder's
+    per-block arithmetic cannot drift either."""
+    assert _grid_digest(M.decode_jpeg_rgb(d)[2] for d in _jpeg_grid()) == (
+        "7f92c73319cfd6d3baa4337f3be0110195fa14c294f7597e4ae729d80e63109e"
+    )
