@@ -95,7 +95,7 @@ def connected_components(
     # plan-audit gates keep seeing the iterated join.
     if driver_max_sym_rows > 0 and not loop_leg_capture_active():
         if sym.count() <= driver_max_sym_rows:
-            return _driver_cc(edges, src, sym, max_iter)
+            return _driver_cc(sym, max_iter)
 
     labels = (
         sym.select(F.col("u").alias("node"))
@@ -166,9 +166,7 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def _driver_cc(
-    edges: DataFrame, src: str, sym: DataFrame, max_iter: int
-) -> DataFrame:
+def _driver_cc(sym: DataFrame, max_iter: int) -> DataFrame:
     """Driver-local replay of :func:`connected_components`' exact
     round schedule for size-gated graphs: synchronous neighbor-min
     propagation, then the pointer jump over the SAME round's
@@ -204,11 +202,14 @@ def _driver_cc(
         )
     from pyspark.sql.types import StructField, StructType
 
-    dt = edges.schema[src].dataType
+    # The id type is sym's: the union of (src, dst) with (dst, src)
+    # widens mixed id types (int src, long dst -> long), exactly the
+    # type the distributed loop's labels carry.
+    dt = sym.schema["u"].dataType
     schema = StructType(
         [StructField("node", dt), StructField("component", dt)]
     )
-    return edges.sparkSession.createDataFrame(
+    return sym.sparkSession.createDataFrame(
         list(labels.items()), schema
     )
 

@@ -73,6 +73,10 @@ def hashed_doc_features(
     from hdfs_parquet_importer_spark.operators.tokenize import doc_tokens
 
     if tokens_df is None:
+        if docs is None:
+            raise ValueError(
+                "hashed_doc_features needs docs or tokens_df, got neither"
+            )
         tokens_df = doc_tokens(docs, carry=carry)
     tok = tokens_df.select(
         "doc_id", *carry, F.explode("tokens").alias("term")

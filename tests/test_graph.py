@@ -332,3 +332,21 @@ def test_cc_driver_and_distributed_strategies_agree(spark):
         assert got == {(i, 0) for i in range(31)}
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(chain, max_iter=3, **kw)
+
+
+def test_cc_mixed_int_long_ids_same_schema_on_both_strategies(spark):
+    """An int ``src`` and a long ``dst`` widen to long in the
+    symmetrized edge list; the driver path must report that type,
+    exactly as the distributed path does."""
+    df = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 3_000_000_000)], "id_a int, id_b long"
+    )
+    local_df = connected_components(df)
+    dist_df = connected_components(df, driver_max_sym_rows=0)
+    assert local_df.schema == dist_df.schema
+    assert {f.dataType.simpleString() for f in local_df.schema.fields} == {
+        "bigint"
+    }
+    local = {(r.node, r.component) for r in local_df.collect()}
+    assert local == {(r.node, r.component) for r in dist_df.collect()}
+    assert local == {(1, 1), (2, 1), (3, 1), (7, 7), (3_000_000_000, 7)}

@@ -808,3 +808,49 @@ def test_jpeg_decoder_pixels_pinned():
     assert _grid_digest(M.decode_jpeg_rgb(d)[2] for d in _jpeg_grid()) == (
         "7f92c73319cfd6d3baa4337f3be0110195fa14c294f7597e4ae729d80e63109e"
     )
+
+
+def test_decode_media_decodes_each_jpeg_once(monkeypatch):
+    """decode_media runs the JPEG core once per payload and branches on
+    the plane count, for gray and color files alike."""
+    calls = []
+    core = M._decode_jpeg_planes
+
+    def counting(data):
+        calls.append(len(data))
+        return core(data)
+
+    monkeypatch.setattr(M, "_decode_jpeg_planes", counting)
+    gray = M.encode_jpeg_gray(_gradient(16, 16), 16, 16)
+    color = M.encode_jpeg_rgb(_rgb_gradient(16, 12), 16, 12)
+    for data, fmt, n in ((gray, "jpeg", 256), (color, "jpeg_rgb", 576)):
+        calls.clear()
+        (row,) = M._decode_media_row(1, data)
+        assert (row[1], row[4]) == (fmt, n)
+        assert calls == [len(data)]
+
+
+def test_blockwise_dct_matches_per_block_loop():
+    """The stacked FDCT/quantize and dequantize/IDCT equal the
+    per-block loop they replace, float for float (not just after
+    rounding to pixels)."""
+    import numpy as np
+
+    c = M._dct_mat()
+    rng = np.random.default_rng(11)
+    for rows, cols in ((1, 1), (2, 3), (5, 4)):
+        plane = rng.integers(0, 256, (rows * 8, cols * 8)) * 0.587
+        qt = M._scaled_qt(int(rng.integers(1, 101)), int(rng.integers(2)))
+        qmat = np.array(qt, dtype=np.float64).reshape(8, 8)
+        zz = M._zigzag_coefs(plane, qt)
+        pix = M._idct_blocks(zz, [qt[i] for i in M._ZIGZAG])
+        for by in range(rows):
+            for bx in range(cols):
+                blk = plane[by * 8: by * 8 + 8, bx * 8: bx * 8 + 8] - 128.0
+                q = np.round((c @ blk @ c.T) / qmat).astype(np.int64)
+                assert np.array_equal(zz[by, bx], q.reshape(64)[M._ZIGZAG])
+                block = np.zeros(64)
+                block[M._ZIGZAG] = zz[by, bx]
+                ref = c.T @ (block.reshape(8, 8) * qmat) @ c + 128.0
+                got = pix[by * 8: by * 8 + 8, bx * 8: bx * 8 + 8]
+                assert np.array_equal(got, ref)

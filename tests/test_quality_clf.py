@@ -132,3 +132,12 @@ def test_score_documents_validate_false_is_lazy(spark):
     }
     got = {(r["doc_id"], round(r["prob"], 12)) for r in scored.collect()}
     assert got == want
+
+
+def test_hashed_doc_features_needs_docs_or_tokens():
+    """Neither input is a caller error, named as such up front — not an
+    AttributeError from deep inside the tokenizer."""
+    import pytest
+
+    with pytest.raises(ValueError, match="docs or tokens_df"):
+        hashed_doc_features()

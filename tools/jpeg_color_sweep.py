@@ -9,29 +9,26 @@ so the (width, height, pixel-values) class of any doc_id is
 determined by id mod lcm(9, 7, 40) = 2520. Sweeping all 2520 classes
 measures the exact worst-case roundtrip error at the query's quality
 setting, for BOTH sampling modes the query alternates between —
-the fixed deterministic facts the oracle pins (same protocol as the
-r11 grayscale sweep): at quality 90, worst 3 for 4:4:4 and 5 for
-4:2:0 (r12)."""
+the fixed deterministic facts the oracle pins: at quality 90, worst
+3 for 4:4:4 and 5 for 4:2:0.
+
+Usage: python tools/jpeg_color_sweep.py [quality]   (default 90)"""
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+# Anchor on the repo root (this file's parent's parent) so the tool
+# works from any cwd, not just the repo root.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 from hdfs_parquet_importer_spark.operators import multimodal as M
 
 
 def rgb_for(doc_id: int) -> tuple[int, int, bytes]:
+    """The query's (width, height, RGB gradient) for one doc_id."""
     w, h = 8 + doc_id % 9, 8 + doc_id % 7
-    m40, m20 = doc_id % 40, doc_id % 20
-    out = bytearray()
-    for y in range(h):
-        for x in range(w):
-            out += bytes((
-                20 + m40 + 2 * x + 3 * y,
-                10 + m40 // 2 + 3 * x + 2 * y,
-                40 + m20 + x + 4 * y,
-            ))
-    return w, h, bytes(out)
+    return w, h, M._rgb_gradient(doc_id, w, h)
 
 
 def main() -> int:
