@@ -6,19 +6,23 @@ Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 exactly ONE JSON line:
 
     {"metric": "headline_total_sec", "value": N, "unit": "sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1, ...}
+     "queries": {"q1_pricing_summary": sec, ...}, "runs": 3, "sf": 0.1,
+     "cpus": 4, "speed_factor": 1.0}
 
-Timing methodology (round 3, after the round-2 +19% drift proved the
-old best-of-2 harness could not tell environment noise from plan
-regressions): one untimed warmup execution of EACH query first (JIT +
-whole-stage-codegen compile + parquet footer cache are one-time costs
-a long-lived job amortizes away), then each query is timed over
+Timing methodology: one untimed warmup execution of EACH query first
+(JIT + whole-stage-codegen compile + parquet footer cache are one-time
+costs a long-lived job amortizes away), then each query is timed over
 ``RUNS`` (>=3) full plan-build + execute + collect cycles. The
 reported per-query number is the MEDIAN; per-query spread (stdev and
-min) ships alongside under "stdev"/"min" so a round-over-round delta
-can be judged against the measured noise floor instead of guessed.
-The headline metric is the sum of per-query medians — a throughput
-proxy that rewards minimizing shuffles and keeping work JVM-side.
+min) and drift flags go to BENCH_LOCAL.{json,md}, so a delta can be
+judged against the measured noise floor instead of guessed. The
+headline metric is the sum of per-query medians — a throughput proxy
+that rewards minimizing shuffles and keeping work JVM-side.
+
+``protocol_session`` and ``timed_runs`` are the measurement core: the
+tools that re-run this protocol (tools/optbench.py, tools/scaling.py,
+tools/session_profile.py, tools/semdedup_knob_study.py) time through
+them too.
 """
 
 from __future__ import annotations
@@ -30,6 +34,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from pyspark.sql import SparkSession
 
 from hdfs_parquet_importer_spark.queries import registry
 from hdfs_parquet_importer_spark.session import build_session
@@ -167,73 +173,40 @@ RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
-    spark = build_session(
-        "bench",
-        shuffle_partitions=32,
-        conf={
-            # No interactive console here: stage progress bars are
-            # pure stderr noise in a harness capture.
-            "spark.ui.showConsoleProgress": "false",
-            # The measured-protocol heap (SCALING.md r12 addendum:
-            # 32g clears the localCheckpoint OOM wall AND avoids the
-            # 64g G1 regime that degraded checkpoint-heavy queries
-            # 5-25x; the pre-r13 default was 1g — see _release_
-            # persisted for what that did to the session tail).
-            "spark.driver.memory": "32g",
-        },
-    )
-    # Quiet the JVM log stream (VERDICT r6 item 3): the *bounded*
-    # single-partition windows (bucket-total passes over ~n_buckets
-    # rows, post-LIMIT cumsums) each emit a benign WindowExec WARN
-    # that drowned the 2000-byte stdout tail the driver keeps.
-    # Real unpartitioned-window regressions are enforced at the PLAN
-    # layer (tests/test_plans.py's global-window gate + allowlist),
-    # which is strictly stronger than grepping warnings.
-    spark.sparkContext.setLogLevel("ERROR")
-
+    n_cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")  # as build_session reads it
+    cpus = os.cpu_count() if n_cpus == "*" else int(n_cpus)
+    spark = protocol_session("bench")
     reg = registry()
-    names = [n for n in HEADLINE if n in reg]
+    runs = {
+        name: (lambda fn=reg[name].fn: fn(spark, sf_dir).collect())
+        for name in HEADLINE
+        if name in reg
+    }
 
     # Warmup: every query once, untimed (JIT + codegen compile).
-    for name in names:
-        reg[name].fn(spark, sf_dir).collect()
-        _release_persisted(spark)
+    for run in runs.values():
+        timed_runs(run, 1)
 
     medians: dict[str, float] = {}
     stdevs: dict[str, float] = {}
     mins: dict[str, float] = {}
-    for name in names:
-        samples: list[float] = []
-        for _ in range(max(3, RUNS)):
-            t0 = time.perf_counter()
-            reg[name].fn(spark, sf_dir).collect()
-            samples.append(time.perf_counter() - t0)
-            # OUTSIDE the timer: each execution's own checkpoint
-            # creation is charged to it above; dropping the blocks it
-            # left behind is harness bookkeeping, and doing it after
-            # EVERY execution means each timed run starts from the
-            # same storage state (lower variance, no session-position
-            # bias).
-            _release_persisted(spark)
+    for name, run in runs.items():
+        samples = timed_runs(run, max(3, RUNS))
         medians[name] = round(statistics.median(samples), 3)
         stdevs[name] = round(statistics.stdev(samples), 3)
         mins[name] = round(min(samples), 3)
 
     total = round(sum(medians.values()), 3)
 
-    # Drift flags (VERDICT r7 item 7): compare each median against the
-    # COMMITTED drift baseline (BENCH_BASELINE.json, promoted from the
-    # final quiet-window run at round close — see _load_prev_table;
-    # r10, VERDICT r9 item 5). The r7->r8
-    # adjudication of text_bm25_search showed WHY raw deltas mislead:
-    # the shared host drifts wholesale (r8 measured q1 +52%, simhash
-    # +6%, triangles +11%, bm25 +11% in one window — every unchanged
-    # query moved together), so the detector first estimates a global
-    # SPEED FACTOR (median of per-query new/old ratios — robust to a
-    # few real regressions) and then flags only queries that moved
-    # >2x the larger run's stdev (floored at 20 ms) RELATIVE to that
-    # factor. A structural regression flags 1-2 names; an ambient
-    # slowdown moves the factor and flags none.
+    # Drift flags against the committed baseline (BENCH_BASELINE.json,
+    # see _load_prev_table). The shared host drifts wholesale (one
+    # window moved every unchanged query together by 6-52%), so raw
+    # deltas mislead: first estimate a global SPEED FACTOR (median of
+    # per-query new/old ratios, robust to a few real regressions),
+    # then flag only queries that moved more than 2x the larger run's
+    # stdev (floored at 20 ms) RELATIVE to that factor. A structural
+    # regression flags 1-2 names; an ambient slowdown moves the factor
+    # and flags none.
     prev = _load_prev_table(sf)
     shared = [n for n in medians if n in prev.get("medians", {})]
     ratios = sorted(
@@ -245,70 +218,97 @@ def main() -> int:
         expected = prev["medians"][name] * speed_factor
         sigma = max(stdevs[name], prev.get("stdevs", {}).get(name, 0.0), 0.02)
         if abs(medians[name] - expected) > 2 * sigma:
-            # Record the FACTOR-RELATIVE ratio (new / ambient-adjusted
-            # expectation), not the raw ratio — the flag criterion is
-            # factor-relative, so the reported magnitude must be the
-            # structural part, not structural + ambient.
+            # The factor-relative ratio: the structural part of the
+            # move, not structural + ambient.
             drift[name] = round(medians[name] / expected, 2)
 
-    # Full per-query table (median/stdev/min) persists in-repo: the
-    # driver's tail capture keeps only the LAST 2000 stdout bytes, and
-    # the 35-query r5 line overflowed it — BENCH_r05.json lost the
-    # headline total and every median (VERDICT r5 "What's missing" 2).
+    # The full table (spread, drift) persists in-repo because a bench
+    # capture keeps only the last 2000 bytes of stdout.
     try:
-        _write_full_table(sf, total, medians, stdevs, mins, prev, drift, speed_factor)
+        _write_full_table(sf, cpus, total, medians, stdevs, mins, drift, speed_factor)
     except OSError:
         pass  # bench must still report when the repo dir is read-only
-
-    # The one stdout line stays compact (headline + medians only;
-    # spread lives in BENCH_LOCAL.md) and is size-guarded against the
-    # 2000-byte tail window.
-    payload = {
-        "metric": "headline_total_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": medians,
-        "runs": max(3, RUNS),
-        "sf": sf,
-        # Global machine-speed ratio vs the previous run (median of
-        # per-query ratios) and the >2-sigma RELATIVE movers after
-        # normalizing by it; drift == {} means nothing moved beyond
-        # noise once ambient host drift is factored out.
-        "speed_factor": speed_factor,
-        "drift": drift,
-    }
-    line = json.dumps(payload, separators=(",", ":"))
-    if len(line) > 1900:
-        slowest = dict(
-            sorted(medians.items(), key=lambda kv: -kv[1])[:30]
-        )
-        payload["queries"] = slowest
-        payload["queries_omitted"] = len(medians) - len(slowest)
-        line = json.dumps(payload, separators=(",", ":"))
-    print(line)
+    print(stdout_line(total, medians, sf, speed_factor, cpus))
     return 0
+
+
+def stdout_line(total, medians, sf, speed_factor, cpus) -> str:
+    """The one JSON line on stdout. It carries every query's median
+    and must fit the 2000-byte stdout tail a bench capture keeps
+    (tests/test_smoke.py checks the worst case); spread and drift live
+    in BENCH_LOCAL.{json,md}. ``speed_factor`` is the median per-query
+    ratio against the baseline: ambient host speed, not a result."""
+    return json.dumps(
+        {
+            "metric": "headline_total_sec",
+            "value": total,
+            "unit": "sec",
+            "queries": medians,
+            "runs": max(3, RUNS),
+            "sf": sf,
+            "cpus": cpus,
+            "speed_factor": speed_factor,
+        },
+        separators=(",", ":"),
+    )
+
+
+def protocol_session(app: str, conf: dict[str, str] | None = None):
+    """The session every timing harness measures in: bench.py and the
+    tools that re-run its protocol. ``conf`` adds or overrides
+    settings for an A/B of one mechanism."""
+    return build_session(
+        app,
+        shuffle_partitions=32,
+        # The bounded single-partition windows (bucket-total passes,
+        # post-LIMIT cumsums) each emit a benign WindowExec WARN that
+        # would drown the 2000-byte stdout tail a bench capture keeps.
+        # Real unpartitioned-window regressions are gated at the plan layer
+        # (tests/test_plans.py), which is stronger than grepping logs.
+        log_level="ERROR",
+        conf={
+            # No interactive console: progress bars are stderr noise.
+            "spark.ui.showConsoleProgress": "false",
+            # The 1g default heap (in local mode also the executor
+            # heap) OOMs on sf0.5 localCheckpoints. 64g is no better:
+            # there the checkpoint-heavy queries (dedup_span_removal at
+            # sf1, ~2.4M-row gram tables) ran 45-220 s per run against
+            # 7-15 s at 32g, same code and data in fresh sessions with
+            # no swap (consistent with G1 heap expansion page-faulting
+            # under a high allocation rate; mechanism unconfirmed).
+            "spark.driver.memory": "32g",
+            **(conf or {}),
+        },
+    )
+
+
+def timed_runs(run, n: int) -> list[float]:
+    """Wall seconds of ``n`` calls of ``run()``, the full plan-build +
+    execute + collect cycle. After each call, outside the timer, the
+    blocks it left persisted are released, so every run starts from
+    the same storage state. A warmup is ``timed_runs(run, 1)`` with
+    the result discarded."""
+    spark = SparkSession.active()
+    samples = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        run()
+        samples.append(time.perf_counter() - t0)
+        _release_persisted(spark)
+    return samples
 
 
 def _release_persisted(spark) -> None:
     """Unpersist every persisted RDD the last execution left behind.
 
-    83 sites across the package ``localCheckpoint`` small shared
-    intermediates; each bench execution rebuilds its plan from
-    scratch, so a FINISHED execution's blocks are dead weight — but
-    localCheckpoint pins them for the session lifetime and, before
-    r13, nothing ever dropped them. Over the 56-query session
-    (1 warmup + 3 timed runs each) that accumulated every query's
-    blocks in the storage region of what was then a 1g default
-    driver heap, and the measured effect was POSITION-dependent
-    degradation: the r13 control run (BENCH_NOTES) clocked the LAST
-    ~8 headline queries at 4-11x their ambient-adjusted baselines
-    (mix_quota_by_quality 11.3x, dedup_semdedup 10.1x,
-    eval_classifier_quality 5.5x ...) while early-session queries
-    sat at ambient — and the r12 DRIVER run's 17.5x
-    quality_ccnet_buckets cell was the same mechanism landing on a
-    different victim. Blocking unpersist so every run starts from
-    a deterministic storage state; the ~ms py4j sweep runs outside
-    the timer."""
+    Many operators ``localCheckpoint`` small shared intermediates, and
+    a checkpoint pins its blocks for the session lifetime. Each bench
+    execution rebuilds its plan from scratch, so a finished
+    execution's blocks are dead weight; left in place they pile up
+    over the session and degrade the queries that run late in it
+    (4-11x on the last ~8 headline queries, measured with a 1g heap).
+    Blocking unpersist, so every run starts from the same
+    storage state."""
     jsc = spark.sparkContext._jsc
     for rdd in jsc.getPersistentRDDs().values():
         rdd.unpersist(True)
@@ -347,7 +347,7 @@ def _load_prev_table(sf) -> dict:
     return {}
 
 
-def _write_full_table(sf, total, medians, stdevs, mins, prev, drift, speed_factor) -> None:
+def _write_full_table(sf, cpus, total, medians, stdevs, mins, drift, speed_factor) -> None:
     here = os.path.dirname(os.path.abspath(__file__))
 
     def _drift_cell(n: str) -> str:
@@ -366,7 +366,7 @@ def _write_full_table(sf, total, medians, stdevs, mins, prev, drift, speed_facto
     with open(os.path.join(here, "BENCH_LOCAL.md"), "w") as fh:
         fh.write(
             f"# Local bench — last run\n\n"
-            f"sf={sf}, runs={max(3, RUNS)}, "
+            f"sf={sf}, cpus={cpus}, runs={max(3, RUNS)}, "
             f"headline_total_sec={total}\n\n"
             f"(Written by bench.py on every run; medians are the "
             f"headline numbers, stdev/min give the noise floor, and "
@@ -384,8 +384,9 @@ def _write_full_table(sf, total, medians, stdevs, mins, prev, drift, speed_facto
         )
     with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as fh:
         json.dump(
-            {"sf": sf, "total": total, "medians": medians,
-             "stdevs": stdevs, "mins": mins},
+            {"sf": sf, "cpus": cpus, "total": total, "medians": medians,
+             "stdevs": stdevs, "mins": mins,
+             "speed_factor": speed_factor, "drift": drift},
             fh,
             indent=1,
         )

@@ -502,8 +502,8 @@ def label_propagation(
     (node, label) after ``rounds``.
 
     Scale: each round is one edge-to-label equi-join, a (node, label)
-    partial-agg count, and a per-node top-1 taken as a struct-MAX
-    aggregate over (cnt, -label) — lexicographic max = count DESC then
+    partial-agg count, and a per-node top-1 taken as a struct-MIN
+    aggregate over (-cnt, label) — lexicographic min = count DESC then
     label ASC, the same deterministic winner as a sorted window but
     with map-side partial aggregation and no per-partition sort.
 

@@ -360,9 +360,10 @@ GROUP BY 1 ORDER BY size DESC, community LIMIT 10
     "community baseline and, like pagerank here, a representative of "
     "the iterate-join-reaggregate family: each round is ONE "
     "edge-to-label equi-join + a (node, label) partial-agg count + a "
-    "per-node top-1 via struct-MAX over (cnt, -label) — map-side "
-    "partial agg, no per-partition sort — with the label state "
-    "localCheckpoint-ed per round so lineage stays flat. Degree is "
+    "per-node top-1 via struct-MIN over (-cnt, label) — map-side "
+    "partial agg, no per-partition sort. The label state is read once "
+    "per round, so lineage grows linearly and the whole loop is one "
+    "lazy plan, checkpointed only at the end. Degree is "
     "capped at k=8 by the mutual-kNN construction, so per-round "
     "shuffle volume is O(k x nodes) at any corpus size; synchronous "
     "updates + the deterministic tiebreak make all 4 rounds "

@@ -4,6 +4,13 @@ from __future__ import annotations
 
 import importlib.util
 import sys
+from pathlib import Path
+
+import pytest
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def load_entry_module():
@@ -91,26 +98,47 @@ def test_no_rdd_api_in_package():
 
 
 def test_bench_stdout_line_fits_driver_tail():
-    """The driver records only the LAST 2000 bytes of bench stdout;
-    the r5 35-query line overflowed it and lost the headline total
-    (VERDICT r5). Guard the worst-case compact-line size for the
-    CURRENT headline list — if this fails, bench.py's top-30 fallback
-    still keeps the line parseable, but the full list should normally
-    fit."""
+    """Only the LAST 2000 bytes of bench stdout are recorded, and a line
+    that overflowed them once lost the headline total. The real line,
+    at worst-case widths, must carry every HEADLINE median and fit in
+    1900 bytes."""
     import json
 
     import bench
 
-    worst = {
-        "metric": "headline_total_sec",
-        "value": 9999.999,
-        "unit": "sec",
-        "queries": {n: 99.999 for n in bench.HEADLINE},
-        "runs": 9,
-        "sf": 0.1,
-    }
-    line = json.dumps(worst, separators=(",", ":"))
-    assert len(line) <= 1900, (
-        f"compact bench line would be {len(line)} bytes; trim HEADLINE "
-        "or rely on the top-30 fallback"
+    line = bench.stdout_line(
+        total=57999.942,
+        medians={n: 999.999 for n in bench.HEADLINE},
+        sf=0.1,
+        speed_factor=99.999,
+        cpus=128,
     )
+    assert list(json.loads(line)["queries"]) == bench.HEADLINE
+    assert len(line) <= 1900, f"bench stdout line is {len(line)} bytes"
+
+
+def test_timed_runs_releases_persisted_blocks(spark):
+    import bench
+
+    def run():
+        spark.range(10).localCheckpoint(eager=True)
+
+    samples = bench.timed_runs(run, 3)
+    assert len(samples) == 3 and all(s > 0 for s in samples)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "path", sorted((ROOT / "tools").glob("*.py")), ids=lambda p: p.stem
+)
+def test_tool_imports_without_starting_spark(path, monkeypatch):
+    """Every tool is importable by path (tests and other tools load
+    them) and starts no Spark session until its main() runs."""
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError(f"{path.name} starts Spark on import")
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", no_spark)
+    monkeypatch.setattr(SparkContext, "__init__", no_spark)
+    spec = importlib.util.spec_from_file_location(f"_tool_{path.stem}", path)
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))

@@ -1,12 +1,13 @@
-"""Optimization-round harness (r13/r14): time query subsets under the
-bench.py methodology (1 untimed warmup, then median of RUNS timed
-full plan-build+execute+collect cycles, per-execution unpersist) and
-optionally dump each query's ``explain("formatted")`` to
-``plans/<dir>/<name>_<tag>.txt`` (default r14) so plan claims in OPTIMIZATION_r13.md
-are checkable without running Spark.
+"""Optimization-round harness: time query subsets under the bench.py
+protocol (bench.protocol_session and bench.timed_runs: one untimed
+warmup of each query, then the median of RUNS timed full
+plan-build+execute+collect cycles) and optionally dump each query's
+``explain("formatted")`` to ``plans/<dir>/<name>_<tag>.txt``, so the
+plan claims in an ``OPTIMIZATION_<round>.md`` are checkable without
+running Spark.
 
 Usage:
-    python tools/optbench.py [--plans TAG] [--sf-dir DIR] name ...
+    python tools/optbench.py [--plans TAG] [--plans-dir DIR] [--sf-dir DIR] name ...
     python tools/optbench.py --all            # every headline query
 """
 
@@ -17,13 +18,11 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from hdfs_parquet_importer_spark.queries import registry  # noqa: E402
-from hdfs_parquet_importer_spark.session import build_session  # noqa: E402
 
 
 def formatted_plan(df) -> str:
@@ -51,16 +50,7 @@ def main() -> int:
     if unknown:
         raise SystemExit(f"not in registry: {unknown}")
 
-    spark = build_session(
-        "optbench",
-        shuffle_partitions=32,
-        conf={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": "32g",  # bench.py protocol heap
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = bench.protocol_session("optbench")
     plans_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
@@ -69,18 +59,23 @@ def main() -> int:
     if args.plans:
         os.makedirs(plans_dir, exist_ok=True)
 
+    def warmup(name: str) -> None:
+        # The plan is dumped before its first execution: the same
+        # not-yet-adaptive plan a fresh build shows.
+        df = reg[name].fn(spark, args.sf_dir)
+        if args.plans:
+            with open(os.path.join(plans_dir, f"{name}_{args.plans}.txt"), "w") as fh:
+                fh.write(formatted_plan(df))
+        df.collect()
+
     for name in names:
-        reg[name].fn(spark, args.sf_dir).collect()  # warmup
-        bench._release_persisted(spark)
+        bench.timed_runs(lambda: warmup(name), 1)
 
     out: dict[str, dict[str, float]] = {}
     for name in names:
-        samples: list[float] = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            reg[name].fn(spark, args.sf_dir).collect()
-            samples.append(time.perf_counter() - t0)
-            bench._release_persisted(spark)
+        samples = bench.timed_runs(
+            lambda: reg[name].fn(spark, args.sf_dir).collect(), args.runs
+        )
         out[name] = {
             "median": round(statistics.median(samples), 3),
             "min": round(min(samples), 3),
@@ -91,13 +86,6 @@ def main() -> int:
             f"min={out[name]['min']:8.3f} stdev={out[name]['stdev']:.3f}",
             flush=True,
         )
-        if args.plans:
-            df = reg[name].fn(spark, args.sf_dir)
-            with open(
-                os.path.join(plans_dir, f"{name}_{args.plans}.txt"), "w"
-            ) as fh:
-                fh.write(formatted_plan(df))
-            bench._release_persisted(spark)
 
     print(json.dumps(out, separators=(",", ":")))
     return 0

@@ -1,136 +1,98 @@
-"""Regenerate SCALING.md: headline-query latency across scale factors
-(VERDICT r5 item 6 kept this mechanically in sync with bench.py's
-HEADLINE; VERDICT r6 item 5 adds a fourth decade, sf0.5, built by
-tools/make_sf05.py since the driver ships data only up to sf0.1).
+"""Headline-query latency across scale factors: regenerates SCALING.md,
+or times a named subset to re-measure individual cells.
 
-Methodology: per SF, one untimed warmup of each query, then RUNS
+Methodology (bench.py's protocol through bench.protocol_session and
+bench.timed_runs): per SF, one untimed warmup of each query, then RUNS
 timed build+execute+collect cycles; the reported cell is the MIN of
-the runs (r8 — two back-to-back full studies disagreed wildly in
-DIFFERENT cells because shared-host noise bursts last seconds and
-corrupt 2-of-3 samples, flipping the median; a timing can only ever be
-inflated by noise, never deflated below true cost, so min is the
-robust estimator for scale RATIOS; bench.py keeps medians for
-round-over-round comparability and already ships min alongside).
-Usage:  python tools/scaling.py            (5 SFs; writes SCALING.md)
-        SPARK_GRAFT_SKIP_SF05=1 python tools/scaling.py  (skip sf0.5)
-        SPARK_GRAFT_SKIP_SF1=1 python tools/scaling.py   (skip sf1)
-        (set both to run only the 3 shipped decades)
+the runs. Shared-host noise bursts last seconds and corrupt 2-of-3
+samples, flipping a median, and a timing can only ever be inflated by
+noise, never deflated below true cost — so min is the robust estimator
+for scale RATIOS (bench.py keeps medians for round-over-round
+comparability and records min in BENCH_LOCAL). The sf0.5 and sf1 points are
+generated by tools/make_sf05.py, since only sf0.001-sf0.1 ship.
+
+Usage:
+    python tools/scaling.py             every HEADLINE query; writes SCALING.md
+    python tools/scaling.py NAME ...    the named queries; prints their rows only
+    SPARK_GRAFT_SCALING_SFS=0.001,0.01,0.1 python tools/scaling.py ...
+        comma-separated scale factors (default 0.001,0.01,0.1,0.5,1);
+        SCALING.md needs at least two
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402  (repo-root bench.py: HEADLINE + RUNS)
+import bench  # noqa: E402  (repo-root bench.py: HEADLINE, RUNS, protocol)
 from hdfs_parquet_importer_spark.queries import registry  # noqa: E402
-from hdfs_parquet_importer_spark.session import build_session  # noqa: E402
+
+SHIPPED = ("0.001", "0.01", "0.1")
 
 
-def main() -> int:
-    spark = build_session(
-        "scaling",
-        shuffle_partitions=32,
-        conf={
-            "spark.ui.showConsoleProgress": "false",
-            # Spark's 1g default driver heap (which in local mode IS
-            # the executor heap) OOMs on sf0.5 localCheckpoints; the
-            # sandbox has 128 GiB — give the study a real heap.
-            # bench.py intentionally keeps the default so its numbers
-            # stay comparable round over round.
-            # 32g, NOT 64g (r12 second pass): with a 64g max heap the
-            # checkpoint-heavy queries (dedup_span_removal /
-            # dedup_substring_span at sf1: ~2.4M-row gram tables)
-            # measured 45-220 s per run vs 7-15 s at 32g — same code,
-            # same data, fresh sessions, 123 GiB free, no swap. The
-            # degradation reproduces across sessions and is absent at
-            # 32g; mechanism unconfirmed (consistent with G1 heap-
-            # expansion page-faulting under a high allocation rate).
-            # 32g still clears the sf0.5 localCheckpoint OOM that the
-            # r6 bump from the 1g default fixed.
-            "spark.driver.memory": "32g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+def main(names: list[str]) -> int:
+    names = names or list(bench.HEADLINE)
+    full = names == bench.HEADLINE
+    labels = [
+        sf.strip()
+        for sf in os.environ.get(
+            "SPARK_GRAFT_SCALING_SFS", "0.001,0.01,0.1,0.5,1"
+        ).split(",")
+    ]
+    if full and len(labels) < 2:
+        raise SystemExit("SCALING.md needs at least two scale factors")
     reg = registry()
-    missing = [n for n in bench.HEADLINE if n not in reg]
-    if missing:
-        # bench.py fails loudly on a renamed HEADLINE entry; this
-        # script must not quietly publish a smaller study instead.
-        raise SystemExit(f"HEADLINE names not in registry: {missing}")
-    names = list(bench.HEADLINE)
+    # A renamed HEADLINE entry must fail loudly, not quietly publish a
+    # smaller study.
+    unknown = [n for n in names if n not in reg]
+    if unknown:
+        raise SystemExit(f"not in registry: {unknown}")
+    spark = bench.protocol_session("scaling")
     runs = max(3, bench.RUNS)
 
     root = os.environ.get("SPARK_GRAFT_TESTDATA_ROOT", "/root/testdata")
-    sfs: list[tuple[str, str]] = [
-        (sf, os.path.join(root, f"sf{sf}")) for sf in ("0.001", "0.01", "0.1")
-    ]
-    skip05 = os.environ.get("SPARK_GRAFT_SKIP_SF05")
-    skip1 = os.environ.get("SPARK_GRAFT_SKIP_SF1")
-    if not (skip05 and skip1):
-        from tools.make_sf05 import generate
+    sfs: list[tuple[str, str]] = []
+    for sf in labels:
+        if sf in SHIPPED:
+            sfs.append((sf, os.path.join(root, f"sf{sf}")))
+        else:
+            from tools.make_sf05 import generate
 
-        # The two generated points are INDEPENDENT skips (r10 review:
-        # nesting sf1 under the sf0.5 guard silently dropped the
-        # decisive 0.1->1 decade column from the 3-SF mode).
-        if not skip05:
-            sfs.append(("0.5", generate(spark, scale=0.5)))
-        # r10 (VERDICT r9 item 3): a TRUE sf1 decade point — the
-        # 0.1 -> 1 step is a genuine 10x, making the superlinear
-        # screen decisive where the 5x step was ambiguous.
-        if not skip1:
-            sfs.append(("1", generate(spark, scale=1.0)))
-    labels = [s for s, _ in sfs]
+            sfs.append((sf, generate(spark, scale=float(sf))))
 
     med: dict[str, dict[str, float]] = {n: {} for n in names}
     totals: dict[str, float] = {}
     for sf, sf_dir in sfs:
-        # Session-state hygiene between SF blocks (BENCH_NOTES r9):
-        # localCheckpoint-heavy queries leave RDD blocks whose release
-        # waits on Python GC of the DataFrame refs; carried into the
-        # next block they stretch ambient noise bursts into
-        # several-sample windows that min-of-N can't cure (the
-        # tokenize_bpe_encode 21 s sf0.1 cell). Collect + clearCache
-        # starts each block from a clean executor heap.
-        import gc
-
+        # Session-state hygiene between SF blocks: blocks whose release
+        # waits on Python GC of the DataFrame refs, carried into the
+        # next block, stretch ambient noise bursts into several-sample
+        # windows that min-of-N can't cure. Collect + clearCache starts
+        # each block from a clean executor heap.
         gc.collect()
         spark.catalog.clearCache()
+
+        def run(n: str):
+            return lambda: reg[n].fn(spark, sf_dir).collect()
+
         for n in names:
-            reg[n].fn(spark, sf_dir).collect()  # warmup
-            bench._release_persisted(spark)
+            bench.timed_runs(run(n), 1)  # warmup
         # Samples are split into TWO temporally separated passes over
         # the query list (runs-1 consecutive samples, then one more
         # in a later pass). Host noise bursts arrive as a contiguous
         # time window, so back-to-back-only sampling lets one burst
-        # corrupt ALL N samples of a query (the r8 bpe 21 s cell and
-        # the first r9 study's q1 sf0.1 cell — min-of-N can't cure a
-        # burst longer than the N runs); with the second pass minutes
-        # away, a burst must span both passes to corrupt the min.
-        # Samples within a pass stay CONSECUTIVE on purpose: full
+        # corrupt ALL N samples of a query; with the second pass
+        # minutes away, a burst must span both passes to corrupt the
+        # min. Samples within a pass stay CONSECUTIVE on purpose: full
         # round-robin interleaving thrashes the bounded codegen cache
-        # across 44 queries and recompiles every sample (+50%
+        # across the query list and recompiles every sample (+50%
         # measured at sf0.001).
         samples: dict[str, list[float]] = {n: [] for n in names}
-        for pass_runs in (range(runs - 1), range(1)):
+        for pass_runs in (runs - 1, 1):
             for n in names:
-                for _ in pass_runs:
-                    t0 = time.perf_counter()
-                    reg[n].fn(spark, sf_dir).collect()
-                    samples[n].append(time.perf_counter() - t0)
-                    # r13 (same mechanism bench.py fixed this round):
-                    # localCheckpoint blocks pin for the session
-                    # lifetime, so the 58-query warmup loop alone
-                    # pins every checkpointing query's blocks before
-                    # any timing starts, and later cells inherit the
-                    # storage pressure (the r13 pre-fix regeneration
-                    # read mix_quota_by_quality at 4.7 s vs its
-                    # 0.87 s r12 cell at sf1). Unpersist OUTSIDE the
-                    # timer after every execution.
-                    bench._release_persisted(spark)
+                samples[n] += bench.timed_runs(run(n), pass_runs)
         for n in names:
             med[n][sf] = round(min(samples[n]), 3)
         totals[sf] = round(sum(med[n][sf] for n in names), 3)
@@ -147,18 +109,21 @@ def main() -> int:
         # (Already an adjacent pair when sf0.5 was skipped — don't
         # duplicate the column then.)
         steps.append(("0.1", "1"))
-    rows = []
+    cols = ["query"] + [f"sf{sf} s" for sf in labels]
+    cols += [f"x({a}->{b})" for a, b in steps]
+    table = "| " + " | ".join(cols) + " |\n" + "|---" * len(cols) + "|\n"
     for n in names:
-        cells = [str(med[n][sf]) for sf in labels]
+        cells = [n] + [str(med[n][sf]) for sf in labels]
         cells += [str(ratio(n, a, b)) for a, b in steps]
-        rows.append("| " + n + " | " + " | ".join(cells) + " |")
+        table += "| " + " | ".join(cells) + " |\n"
+    print(table, end="")
+    if not full:
+        return 0
+
     last_a, last_b = steps[-1]
     growth = float(last_b) / float(last_a)  # data growth of last step
     worst = sorted(names, key=lambda n: -med[n][last_b] / med[n][last_a])[:5]
     worst_s = ", ".join(f"{n} {ratio(n, last_a, last_b)}x" for n in worst)
-
-    header_sf = " | ".join(f"sf{sf} s" for sf in labels)
-    header_rt = " | ".join(f"x({a}->{b})" for a, b in steps)
     sf05_note = (
         "\nThe sf0.5 and sf1 points are GENERATED from scratch by "
         "tools/make_sf05.py (r9, VERDICT r8 item 6; SF-parameterized "
@@ -190,10 +155,8 @@ def main() -> int:
             f"overheads dominate small SFs; the interesting signal is "
             f"any ratio APPROACHING or EXCEEDING the data growth, "
             f"which would flag a superlinear operator).\n{sf05_note}\n"
-            f"| query | {header_sf} | {header_rt} |\n"
-            f"|---" + "|---" * (len(labels) + len(steps)) + "|\n"
-            + "\n".join(rows)
-            + "\n\n"
+            + table
+            + "\n"
             f"Worst {last_a}->{last_b} ratios (data x{growth:g}): "
             f"{worst_s}.\n"
             f"Totals: "
@@ -205,4 +168,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

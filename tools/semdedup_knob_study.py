@@ -37,12 +37,12 @@ from __future__ import annotations
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from hdfs_parquet_importer_spark.operators.semdedup import (  # noqa: E402
     semdedup,
     semdedup_edges,
@@ -51,7 +51,6 @@ from hdfs_parquet_importer_spark.operators.semdedup import (  # noqa: E402
 from hdfs_parquet_importer_spark.operators.util import (  # noqa: E402
     ensure_parallelism,
 )
-from hdfs_parquet_importer_spark.session import build_session  # noqa: E402
 
 DEFAULT_DIRS = ("/tmp/spark_graft_sf0.5", "/tmp/spark_graft_sf1")
 
@@ -81,20 +80,7 @@ def _replace_section(path: str, section: str) -> None:
 
 def main() -> int:
     sf_dirs = sys.argv[1:] or list(DEFAULT_DIRS)
-    spark = build_session(
-        "semdedup-knob",
-        shuffle_partitions=32,
-        conf={
-            "spark.ui.showConsoleProgress": "false",
-            # 32g, not 64g — the r12 second-pass protocol finding
-            # (tools/scaling.py, SCALING.md string-key addendum): a
-            # 64g max heap degraded checkpoint-heavy stages 5-25x on
-            # this host; 32g still clears the quadratic edge stage's
-            # localCheckpoint at sf1.
-            "spark.driver.memory": "32g",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.protocol_session("semdedup-knob")
 
     # (label, n, bits, pairs, edges, edge_recall, rm_recall, min_s, out)
     rows = []
@@ -119,20 +105,14 @@ def main() -> int:
                 )
                 .collect()[0]["p"]
             )
-            # One edge materialization serves BOTH the recall count
-            # and the CC-stage warmup (r11 ADVICE: the old separate
-            # semdedup_edges().count() + semdedup().count() pair ran
-            # the tool's most expensive stage twice per point); the
-            # timed samples below still run the FULL pipeline — that
-            # is the cost the scaling table prices.
+            # One edge materialization serves the recall count, the
+            # CC-stage warmup and the output (the same rows the full
+            # pipeline yields); the timed samples run the FULL pipeline,
+            # the cost the scaling table prices.
             edges_df = semdedup_edges(emb, bits=bits)
             n_edges = edges_df.count()
-            semdedup(emb, bits=bits, precomputed_edges=edges_df).count()
-            samples = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                out = semdedup(emb, bits=bits).collect()
-                samples.append(time.perf_counter() - t0)
+            out = semdedup(emb, bits=bits, precomputed_edges=edges_df).collect()
+            samples = bench.timed_runs(lambda: semdedup(emb, bits=bits).collect(), 3)
             removed = {r["vec_id"] for r in out if r["is_removed"]}
             if bits == 3:
                 base_edges, base_removed = n_edges, removed

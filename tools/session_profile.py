@@ -31,13 +31,11 @@ import argparse
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from hdfs_parquet_importer_spark.queries import registry  # noqa: E402
-from hdfs_parquet_importer_spark.session import build_session  # noqa: E402
 
 PROBES = [
     "graph_label_propagation",
@@ -99,16 +97,12 @@ def _probe(spark, sf_dir: str, names: list[str], runs: int) -> dict:
     reg = registry()
     res: dict[str, dict] = {}
     for name in names:
-        # one untimed warmup per probe (bench methodology)
-        reg[name].fn(spark, sf_dir).collect()
-        bench._release_persisted(spark)
-        before = _counters(spark)
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
+        def run():
             reg[name].fn(spark, sf_dir).collect()
-            samples.append(time.perf_counter() - t0)
-            bench._release_persisted(spark)
+
+        bench.timed_runs(run, 1)  # warmup, outside the counter bracket
+        before = _counters(spark)
+        samples = bench.timed_runs(run, runs)
         after = _counters(spark)
         res[name] = {
             "median": round(statistics.median(samples), 3),
@@ -138,15 +132,9 @@ def main() -> int:
     ap.add_argument("--skip-age", action="store_true")
     args = ap.parse_args()
 
-    conf = {
-        "spark.ui.showConsoleProgress": "false",
-        "spark.driver.memory": "32g",
-    }
-    for kv in args.conf:
-        k, v = kv.split("=", 1)
-        conf[k] = v
-    spark = build_session("session_profile", shuffle_partitions=32, conf=conf)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.protocol_session(
+        "session_profile", dict(kv.split("=", 1) for kv in args.conf)
+    )
 
     print("== FRESH probe ==", flush=True)
     fresh = _probe(spark, args.sf_dir, args.probes, args.runs)
@@ -155,11 +143,12 @@ def main() -> int:
     if not args.skip_age:
         print("== aging: one pass over every headline query ==", flush=True)
         reg = registry()
-        t0 = time.perf_counter()
-        for name in [n for n in bench.HEADLINE if n in reg]:
-            reg[name].fn(spark, args.sf_dir).collect()
-            bench._release_persisted(spark)
-        print(f"   aged in {time.perf_counter()-t0:.1f}s", flush=True)
+        aging = sum(
+            sum(bench.timed_runs(lambda: reg[n].fn(spark, args.sf_dir).collect(), 1))
+            for n in bench.HEADLINE
+            if n in reg
+        )
+        print(f"   aged in {aging:.1f}s", flush=True)
         print("== AGED probe ==", flush=True)
         aged = _probe(spark, args.sf_dir, args.probes, args.runs)
 
