@@ -348,6 +348,38 @@ def test_jpeg_truncated_entropy_raises():
         M.decode_jpeg_gray(data[: len(data) // 2])
 
 
+def _entropy_start(data: bytes) -> int:
+    """Offset of the first byte after the (first) SOS segment."""
+    sos = data.find(b"\xff\xda")
+    return sos + 2 + int.from_bytes(data[sos + 2: sos + 4], "big")
+
+
+def test_jpeg_entropy_decoder_error_messages():
+    """Each way a scan's entropy data can be malformed raises its own
+    ValueError message."""
+    data = M.encode_jpeg_gray(_gradient(32, 32), 32, 32)
+    start = _entropy_start(data)
+    cut = start + 5
+    assert 0xFF not in data[start:cut]
+    # Data ends mid-scan with no marker.
+    with pytest.raises(ValueError, match="truncated"):
+        M.decode_jpeg_gray(data[:cut])
+    # A marker (here EOI) arrives before the scan is complete.
+    with pytest.raises(ValueError, match="ended at marker early"):
+        M.decode_jpeg_gray(data[:cut] + b"\xff\xd9")
+    # Sixteen 1-bits (stuffed FF 00 pairs) match no Annex K DC code.
+    with pytest.raises(ValueError, match="invalid JPEG Huffman code"):
+        M.decode_jpeg_gray(data[:start] + b"\xff\x00" * 4 + b"\xff\xd9")
+    rst = M.encode_jpeg_gray(_gradient(32, 32), 32, 32, restart_interval=1)
+    i = rst.find(b"\xff\xd0", _entropy_start(rst))
+    # The first restart marker must be RST0 ...
+    with pytest.raises(ValueError, match="expected RST0, got marker 0xd2"):
+        M.decode_jpeg_gray(rst[:i] + b"\xff\xd2" + rst[i + 2:])
+    # ... and must be there at all.
+    with pytest.raises(ValueError, match="expected JPEG restart marker"):
+        M.decode_jpeg_gray(rst[:i] + rst[i + 2:])
+
+
 def test_decode_media_dispatches_jpeg(spark):
     px = _gradient(16, 16)
     jpg = M.encode_jpeg_gray(px, 16, 16, quality=95)
