@@ -11,7 +11,9 @@ payloads in their own parquet column, never inside a struct with hot
 metadata), and decode stages should run AFTER filters so only
 surviving rows are decoded. Every stage is one per-row function run by
 :func:`_map_rows`, so fused stages compose row functions instead of
-copying them.
+copying them, except the JPEG roundtrip family: it runs the codec once
+per batch (:func:`_roundtrip_batch` via :func:`_map_batches`), every
+numpy step over a stack of same-shape images.
 
 Codecs are REAL, stdlib + numpy: PNG (grayscale 8-bit: chunk CRCs,
 zlib, all five scanline filters), JPEG (baseline and progressive DCT,
@@ -111,26 +113,33 @@ AVI_FRAMES_SCHEMA = _struct(
 )
 
 
-def _map_rows(df: DataFrame, schema: T.StructType, row_fn, *cols: str) -> DataFrame:
+def _map_batches(
+    df: DataFrame, schema: T.StructType, batch_fn, *cols: str
+) -> DataFrame:
     """One Arrow-batched ``mapInPandas`` stage over ``df``'s ``cols``:
-    ``row_fn(*values)`` returns the list of output tuples (in
-    ``schema`` field order) for one input row, so a stage may drop,
-    keep or multiply rows without leaving its task. Only ``cols``
-    cross into Python."""
+    ``batch_fn(*columns)`` gets one batch's columns (pandas Series)
+    and returns the list of output tuples (in ``schema`` field order),
+    so a stage may drop, keep or multiply rows without leaving its
+    task. Only ``cols`` cross into Python."""
     names = schema.fieldNames()
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         for pdf in batches:
-            rows = [
-                out
-                for vals in zip(*(pdf[c] for c in cols))
-                for out in row_fn(*vals)
-            ]
-            yield pd.DataFrame(rows, columns=names)
+            yield pd.DataFrame(batch_fn(*(pdf[c] for c in cols)), columns=names)
 
     return df.select(*cols).mapInPandas(run, schema)
+
+
+def _map_rows(df: DataFrame, schema: T.StructType, row_fn, *cols: str) -> DataFrame:
+    """:func:`_map_batches` with a per-row function: ``row_fn(*values)``
+    returns the list of output tuples for one input row."""
+
+    def batch(*columns) -> list[tuple]:
+        return [out for vals in zip(*columns) for out in row_fn(*vals)]
+
+    return _map_batches(df, schema, batch, *cols)
 
 
 # --------------------------------------------------------------------------
@@ -262,6 +271,10 @@ def decode_png_gray(data: bytes) -> tuple[int, int, bytes]:
 # reads real-world baseline and progressive files, not just this
 # encoder's output. JPEG is lossy, so unlike the PNG path the pixel
 # oracle is an error-bound gate, not byte equality.
+#
+# Every numpy step takes a leading image axis, and the baseline entropy
+# coder codes N same-shape images at once: a one-image encode or decode
+# is the N = 1 case of the code the batch stage runs.
 # --------------------------------------------------------------------------
 _JPEG_STD_LUMA_QT = [
     16, 11, 10, 16, 24, 40, 51, 61,
@@ -389,10 +402,18 @@ def _canonical(bits) -> Iterator[tuple[int, int]]:
 
 
 @_lru_cache(maxsize=64)
-def _huff_lookup(bits: bytes, vals: bytes) -> dict[tuple[int, int], int]:
-    """(length, code) -> symbol for one DHT table, built once per
-    distinct table per process; callers never mutate it."""
-    return dict(zip(_canonical(bits), vals))
+def _huff_lookup(bits: bytes, vals: bytes) -> tuple[int, ...]:
+    """65,536-entry lookahead table of one DHT table, built once per
+    distinct table per process: entry ``w`` (the next 16 bits of the
+    stream) is ``(symbol << 5) | code length`` of the code that
+    prefixes ``w``, 0 when none does."""
+    tab = [0] * 65536
+    for (ln, code), v in zip(_canonical(bits), vals):
+        lo, span = code << (16 - ln), 1 << (16 - ln)
+        # An over-full BITS list runs codes past the code space.
+        if lo < 65536:
+            tab[lo: lo + span] = [(v << 5) | ln] * span
+    return tuple(tab)
 
 
 def _canonical_codes(bits, vals) -> dict[int, tuple[int, int]]:
@@ -400,12 +421,15 @@ def _canonical_codes(bits, vals) -> dict[int, tuple[int, int]]:
     return {v: (code, ln) for (ln, code), v in zip(_canonical(bits), vals)}
 
 
-@_lru_cache(maxsize=None)
-def _std_codes(t: int) -> tuple[dict, dict]:
-    """(DC, AC) canonical codes of standard table set ``t``, built once
-    per process: the codec runs per row inside mapInPandas."""
-    _, dc_bits, dc_vals, ac_bits, ac_vals = _TABLES[t]
-    return _canonical_codes(dc_bits, dc_vals), _canonical_codes(ac_bits, ac_vals)
+def _code_arrays(bits, vals):
+    """int64 (code, length) arrays indexed by symbol for a canonical
+    Huffman (BITS, HUFFVAL); length 0 marks a symbol the table lacks."""
+    import numpy as np
+
+    code, length = np.zeros(256, np.int64), np.zeros(256, np.int64)
+    for v, (c, ln) in _canonical_codes(bits, vals).items():
+        code[v], length[v] = c, ln
+    return code, length
 
 
 @_lru_cache(maxsize=None)
@@ -436,36 +460,43 @@ def _dct_mat():
 def _raw_gray(px) -> bytes:
     """Normalize a pixel cell (binary column bytes OR int array column)
     to raw row-major bytes — the one coercion every encode stage uses,
-    so their semantics cannot drift apart."""
+    so their semantics cannot drift apart. Ints wrap modulo 256."""
+    import numpy as np
+
     if isinstance(px, (bytes, bytearray)):
         return bytes(px)
-    return bytes(bytearray(int(v) & 0xFF for v in px))
+    return np.asarray(px, dtype=np.int64).astype(np.uint8).tobytes()
 
 
 class _BitWriter:
-    """MSB-first bit accumulator with JPEG 0xFF byte stuffing."""
+    """MSB-first bit accumulator for the progressive scans: a big int
+    that moves out in whole bytes every few hundred bits; JPEG 0xFF
+    byte stuffing happens once, in :meth:`flush`."""
 
     def __init__(self) -> None:
-        self.out = bytearray()
+        self._out = bytearray()
         self._acc = 0
         self._nbits = 0
 
     def write(self, code: int, length: int) -> None:
         self._acc = (self._acc << length) | (code & ((1 << length) - 1))
         self._nbits += length
-        while self._nbits >= 8:
-            b = (self._acc >> (self._nbits - 8)) & 0xFF
-            self.out.append(b)
-            if b == 0xFF:
-                self.out.append(0x00)
-            self._nbits -= 8
-        self._acc &= (1 << self._nbits) - 1
+        if self._nbits >= 256:
+            self._drain()
+
+    def _drain(self) -> None:
+        keep = self._nbits & 7
+        self._out += (self._acc >> keep).to_bytes(self._nbits >> 3, "big")
+        self._acc &= (1 << keep) - 1
+        self._nbits = keep
 
     def flush(self) -> bytes:
-        """Pad the last byte with 1s and return everything written."""
-        if self._nbits:
-            self.write(0x7F, 8 - self._nbits)
-        return bytes(self.out)
+        """Pad the last byte with 1s and return everything written,
+        0xFF-stuffed."""
+        pad = -self._nbits % 8
+        self.write((1 << pad) - 1, pad)
+        self._drain()
+        return bytes(self._out).replace(b"\xff", b"\xff\x00")
 
 
 def _mag_bits(v: int) -> tuple[int, int]:
@@ -480,41 +511,62 @@ def _cdiv(a: int, b: int) -> int:
     return -(-a // b)
 
 
-def _pad_plane(plane, width: int, height: int, mult: int):
-    """Edge-replicate a (height, width) float plane out to
-    ``mult``-multiple dimensions (whole MCUs)."""
+def _check_size(n: int, width: int, height: int, nch: int) -> None:
+    """An encoder input of ``n`` bytes must hold a non-empty
+    ``width`` x ``height`` image of ``nch`` channels."""
+    if n != width * height * nch:
+        what = "pixels" if nch == 1 else "RGB bytes"
+        raise ValueError(f"expected {width * height * nch} {what}, got {n}")
+    if width == 0 or height == 0:
+        raise ValueError("JPEG cannot encode an empty image")
+
+
+def _mcus(width: int, height: int, layout: str) -> tuple[int, int]:
+    """(MCU rows, MCU columns) of a ``width`` x ``height`` image."""
+    mult = 8 * _LAYOUTS[layout][0][1]
+    return _cdiv(height, mult), _cdiv(width, mult)
+
+
+def _padded(px, layout: str):
+    """Edge-replicate a uint8 (N, height, width, channels) image stack
+    out to whole MCUs of ``layout`` ('gray', '444' or '420')."""
     import numpy as np
 
-    ph, pw = _cdiv(height, mult) * mult, _cdiv(width, mult) * mult
-    padded = np.empty((ph, pw), dtype=np.float64)
-    padded[:height, :width] = plane
-    padded[height:, :width] = padded[height - 1: height, :width]
-    padded[:, width:] = padded[:, width - 1: width]
-    return padded
+    n, height, width, nch = px.shape
+    rows, cols = _mcus(width, height, layout)
+    mult = 8 * _LAYOUTS[layout][0][1]  # MCU side in pixels
+    out = np.empty((n, rows * mult, cols * mult, nch), dtype=np.uint8)
+    out[:, :height, :width] = px
+    out[:, height:, :width] = out[:, height - 1: height, :width]
+    out[:, :, width:] = out[:, :, width - 1: width]
+    return out
 
 
-def _ycbcr_planes(pixels: bytes, width: int, height: int, layout: str):
-    """Check an encoder's input and return ``(components, planes)`` for
-    ``layout`` ('gray', '444' or '420'): gray pixels are the Y plane
-    as is, RGB converts to BT.601 full-range YCbCr. Every plane is
-    edge-padded to whole MCUs; subsampled chroma is then 2x2
-    box-averaged, so the padded region averages to the edge value —
-    exactly what the decoder replicates back."""
+def _image(pixels: bytes, width: int, height: int, layout: str):
+    """One encoder input, checked and :func:`_padded`, as a uint8
+    (1, H, W, channels) stack: 1 channel for 'gray', RGB for '444' /
+    '420'."""
     import numpy as np
 
     nch = 1 if layout == "gray" else 3
-    if len(pixels) != width * height * nch:
-        what = "pixels" if nch == 1 else "RGB bytes"
-        raise ValueError(f"expected {width * height * nch} {what}, got {len(pixels)}")
-    if width == 0 or height == 0:
-        raise ValueError("JPEG cannot encode an empty image")
-    px = (
-        np.frombuffer(pixels, dtype=np.uint8)
-        .reshape(height, width, nch)
-        .astype(np.float64)
-    )
+    _check_size(len(pixels), width, height, nch)
+    px = np.frombuffer(pixels, dtype=np.uint8).reshape(1, height, width, nch)
+    return _padded(px, layout)
+
+
+def _ycbcr_planes(px, layout: str):
+    """``(components, planes)`` of a :func:`_padded` uint8 (N, H, W,
+    channels) image stack for ``layout``: gray pixels are the Y plane
+    as is, RGB converts to BT.601 full-range YCbCr, each (N, H, W).
+    Subsampled chroma is then 2x2 box-averaged, so the padded region
+    averages to the edge value — exactly what the decoder replicates
+    back. Conversion is per pixel, so converting the padded stack
+    equals padding the converted planes, float for float."""
+    import numpy as np
+
+    px = px.astype(np.float64)
     planes = [px[..., 0]]
-    if nch == 3:
+    if px.shape[3] == 3:
         r, g, b = px[..., 0], px[..., 1], px[..., 2]
         planes = [
             0.299 * r + 0.587 * g + 0.114 * b,
@@ -525,66 +577,41 @@ def _ycbcr_planes(pixels: bytes, width: int, height: int, layout: str):
     hmax = comps[0][1]
     out = []
     for (_, h, _, _), p in zip(comps, planes):
-        p = _pad_plane(p, width, height, 8 * hmax)
         if h < hmax:
-            p = (p[0::2, 0::2] + p[1::2, 0::2] + p[0::2, 1::2] + p[1::2, 1::2]) / 4.0
+            p = (
+                p[..., 0::2, 0::2] + p[..., 1::2, 0::2]
+                + p[..., 0::2, 1::2] + p[..., 1::2, 1::2]
+            ) / 4.0
         out.append(p)
     return comps, out
 
 
 def _zigzag_coefs(plane, qt: tuple[int, ...]):
-    """FDCT + quantize every level-shifted 8x8 block of a padded plane
-    -> int64 (block rows, block cols, 64) in zigzag order."""
+    """FDCT + quantize every level-shifted 8x8 block of padded
+    (..., H, W) planes -> int64 (..., block rows, block cols, 64) in
+    zigzag order."""
     import numpy as np
 
     qmat = np.array(qt, dtype=np.float64).reshape(8, 8)
     c = _dct_mat()
-    rows, cols = plane.shape[0] // 8, plane.shape[1] // 8
+    *lead, hgt, wid = plane.shape
+    rows, cols = hgt // 8, wid // 8
     # All blocks at once: a stacked matmul runs the same 8x8 product
     # per block as a per-block loop, bit for bit (test-pinned).
-    blocks = plane.reshape(rows, 8, cols, 8).swapaxes(1, 2)
+    blocks = plane.reshape(*lead, rows, 8, cols, 8).swapaxes(-3, -2)
     blocks = np.ascontiguousarray(blocks) - 128.0
     q = np.round((c @ blocks @ c.T) / qmat).astype(np.int64)
-    return q.reshape(rows, cols, 64)[..., _ZIGZAG]
+    return q.reshape(*lead, rows, cols, 64)[..., _ZIGZAG]
 
 
-def _quantized(pixels: bytes, width: int, height: int, quality: int, layout: str):
-    """The front half every encoder shares: ``(components, scaled quant
-    tables by table set, per-component zigzag coefficients)``."""
-    comps, planes = _ycbcr_planes(pixels, width, height, layout)
+def _quantized(px, quality: int, layout: str):
+    """The front half every encoder shares, over a :func:`_padded`
+    uint8 (N, H, W, channels) stack: ``(components, scaled quant
+    tables by table set, per-component int64 (N, rows, cols, 64)
+    zigzag coefficients)``."""
+    comps, planes = _ycbcr_planes(px, layout)
     qts = [_scaled_qt(quality, t) for t in range(comps[-1][3] + 1)]
     return comps, qts, [_zigzag_coefs(p, qts[c[3]]) for p, c in zip(planes, comps)]
-
-
-def _write_dc(bw: _BitWriter, v: int, prev: int, dc_codes) -> int:
-    """Huffman-code DC value ``v`` as a difference from ``prev``;
-    returns ``v``, the next predictor."""
-    size, mag = _mag_bits(v - prev)
-    code, length = dc_codes[size]
-    bw.write(code, length)
-    if size:
-        bw.write(mag, size)
-    return v
-
-
-def _write_ac(bw: _BitWriter, zz, ac_codes) -> None:
-    """Huffman-code AC coefficients 1..63 of a zigzag block: (run, size)
-    pairs, ZRL for runs past 15, EOB when the block ends in zeros."""
-    run = 0
-    for k in range(1, 64):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            bw.write(*ac_codes[0xF0])
-            run -= 16
-        size, mag = _mag_bits(v)
-        bw.write(*ac_codes[(run << 4) | size])
-        bw.write(mag, size)
-        run = 0
-    if run:
-        bw.write(*ac_codes[0x00])
 
 
 def _restart_split(units: list, restart_interval: int, write) -> bytes:
@@ -594,32 +621,165 @@ def _restart_split(units: list, restart_interval: int, write) -> bytes:
     with RST0-7 markers, cycling, never after the last run."""
     if not restart_interval:
         return write(units)
-    out = bytearray()
-    for j, i in enumerate(range(0, len(units), restart_interval)):
-        if j:
-            out += bytes([0xFF, 0xD0 + (j - 1) % 8])
-        out += write(units[i: i + restart_interval])
-    return bytes(out)
+    return _join_intervals(
+        [
+            write(units[i: i + restart_interval])
+            for i in range(0, len(units), restart_interval)
+        ]
+    )
 
 
-def _huffman_scan(mcus: list, codes: list, restart_interval: int) -> bytes:
-    """Entropy-code MCUs, each a list of ``(component, zigzag block)``;
-    ``codes[component]`` is its (DC, AC) code pair, and a None half is
-    left out (the progressive DC-only and AC-only scans)."""
+def _join_intervals(parts: list) -> bytes:
+    """One scan's restart intervals joined by RST0-7, cycling."""
+    out = [parts[0]]
+    for j in range(1, len(parts)):
+        out += (bytes([0xFF, 0xD0 + (j - 1) % 8]), parts[j])
+    return b"".join(out)
 
-    def write(run) -> bytes:
-        bw = _BitWriter()
-        prev = [0] * len(codes)
-        for mcu in run:
-            for ci, zz in mcu:
-                dc_codes, ac_codes = codes[ci]
-                if dc_codes is not None:
-                    prev[ci] = _write_dc(bw, int(zz[0]), prev[ci], dc_codes)
-                if ac_codes is not None:
-                    _write_ac(bw, zz, ac_codes)
-        return bw.flush()
 
-    return _restart_split(mcus, restart_interval, write)
+def _magnitudes(v):
+    """(size, appended bits) of an int64 array of DC diffs / AC
+    coefficients, elementwise — :func:`_mag_bits` vectorized."""
+    import numpy as np
+
+    size = np.frexp(np.abs(v))[1].astype(np.int64)  # = bit_length(|v|)
+    return size, np.where(v < 0, v + (1 << size) - 1, v)
+
+
+@_lru_cache(maxsize=256)
+def _scan_plan(comps, mcus_y: int, mcus_x: int, restart_interval: int) -> tuple:
+    """What :func:`_entropy_code` needs to know of a scan over ``comps``
+    on an ``mcus_y`` x ``mcus_x`` MCU grid (a single-component scan is
+    the 1x1-sampled case, one block per MCU), built once per shape per
+    process -> ``(order, comp, seg, prev, tail, dc, ac)``:
+
+    - ``order``: the scan's blocks — per MCU in raster order, each
+      component's h x v blocks in raster order, components in SOF
+      order (T.81 A.2.3) — as indexes into the components' block grids
+      flattened and concatenated; ``comp`` the component of each;
+    - ``seg``: each block's restart interval; ``prev``: the block
+      holding its DC predictor (the last one of its component in its
+      interval; -1 for none, F.2.1.3.1); ``tail``: each interval's last
+      block;
+    - ``dc`` / ``ac``: the (code, length) :func:`_code_arrays` of each
+      component's table set, stacked: indexed [component, symbol]."""
+    import numpy as np
+
+    order, comp, base = [], [], 0
+    for ci, (_, h, v, _) in enumerate(comps):
+        grid = np.arange(mcus_y * v * mcus_x * h).reshape(mcus_y, v, mcus_x, h)
+        order.append(grid.transpose(0, 2, 1, 3).reshape(mcus_y * mcus_x, v * h) + base)
+        comp.append(np.full((mcus_y * mcus_x, v * h), ci))
+        base += grid.size
+    order = np.concatenate(order, axis=1).ravel()
+    comp = np.concatenate(comp, axis=1).ravel()
+    unit = np.arange(order.size) // (order.size // (mcus_y * mcus_x))
+    seg = unit // restart_interval if restart_interval else np.zeros_like(unit)
+    prev = np.full(order.size, -1)
+    for ci in range(len(comps)):
+        idx = np.flatnonzero(comp == ci)
+        p = np.concatenate([[-1], idx[:-1]])
+        p[seg[p] != seg[idx]] = -1
+        prev[idx] = p
+    tail = np.flatnonzero(np.append(seg[1:] != seg[:-1], True))
+
+    def stacked(i: int) -> tuple:  # (BITS, HUFFVAL) at _TABLES[t][i: i + 2]
+        arrays = [_code_arrays(*_TABLES[t][i: i + 2]) for *_, t in comps]
+        return tuple(np.stack(x) for x in zip(*arrays))
+
+    return order, comp, seg, prev, tail, stacked(1), stacked(3)
+
+
+def _pack_bits(vals, lens) -> bytes:
+    """MSB-first bytes of the bit strings (``vals[i]``, ``lens[i]``
+    bits) in order; their total length is a whole number of bytes.
+    Runs in chunks of events, so a large image needs little memory."""
+    import numpy as np
+
+    ends = np.cumsum(lens)
+    bits = np.empty(int(ends[-1]), dtype=np.uint8)
+    step = 1 << 16
+    for a in range(0, len(lens), step):
+        v, ln, e = vals[a: a + step], lens[a: a + step], ends[a: a + step]
+        lo, hi = int(e[0] - ln[0]), int(e[-1])
+        # Bit j of the chunk belongs to event i = repeat index and is
+        # its bit (end_i - 1 - j) counted from the least significant.
+        shift = np.repeat(e - 1, ln) - np.arange(lo, hi)
+        bits[lo:hi] = (np.repeat(v, ln) >> shift) & 1
+    return np.packbits(bits).tobytes()
+
+
+def _entropy_code(blocks, plan, dc: bool, ac: bool) -> list:
+    """The Huffman coder of every sequential-style scan, for the same
+    scan of N images at once -> each image's entropy bytes.
+
+    ``blocks`` are int64 (N, B, 64) zigzag blocks in the scan order of
+    ``plan`` (:func:`_scan_plan`); only position 0 is read without
+    ``ac``. ``dc`` / ``ac`` say which halves the scan codes (both, or
+    the progressive DC-only / AC-only scans).
+
+    Every code becomes an event (bits, length) keyed by (image,
+    block, position): DC differences from per-component predictors;
+    AC (run, size) symbols of the nonzero coefficients, each after one
+    ZRL per 16 zeros of its run; EOB after a block's last nonzero
+    unless that is position 63; and a pad of 1-bits closing each
+    restart interval on a byte. The sorted events pack in one pass,
+    then each interval is 0xFF-stuffed and joined to the next with
+    RST0-7."""
+    import numpy as np
+
+    _, comp, seg, prev, tail, dc_tab, ac_tab = plan
+    n, nb = blocks.shape[:2]
+    nseg = int(seg[-1]) + 1
+    keys, vals, lens = [], [], []
+
+    def emit(img, blk, pos, tab, sym, size=0, mag=0) -> None:
+        code, length = tab
+        keys.append((img * nb + blk) * 130 + pos)
+        vals.append((code[comp[blk], sym] << size) | mag)
+        lens.append(length[comp[blk], sym] + size)
+
+    if dc:
+        d = blocks[:, :, 0]
+        size, mag = _magnitudes(d - np.where(prev >= 0, d[:, prev], 0))
+        img = np.repeat(np.arange(n), nb)
+        blk = np.tile(np.arange(nb), n)
+        emit(img, blk, 0, dc_tab, size.ravel(), size.ravel(), mag.ravel())
+    if ac:
+        i, b, k = np.nonzero(blocks[:, :, 1:])
+        k += 1
+        v = blocks[i, b, k]
+        first = np.ones(k.size, dtype=bool)  # first nonzero of its block
+        first[1:] = (i[1:] != i[:-1]) | (b[1:] != b[:-1])
+        run = k - 1 - np.where(first, 0, np.roll(k, 1))
+        size, mag = _magnitudes(v)
+        emit(i, b, 2 * k, ac_tab, ((run & 15) << 4) | size, size, mag)
+        z = np.repeat(np.arange(k.size), run >> 4)
+        emit(i[z], b[z], 2 * k[z] - 1, ac_tab, 0xF0)
+        end = np.ones(k.size, dtype=bool)  # last nonzero of its block
+        end[:-1] = first[1:]
+        last = np.zeros((n, nb), dtype=np.int64)
+        last[i[end], b[end]] = k[end]
+        i, b = np.nonzero(last < 63)
+        emit(i, b, 128, ac_tab, 0x00)
+    keys, vals, lens = (np.concatenate(x) for x in (keys, vals, lens))
+    block = keys // 130
+    bits = np.bincount(
+        block // nb * nseg + seg[block % nb], weights=lens, minlength=n * nseg
+    ).astype(np.int64)
+    pad = -bits % 8
+    pad_keys = (np.arange(n)[:, None] * nb + tail).ravel() * 130 + 129
+    order = np.argsort(np.concatenate([keys, pad_keys]), kind="stable")
+    stream = _pack_bits(
+        np.concatenate([vals, (1 << pad) - 1])[order],
+        np.concatenate([lens, pad])[order],
+    )
+    cuts = (np.cumsum(bits + pad) // 8).tolist()
+    parts = [
+        stream[a:z].replace(b"\xff", b"\xff\x00")
+        for a, z in zip([0] + cuts, cuts)
+    ]
+    return [_join_intervals(parts[j: j + nseg]) for j in range(0, n * nseg, nseg)]
 
 
 def _jpeg_seg(marker: int, payload: bytes) -> bytes:
@@ -637,12 +797,12 @@ def _sos(comps, ss: int, se: int, ahal: int = 0) -> bytes:
 
 def _jfif(
     sof: int, width: int, height: int, comps, qts, restart_interval: int,
-    scans: bytes, ac0=None,
+    ac0=None,
 ) -> bytes:
-    """A JFIF file from its component list: SOI, APP0, a DQT per table
-    set (zigzag order), the SOF, a DC and an AC DHT per table set
-    (``ac0`` replaces table set 0's AC (BITS, HUFFVAL)), DRI when
-    restarts are on, then ``scans`` and EOI."""
+    """A JFIF file's head from its component list: SOI, APP0, a DQT
+    per table set (zigzag order), the SOF, a DC and an AC DHT per
+    table set (``ac0`` replaces table set 0's AC (BITS, HUFFVAL)), and
+    DRI when restarts are on. The scans and EOI follow it."""
     sof_body = bytes(x for cid, h, v, t in comps for x in (cid, (h << 4) | v, t))
     dht = b""
     for t in range(len(qts)):
@@ -667,32 +827,34 @@ def _jfif(
             if restart_interval
             else b""
         )
-        + scans
-        + b"\xff\xd9"
     )
 
 
-def _encode_baseline(
-    pixels, width, height, quality, restart_interval, layout
-) -> bytes:
-    """Sequential (SOF0) encode of one interleaved scan: each MCU holds
-    h x v blocks per component in raster order (ITU T.81 A.2.3), and
-    ``restart_interval`` resets every predictor (F.2.1.3.1)."""
-    comps, qts, coefs = _quantized(pixels, width, height, quality, layout)
-    _, h0, v0, _ = comps[0]
-    mcus = [
-        [
-            (ci, coefs[ci][my * v + r, mx * h + c])
-            for ci, (_, h, v, _) in enumerate(comps)
-            for r in range(v)
-            for c in range(h)
-        ]
-        for my in range(coefs[0].shape[0] // v0)
-        for mx in range(coefs[0].shape[1] // h0)
-    ]
-    codes = [_std_codes(t) for *_, t in comps]
-    scan = _sos(comps, 0, 63) + _huffman_scan(mcus, codes, restart_interval)
-    return _jfif(0xC0, width, height, comps, qts, restart_interval, scan)
+def _baseline_scans(comps, coefs, restart_interval: int) -> list:
+    """Entropy bytes of the one interleaved sequential scan of each of
+    N images, from their :func:`_quantized` coefficients: each MCU
+    holds h x v blocks per component in raster order (ITU T.81 A.2.3),
+    and ``restart_interval`` resets every predictor (F.2.1.3.1)."""
+    import numpy as np
+
+    n, rows, cols = coefs[0].shape[:3]
+    plan = _scan_plan(comps, rows // comps[0][2], cols // comps[0][1], restart_interval)
+    blocks = np.concatenate([cf.reshape(n, -1, 64) for cf in coefs], axis=1)
+    return _entropy_code(blocks[:, plan[0]], plan, True, True)
+
+
+def _baseline_head(comps, qts, width: int, height: int, restart_interval: int) -> bytes:
+    """A sequential (SOF0) file up to its scan's entropy bytes."""
+    return _jfif(0xC0, width, height, comps, qts, restart_interval) + _sos(comps, 0, 63)
+
+
+def _encode_baseline(pixels, width, height, quality, restart_interval, layout) -> bytes:
+    """One image's sequential JPEG: the N = 1 case of the batch code."""
+    px = _image(pixels, width, height, layout)
+    comps, qts, coefs = _quantized(px, quality, layout)
+    (scan,) = _baseline_scans(comps, coefs, restart_interval)
+    head = _baseline_head(comps, qts, width, height, restart_interval)
+    return head + scan + b"\xff\xd9"
 
 
 def encode_jpeg_gray(
@@ -730,12 +892,8 @@ def encode_jpeg_rgb(
     predictors. With "444" every MCU is one 8x8 block per component;
     with "420" chroma is 2x2 box-averaged and each 16x16 MCU
     interleaves four Y blocks plus one Cb and one Cr block."""
-    if subsampling not in ("444", "420"):
-        raise ValueError(
-            f"subsampling must be '444' or '420', got {subsampling!r}"
-        )
     return _encode_baseline(
-        pixels, width, height, quality, restart_interval, subsampling
+        pixels, width, height, quality, restart_interval, _subsampling(subsampling)
     )
 
 
@@ -804,23 +962,28 @@ def encode_jpeg_gray_progressive(
     flushed EOB run / correction-bit queue (ITU T.81 G.1.2.3 via
     F.2.1.3.1 — in a non-interleaved single-component scan the MCU is
     one block)."""
-    comps, qts, (coefs,) = _quantized(pixels, width, height, quality, "gray")
-    blocks = list(coefs.reshape(-1, 64))
-    dc_codes, _ = _std_codes(0)
-    pbits, pvals, ac_codes = _prog_ac_table()
+    px = _image(pixels, width, height, "gray")
+    _, qts, (coefs,) = _quantized(px, quality, "gray")
+    return _progressive_gray(coefs[0], width, height, qts, restart_interval)
 
-    def dc_first(blks) -> bytes:
-        bw = _BitWriter()
-        prev = 0
-        for zz in blks:
-            # Arithmetic shift = the T.81 DC point transform.
-            prev = _write_dc(bw, int(zz[0]) >> 1, prev, dc_codes)
-        return bw.flush()
+
+def _progressive_gray(cf, width: int, height: int, qts, restart_interval: int) -> bytes:
+    """The :func:`encode_jpeg_gray_progressive` file of one image's
+    int64 (rows, cols, 64) zigzag coefficients."""
+    comps = _LAYOUTS["gray"]
+    rows, cols = cf.shape[:2]
+    blocks = cf.reshape(rows * cols, 64).tolist()
+    pbits, pvals, ac_codes = _prog_ac_table()
+    # Arithmetic shift = the T.81 DC point transform.
+    dc_first = _entropy_code(
+        cf.reshape(1, rows * cols, 64)[..., :1] >> 1,
+        _scan_plan(comps, rows, cols, restart_interval), True, False,
+    )[0]
 
     def dc_refine(blks) -> bytes:
         bw = _BitWriter()
         for zz in blks:
-            bw.write(int(zz[0]) & 1, 1)
+            bw.write(zz[0] & 1, 1)
         return bw.flush()
 
     def ac_first(blks, ss: int, se: int, al: int) -> bytes:
@@ -829,7 +992,7 @@ def encode_jpeg_gray_progressive(
         for zz in blks:
             r = 0
             for k in range(ss, se + 1):
-                v = int(zz[k])
+                v = zz[k]
                 # AC point transform truncates toward zero (G.1.2.1),
                 # unlike the DC arithmetic shift.
                 t = (v >> al) if v >= 0 else -((-v) >> al)
@@ -876,7 +1039,7 @@ def encode_jpeg_gray_progressive(
                 eobrun, pend = 0, []
 
         for zz in blks:
-            absv = [abs(int(zz[k])) >> al for k in range(ss, se + 1)]
+            absv = [abs(zz[k]) >> al for k in range(ss, se + 1)]
             # Last newly-significant position: ZRLs are only emitted
             # while one remains ahead — trailing zeros and correction
             # bits past it fold into the EOB run instead (T.81
@@ -912,7 +1075,7 @@ def encode_jpeg_gray_progressive(
                 # t == 1: newly significant coefficient.
                 emit_eobrun()
                 bw.write(*ac_codes[(r << 4) | 1])
-                bw.write(1 if int(zz[k]) > 0 else 0, 1)
+                bw.write(1 if zz[k] > 0 else 0, 1)
                 for b in br_bits:
                     bw.write(b, 1)
                 br_bits = []
@@ -925,19 +1088,20 @@ def encode_jpeg_gray_progressive(
         emit_eobrun()
         return bw.flush()
 
+    def split(fn) -> bytes:
+        return _restart_split(blocks, restart_interval, fn)
+
     script = (
         (0, 0, 0x01, dc_first),
-        (0, 0, 0x10, dc_refine),
-        (1, 5, 0x01, lambda b: ac_first(b, 1, 5, 1)),
-        (6, 63, 0x01, lambda b: ac_first(b, 6, 63, 1)),
-        (1, 63, 0x10, lambda b: ac_refine(b, 1, 63, 0)),
+        (0, 0, 0x10, split(dc_refine)),
+        (1, 5, 0x01, split(lambda b: ac_first(b, 1, 5, 1))),
+        (6, 63, 0x01, split(lambda b: ac_first(b, 6, 63, 1))),
+        (1, 63, 0x10, split(lambda b: ac_refine(b, 1, 63, 0))),
     )
-    scans = b"".join(
-        _sos(comps, ss, se, ahal) + _restart_split(blocks, restart_interval, fn)
-        for ss, se, ahal, fn in script
-    )
-    return _jfif(
-        0xC2, width, height, comps, qts, restart_interval, scans, (pbits, pvals)
+    return (
+        _jfif(0xC2, width, height, comps, qts, restart_interval, (pbits, pvals))
+        + b"".join(_sos(comps, ss, se, ahal) + scan for ss, se, ahal, scan in script)
+        + b"\xff\xd9"
     )
 
 
@@ -965,125 +1129,119 @@ def encode_jpeg_rgb_progressive(
     bit-identical to the sequential 4:4:4 encoding at the same
     quality. ``restart_interval`` emits DRI + RST0-7 in every scan
     (all-predictor reset in the interleaved scan)."""
-    comps, qts, coefs = _quantized(pixels, width, height, quality, "444")
-    blocks = [cf.reshape(-1, 64) for cf in coefs]
-    codes = [_std_codes(t) for *_, t in comps]
-    scans = _sos(comps, 0, 0) + _huffman_scan(
-        [list(enumerate(mcu)) for mcu in zip(*blocks)],
-        [(dc, None) for dc, _ in codes],
-        restart_interval,
-    )
-    for comp, blks, (_, ac) in zip(comps, blocks, codes):
-        scans += _sos([comp], 1, 63) + _huffman_scan(
-            [[(0, zz)] for zz in blks], [(None, ac)], restart_interval
-        )
-    return _jfif(0xC2, width, height, comps, qts, restart_interval, scans)
+    import numpy as np
+
+    comps, qts, coefs = _quantized(_image(pixels, width, height, "444"), quality, "444")
+    _, rows, cols = coefs[0].shape[:3]
+    blocks = [cf.reshape(1, rows * cols, 64) for cf in coefs]
+    plan = _scan_plan(comps, rows, cols, restart_interval)
+    scans = _sos(comps, 0, 0) + _entropy_code(
+        np.concatenate(blocks, axis=1)[:, plan[0]], plan, True, False
+    )[0]
+    for c, blks in zip(comps, blocks):
+        plan = _scan_plan((c,), rows, cols, restart_interval)
+        scans += _sos([c], 1, 63) + _entropy_code(blks, plan, False, True)[0]
+    head = _jfif(0xC2, width, height, comps, qts, restart_interval)
+    return head + scans + b"\xff\xd9"
 
 
 class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    unstuffing; stops AT restart/terminating markers."""
+    """MSB-first bit reader over one scan's entropy-coded data. Each
+    segment — the bytes up to the next marker — is 0xFF00-unstuffed
+    once; bits are read in windows of it. ``pos`` is where the
+    current segment ends in ``data``."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
-        self.pos = pos
-        self._acc = 0
-        self._nbits = 0
-        self.marker: int | None = None
+        self._segment(pos)
 
-    def _fill(self) -> None:
-        if self.marker is not None:
+    def _segment(self, pos: int) -> None:
+        data = self.data
+        end = data.find(b"\xff", pos)
+        while end >= 0 and data[end + 1: end + 2] == b"\x00":
+            end = data.find(b"\xff", end + 2)
+        if end < 0:
+            end = len(data)
+        seg = data[pos:end].replace(b"\xff\x00", b"\xff")
+        self._nbits = 8 * len(seg)
+        self._seg = seg + b"\x00\x00\x00"  # room for the last window
+        self._bit = 0
+        self.pos = end
+
+    def _short(self) -> None:
+        if self.pos < len(self.data):
             raise ValueError("JPEG entropy data ended at marker early")
-        if self.pos >= len(self.data):
-            raise ValueError("JPEG entropy data truncated")
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos] if self.pos < len(self.data) else None
-            if nxt == 0x00:
-                self.pos += 1
-            else:
-                self.marker = nxt
-                raise ValueError("JPEG entropy data ended at marker early")
-        self._acc = (self._acc << 8) | b
-        self._nbits += 8
+        raise ValueError("JPEG entropy data truncated")
 
     def read_bit(self) -> int:
-        if not self._nbits:
-            self._fill()
-        self._nbits -= 1
-        return (self._acc >> self._nbits) & 1
+        b = self._bit
+        if b >= self._nbits:
+            self._short()
+        self._bit = b + 1
+        return (self._seg[b >> 3] >> (7 - (b & 7))) & 1
 
     def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
+        b = self._bit
+        if b + n > self._nbits:
+            self._short()
+        self._bit = b + n
+        nbytes = ((b & 7) + n + 7) >> 3
+        w = int.from_bytes(self._seg[b >> 3: (b >> 3) + nbytes], "big")
+        return (w >> (8 * nbytes - (b & 7) - n)) & ((1 << n) - 1)
+
+    def receive(self, n: int) -> int:
+        """``n`` bits read as a signed magnitude of size ``n`` (T.81
+        F.2.2.1 EXTEND); 0 for ``n`` = 0."""
+        v = self.read_bits(n)
+        return v - (1 << n) + 1 if n and v < (1 << (n - 1)) else v
+
+    def decode(self, table: tuple[int, ...]) -> int:
+        """The next Huffman symbol under a :func:`_huff_lookup` table."""
+        b = self._bit
+        w = int.from_bytes(self._seg[b >> 3: (b >> 3) + 3], "big")
+        e = table[(w >> (8 - (b & 7))) & 0xFFFF]
+        n = e & 31
+        if not n or b + n > self._nbits:
+            # Sixteen real bits and no code: bad data; fewer: the code
+            # would need bits past the segment.
+            if self._nbits - b >= 16:
+                raise ValueError("invalid JPEG Huffman code")
+            self._short()
+        self._bit = b + n
+        return e >> 5
 
     def align_and_expect_rst(self, n: int) -> None:
-        """Consume a restart marker (byte-aligned) and reset state.
-
-        ``self.marker`` is always None on entry: :meth:`_fill` raises
-        the moment it hits a marker during bit fill, aborting decode
-        before any align call — so this restart path alone consumes
-        markers."""
-        self._acc = self._nbits = 0
-        # Skip stuffed FF00 pairs first: flush padding before the
-        # marker can itself be a 0xFF byte, which the entropy
-        # coder stuffs — those are unread padding, not the marker.
-        while (
-            self.pos + 1 < len(self.data)
-            and self.data[self.pos] == 0xFF
-            and self.data[self.pos + 1] == 0x00
-        ):
-            self.pos += 2
-        # Marker not yet hit during bit fill: it must be next.
-        if self.pos + 1 < len(self.data) and self.data[self.pos] == 0xFF:
-            self.marker = self.data[self.pos + 1]
-            self.pos += 2
-        else:
+        """Skip the current byte's padding and any whole padding bytes
+        (0xFF, stuffed), then consume restart marker RSTn (mod 8) and
+        start the next segment after it."""
+        data, end = self.data, self.pos
+        rest = self._seg[(self._bit + 7) >> 3: self._nbits >> 3]
+        if rest.strip(b"\xff") or end + 1 >= len(data):
             raise ValueError("expected JPEG restart marker")
-        if self.marker != 0xD0 + (n % 8):
-            raise ValueError(
-                f"expected RST{n % 8}, got marker {self.marker:#x}"
-            )
-        self.marker = None
-
-
-def _huff_decode(br: _BitReader, table: dict[tuple[int, int], int]) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | br.read_bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _extend(v: int, size: int) -> int:
-    return v - (1 << size) + 1 if size and v < (1 << (size - 1)) else v
+        if data[end + 1] != 0xD0 + (n % 8):
+            raise ValueError(f"expected RST{n % 8}, got marker {data[end + 1]:#x}")
+        self._segment(end + 2)
 
 
 class _Frame:
     """What a JPEG's marker segments define, filled in as they parse:
     quant tables, Huffman tables keyed (class, id), the restart
     interval, and from the SOF the image size, components
-    ``(cid, h, v, tq)``, MCU grid, each component's own block grid
-    (non-interleaved scans walk it) and its int64 (rows, cols, 64)
-    zigzag coefficient array that the scans fill."""
+    ``(cid, h, v, tq)``, MCU grid, each component's block grid in
+    whole MCUs (``grid``) and its own extent within it (``geom``; a
+    non-interleaved scan walks it), and its zigzag coefficients: a
+    flat list of 64 per block, row-major over ``grid``, while the
+    scans fill it, then an int64 (rows, cols, 64) array."""
 
     def __init__(self) -> None:
         self.qts: dict[int, list[int]] = {}
-        self.huff: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+        self.huff: dict[tuple[int, int], tuple[int, ...]] = {}
         self.restart_interval = 0
         self.width = self.height = None
         self.progressive = False
         self.comps: list[tuple[int, int, int, int]] = []
 
     def read_sof(self, payload: bytes, progressive: bool) -> None:
-        import numpy as np
-
         precision, self.height, self.width, nf = struct.unpack(
             ">BHHB", payload[:6]
         )
@@ -1108,10 +1266,10 @@ class _Frame:
         self.vmax = max(v for _, _, v, _ in self.comps)
         self.mcus_x = _cdiv(self.width, 8 * self.hmax)
         self.mcus_y = _cdiv(self.height, 8 * self.vmax)
-        self.coefs = [
-            np.zeros((self.mcus_y * vi, self.mcus_x * hi, 64), dtype=np.int64)
-            for _, hi, vi, _ in self.comps
+        self.grid = [
+            (self.mcus_y * vi, self.mcus_x * hi) for _, hi, vi, _ in self.comps
         ]
+        self.coefs = [[0] * (64 * r * c) for r, c in self.grid]
         # Non-interleaved scans cover only the component's own extent:
         # ceil(size * factor / max factor) samples, in whole blocks.
         self.geom = [
@@ -1201,10 +1359,12 @@ def _decode_scan(br: _BitReader, fr: _Frame, members, ss, se, ah, al) -> None:
     sequential, or G.2 progressive with refinement per G.1.2.3. A
     sequential scan is the Ss=0, Se=63, Ah=Al=0 case — each block
     codes its DC and then its AC band. ``members`` are the scan's
-    ``(component index, DC table id, AC table id)``."""
+    ``(component index, DC table id, AC table id)``; a block is the
+    64 entries of its component's flat list from offset ``o``."""
     eobrun = rst = 0
     preds = [0] * len(members)
     lo = max(ss, 1)  # first AC position of the band
+    decode, receive, read_bit = br.decode, br.receive, br.read_bit
 
     def need(tc: int, th: int):
         tab = fr.huff.get((tc, th))
@@ -1212,22 +1372,21 @@ def _decode_scan(br: _BitReader, fr: _Frame, members, ss, se, ah, al) -> None:
             raise ValueError("JPEG scan references missing DHT table")
         return tab
 
-    def dc_unit(zz, mi: int) -> None:
+    def dc_unit(buf, o: int, mi: int) -> None:
         if ah == 0:  # first DC scan at this precision
-            size = _huff_decode(br, dc_tabs[mi])
-            preds[mi] += _extend(br.read_bits(size), size) if size else 0
-            zz[0] = preds[mi] << al
-        elif br.read_bit():  # DC refinement: one raw bit
-            zz[0] = int(zz[0]) | (1 << al)
+            preds[mi] += receive(decode(dc_tabs[mi]))
+            buf[o] = preds[mi] << al
+        elif read_bit():  # DC refinement: one raw bit
+            buf[o] |= 1 << al
 
-    def ac_first_unit(zz, ac_tab) -> None:
+    def ac_first_unit(buf, o: int, ac_tab) -> None:
         nonlocal eobrun
         if eobrun > 0:
             eobrun -= 1
             return
         k = lo
         while k <= se:
-            sym = _huff_decode(br, ac_tab)
+            sym = decode(ac_tab)
             r, s = sym >> 4, sym & 0xF
             if s == 0:
                 if r == 15:  # ZRL
@@ -1241,22 +1400,22 @@ def _decode_scan(br: _BitReader, fr: _Frame, members, ss, se, ah, al) -> None:
             k += r
             if k > se:
                 raise ValueError("JPEG AC coefficient index overflow")
-            zz[k] = _extend(br.read_bits(s), s) << al
+            buf[o + k] = receive(s) << al
             k += 1
 
-    def ac_refine_unit(zz, ac_tab) -> None:
+    def ac_refine_unit(buf, o: int, ac_tab) -> None:
         nonlocal eobrun
         p1, m1 = 1 << al, -1 << al
 
         def correct(k: int) -> None:
-            v = int(zz[k])
-            if br.read_bit() and (v & p1) == 0:
-                zz[k] = v + (p1 if v >= 0 else m1)
+            v = buf[o + k]
+            if read_bit() and (v & p1) == 0:
+                buf[o + k] = v + (p1 if v >= 0 else m1)
 
         k = lo
         if eobrun == 0:
             while k <= se:
-                sym = _huff_decode(br, ac_tab)
+                sym = decode(ac_tab)
                 r, s = sym >> 4, sym & 0xF
                 val = 0
                 if s == 0:
@@ -1271,9 +1430,9 @@ def _decode_scan(br: _BitReader, fr: _Frame, members, ss, se, ah, al) -> None:
                         raise ValueError(
                             "JPEG AC refinement symbol must have size 1"
                         )
-                    val = p1 if br.read_bit() else m1
+                    val = p1 if read_bit() else m1
                 while k <= se:
-                    if int(zz[k]) != 0:
+                    if buf[o + k] != 0:
                         correct(k)
                     else:
                         if r == 0:
@@ -1281,11 +1440,11 @@ def _decode_scan(br: _BitReader, fr: _Frame, members, ss, se, ah, al) -> None:
                         r -= 1
                     k += 1
                 if val and k <= se:
-                    zz[k] = val
+                    buf[o + k] = val
                 k += 1
         if eobrun > 0:
             while k <= se:
-                if int(zz[k]) != 0:
+                if buf[o + k] != 0:
                     correct(k)
                 k += 1
             eobrun -= 1
@@ -1298,14 +1457,18 @@ def _decode_scan(br: _BitReader, fr: _Frame, members, ss, se, ah, al) -> None:
             preds[:] = [0] * len(preds)  # ALL predictors reset (F.2.1.3.1)
             eobrun = 0
 
-    def unit(zz, mi: int) -> None:
+    def unit(buf, o: int, mi: int) -> None:
         if ss == 0:
-            dc_unit(zz, mi)
+            dc_unit(buf, o, mi)
         if se:
-            ac_unit(zz, ac_tabs[mi])
+            ac_unit(buf, o, ac_tabs[mi])
 
     if fr.progressive and ss == 0 and se != 0:
         raise ValueError("progressive DC scan must have Se = 0")
+    if se > 63:
+        # A block is 64 entries of a flat list: a band past 63 would
+        # run into the next block.
+        raise ValueError(f"JPEG scan Se = {se} is past coefficient 63")
     if len(members) > 1:
         # Interleaved scan. T.81 G.2 forbids interleaved progressive AC,
         # and this decoder requires it to cover every SOF component
@@ -1324,41 +1487,51 @@ def _decode_scan(br: _BitReader, fr: _Frame, members, ss, se, ah, al) -> None:
         # Non-interleaved: one block per MCU over the component's grid.
         cx = members[0][0]
         rows, cols = fr.geom[cx]
+        buf, stride = fr.coefs[cx], fr.grid[cx][1]
         for n in range(rows * cols):
             restart(n)
-            unit(fr.coefs[cx][n // cols, n % cols], 0)
+            unit(buf, 64 * (n // cols * stride + n % cols), 0)
         return
     # Interleaved MCU: h_i x v_i blocks per component in raster order
-    # (T.81 A.2.3), components in SOF order.
+    # (T.81 A.2.3), components in SOF order; ``blocks`` holds each
+    # one's (list, offset in MCU (0, 0), member, MCU row step, MCU
+    # column step).
+    blocks = []
+    for mi, (cx, _, _) in enumerate(members):
+        _, hi, vi, _ = fr.comps[cx]
+        stride = fr.grid[cx][1]
+        blocks += [
+            (fr.coefs[cx], 64 * (r * stride + c), mi, 64 * vi * stride, 64 * hi)
+            for r in range(vi)
+            for c in range(hi)
+        ]
     for n in range(fr.mcus_y * fr.mcus_x):
         restart(n)
         my, mx = divmod(n, fr.mcus_x)
-        for mi, (cx, _, _) in enumerate(members):
-            _, hi, vi, _ = fr.comps[cx]
-            for r in range(vi):
-                for c in range(hi):
-                    unit(fr.coefs[cx][my * vi + r, mx * hi + c], mi)
+        for buf, o, mi, dy, dx in blocks:
+            unit(buf, o + my * dy + mx * dx, mi)
 
 
 def _idct_blocks(cf, qt):
     """Dequantize (``qt`` in zigzag order, as DQT carries it) and
-    inverse-transform int64 (rows, cols, 64) zigzag coefficients into
-    one (rows*8, cols*8) float plane — the inverse of
+    inverse-transform int64 (..., rows, cols, 64) zigzag coefficients
+    into (..., rows*8, cols*8) float planes — the inverse of
     :func:`_zigzag_coefs`, and like it one stacked matmul that runs
     the same 8x8 product per block as a per-block loop."""
     import numpy as np
 
     qmat = np.array(qt, dtype=np.float64)[np.argsort(_ZIGZAG)].reshape(8, 8)
     c = _dct_mat()
-    rows, cols = cf.shape[:2]
-    blocks = np.zeros((rows, cols, 64), dtype=np.float64)
+    *lead, rows, cols, _ = cf.shape
+    blocks = np.zeros(cf.shape, dtype=np.float64)
     blocks[..., _ZIGZAG] = cf
-    pix = c.T @ (blocks.reshape(rows, cols, 8, 8) * qmat) @ c + 128.0
-    return pix.swapaxes(1, 2).reshape(rows * 8, cols * 8)
+    pix = c.T @ (blocks.reshape(*lead, rows, cols, 8, 8) * qmat) @ c + 128.0
+    return pix.swapaxes(-3, -2).reshape(*lead, rows * 8, cols * 8)
 
 
-def _decode_jpeg_planes(data: bytes):
-    """The JPEG decode core -> (width, height, planes).
+def _decode_coefs(data: bytes) -> _Frame:
+    """The JPEG entropy-decode core -> the :class:`_Frame` its marker
+    segments define, with every component's coefficients filled.
 
     Parses the marker segments generically and entropy-decodes every
     scan into per-component coefficient arrays: one interleaved scan
@@ -1368,14 +1541,7 @@ def _decode_jpeg_planes(data: bytes):
     redefinition between scans, restart intervals. 1 (gray) or 3
     (YCbCr) components with sampling factors h, v in {1, 2} (4:4:4,
     4:2:2, 4:4:0 and 4:2:0 all decode), each with its own quant table,
-    Huffman pair and DC predictor. Every block then dequantizes and
-    inverse-transforms the same way, so a fully-refined progressive
-    stream decodes BIT-IDENTICALLY to its sequential counterpart.
-    Subsampled planes are upsampled back by pixel replication
-    (deterministic; fancy upsampling differs across real decoders,
-    and the roundtrip oracle is an error bound). Returns float planes
-    cropped to (height, width); the public wrappers own clipping and
-    color conversion. Shapes outside this contract raise
+    Huffman pair and DC predictor. Shapes outside this contract raise
     ``NotImplementedError`` naming the missing piece."""
     import numpy as np
 
@@ -1417,45 +1583,74 @@ def _decode_jpeg_planes(data: bytes):
         pos = _next_marker_pos(data, br.pos)
     if fr.width is None or not scans:
         raise ValueError("JPEG missing SOF/SOS")
+    fr.coefs = [
+        np.array(cf, dtype=np.int64).reshape(r, c, 64)
+        for cf, (r, c) in zip(fr.coefs, fr.grid)
+    ]
+    return fr
+
+
+def _frame_planes(fr: _Frame, coefs) -> list:
+    """Float planes of images that share ``fr``'s components and quant
+    tables, from their per-component int64 (N, rows, cols, 64)
+    coefficient stacks -> per component (N, H, W), every plane at the
+    full MCU grid of the stack. Every block dequantizes and
+    inverse-transforms the same way, so a fully-refined progressive
+    stream decodes BIT-IDENTICALLY to its sequential counterpart.
+    Subsampled planes are upsampled back by pixel replication
+    (deterministic; fancy upsampling differs across real decoders,
+    and the roundtrip oracle is an error bound). Cropping to the image
+    size is the caller's; clipping and color conversion are
+    :func:`_u8` and :func:`_rgb`."""
+    import numpy as np
 
     planes = []
-    for (_, hi, vi, tq), cf in zip(fr.comps, fr.coefs):
+    for (_, hi, vi, tq), cf in zip(fr.comps, coefs):
         if tq not in fr.qts:
             raise ValueError("JPEG scan references missing DQT table")
         plane = _idct_blocks(cf, fr.qts[tq])
         if hi != fr.hmax:
-            plane = np.repeat(plane, fr.hmax // hi, axis=1)
+            plane = np.repeat(plane, fr.hmax // hi, axis=-1)
         if vi != fr.vmax:
-            plane = np.repeat(plane, fr.vmax // vi, axis=0)
-        planes.append(plane[: fr.height, : fr.width])
-    return fr.width, fr.height, planes
+            plane = np.repeat(plane, fr.vmax // vi, axis=-2)
+        planes.append(plane)
+    return planes
 
 
-def _gray_bytes(plane) -> bytes:
+def _decode_jpeg_planes(data: bytes):
+    """One JPEG -> (width, height, float planes): :func:`_decode_coefs`
+    then the N = 1 case of :func:`_frame_planes`, cropped."""
+    fr = _decode_coefs(data)
+    planes = _frame_planes(fr, [cf[None] for cf in fr.coefs])
+    return fr.width, fr.height, [p[0, : fr.height, : fr.width] for p in planes]
+
+
+def _u8(plane):
+    """Decoded float samples rounded and clipped to uint8."""
     import numpy as np
 
-    return np.clip(np.round(plane), 0, 255).astype(np.uint8).tobytes()
+    return np.clip(np.round(plane), 0, 255).astype(np.uint8)
 
 
-def _rgb_bytes(planes) -> bytes:
-    """Interleaved RGB bytes from decoded planes: a gray plane is
-    replicated to R=G=B (how every viewer renders it); YCbCr (BT.601
-    full-range) converts back with R = Y + 1.402 Cr',
+def _rgb(planes):
+    """Interleaved RGB uint8 (..., h, w, 3) from decoded planes: a gray
+    plane is replicated to R=G=B (how every viewer renders it); YCbCr
+    (BT.601 full-range) converts back with R = Y + 1.402 Cr',
     G = Y - 0.344136 Cb' - 0.714136 Cr', B = Y + 1.772 Cb'
     (Cb' = Cb - 128, Cr' = Cr - 128)."""
     import numpy as np
 
     if len(planes) == 1:
-        g = np.clip(np.round(planes[0]), 0, 255).astype(np.uint8)
-        return np.repeat(g[..., None], 3, axis=2).tobytes()
+        return np.repeat(_u8(planes[0])[..., None], 3, axis=-1)
     y, cb, cr = planes
     cb = cb - 128.0
     cr = cr - 128.0
-    rgb = np.stack(
-        [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb],
-        axis=2,
+    return _u8(
+        np.stack(
+            [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb],
+            axis=-1,
+        )
     )
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8).tobytes()
 
 
 def decode_jpeg_gray(data: bytes) -> tuple[int, int, bytes]:
@@ -1472,7 +1667,7 @@ def decode_jpeg_gray(data: bytes) -> tuple[int, int, bytes]:
         raise NotImplementedError(
             "multi-component (color) JPEG: use decode_jpeg_rgb"
         )
-    return width, height, _gray_bytes(planes[0])
+    return width, height, _u8(planes[0]).tobytes()
 
 
 def decode_jpeg_rgb(data: bytes) -> tuple[int, int, bytes]:
@@ -1480,10 +1675,10 @@ def decode_jpeg_rgb(data: bytes) -> tuple[int, int, bytes]:
 
     ``rgb`` is row-major interleaved R,G,B bytes. Baseline and
     progressive streams decode, with chroma at 4:4:4, 4:2:2, 4:4:0 or
-    4:2:0; see :func:`_rgb_bytes` for the color conversion and the
-    gray replication."""
+    4:2:0; see :func:`_rgb` for the color conversion and the gray
+    replication."""
     width, height, planes = _decode_jpeg_planes(data)
-    return width, height, _rgb_bytes(planes)
+    return width, height, _rgb(planes).tobytes()
 
 
 # --------------------------------------------------------------------------
@@ -1718,7 +1913,8 @@ def synthesize_media(spark, n: int = 100) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Stages: one per-row function each, run by _map_rows.
+# Stages: one per-row function each, run by _map_rows; the JPEG roundtrip
+# family runs one batch function, _roundtrip_batch, via _map_batches.
 # --------------------------------------------------------------------------
 def _decode_image_row(mid, payload) -> list[tuple]:
     b = bytes(payload)
@@ -1814,42 +2010,187 @@ def jpeg_encode_pixels(df: DataFrame, quality: int = 90) -> DataFrame:
     )
 
 
-def _max_abs_err(a: bytes, b: bytes) -> int:
+def _gradients(mids, w: int, h: int, layout: str):
+    """Task-generated pixels of the gradient roundtrip queries for
+    int64 ids ``mids`` -> uint8 (N, h, w, channels): gray
+    ``20 + id%40 + 2x + 3y`` (multimodal_jpeg_roundtrip); RGB
+    R = 20+id%40+2x+3y, G = 10+(id%40)//2+3x+2y, B = 40+id%20+x+4y
+    (multimodal_jpeg_color_roundtrip). Generated with numpy in the
+    codec task: a Catalyst ``transform(sequence(...))`` would evaluate
+    per element, interpreted, and ship the whole pixel array across
+    the Arrow boundary (values are integer-exact either way)."""
     import numpy as np
 
-    return int(
-        np.abs(
-            np.frombuffer(a, dtype=np.uint8).astype(np.int64)
-            - np.frombuffer(b, dtype=np.uint8).astype(np.int64)
-        ).max()
+    m = mids[:, None, None]
+    x = np.arange(w, dtype=np.int64)[None, None, :]
+    y = np.arange(h, dtype=np.int64)[None, :, None]
+    planes = [20 + m % 40 + 2 * x + 3 * y]
+    if layout != "gray":
+        planes += [10 + (m % 40) // 2 + 3 * x + 2 * y, 40 + m % 20 + x + 4 * y]
+    planes = [np.broadcast_to(p, (len(mids), h, w)) for p in planes]
+    return np.stack(planes, axis=-1).astype(np.uint8)
+
+
+# Padded pixels per numpy stack of the batch stage: bounds a Python
+# worker's transient memory (a float plane and its temporaries are
+# 8 bytes a pixel each) at no measurable cost in speed.
+_STACK_PIXELS = 1 << 14
+
+
+def _stacks(parts: list, per: int) -> Iterator[list]:
+    """Split ``parts`` — ``(w, h, row indexes, pixel stack)`` groups —
+    into runs of at most ``per`` images, splitting a group if needed."""
+    stack, room = [], per
+    for w, h, idx, src in parts:
+        at = 0
+        while at < len(idx):
+            k = min(room, len(idx) - at)
+            stack.append((w, h, idx[at: at + k], src[at: at + k]))
+            at, room = at + k, room - k
+            if not room:
+                yield stack
+                stack, room = [], per
+    if stack:
+        yield stack
+
+
+def _decoded_stack(files: list, layout: str):
+    """Decoded uint8 pixels of N JPEG files of ``layout`` that share one
+    MCU grid and quant tables, uncropped: (N, H, W) gray as
+    :func:`decode_jpeg_gray` gives them, or (N, H, W, 3) RGB as
+    :func:`decode_jpeg_rgb` does."""
+    import numpy as np
+
+    frames = [_decode_coefs(f) for f in files]
+    coefs = [np.stack(cfs) for cfs in zip(*(fr.coefs for fr in frames))]
+    planes = _frame_planes(frames[0], coefs)
+    return _u8(planes[0]) if layout == "gray" else _rgb(planes)
+
+
+def _roundtrip_batch(
+    mids, widths, heights, layouts, quality: int, progressive: bool = False,
+    pixels=None, restarts=None,
+) -> tuple[list, list, list]:
+    """Codec QA over one batch of rows -> ``(rows, files, decoded)`` in
+    input order.
+
+    Row i's image — raw bytes ``pixels[i]`` when given, else its
+    :func:`_gradients` — is encoded as a baseline JPEG of layout
+    ``layouts[i]`` ('gray', '444' or '420') at restart interval
+    ``restarts[i]`` (default 0), decoded back, and reported as
+    ``(mid, w, h, w*h, max abs pixel error)`` over all channels. With
+    ``progressive`` (gray rows) each row also encodes the 5-scan SOF2
+    script and reports ITS error, plus whether its decoded pixels are
+    BYTE-IDENTICAL to the sequential decode (every first scan drops
+    exactly the one bit its refinement scan restores, so the
+    coefficient arrays must coincide; any divergence in EOB-run, ZRL,
+    correction-bit, or spectral-band handling flips the boolean).
+
+    Rows are grouped by (width, height, layout, restart interval): per
+    group the pixels are made, edge-padded to whole MCUs and compared
+    with their decode as one (N, h, w[, c]) stack, and a group's files
+    share one header. Groups whose padded stacks have the same MCU
+    grid are concatenated, up to :data:`_STACK_PIXELS` pixels a stack,
+    for the steps in between — YCbCr, chroma averaging,
+    FDCT/quantize, entropy coding, dequantize/IDCT, upsampling, color
+    conversion — which then run once per stack; only the Huffman
+    decode is per file. Each row
+    still gets exactly the bytes and pixels of the one-image
+    ``encode_jpeg_*`` / ``decode_jpeg_*`` calls (test-pinned):
+    ``files[i]`` holds the row's JPEG files (baseline, then
+    progressive) and ``decoded[i]`` their decoded pixel bytes."""
+    import numpy as np
+
+    n = len(mids)
+    mids = [int(m) for m in mids]
+    keys = zip(
+        (int(w) for w in widths), (int(h) for h in heights),
+        (str(lay) for lay in layouts),
+        (0,) * n if restarts is None else (int(r) for r in restarts),
     )
+    groups: dict[tuple, list[int]] = {}
+    for i, key in enumerate(keys):
+        groups.setdefault(key, []).append(i)
+    grids: dict[tuple, list] = {}  # (layout, restart, MCU grid) -> groups
+    for (w, h, layout, ri), idx in groups.items():
+        nch = 1 if layout == "gray" else 3
+        if pixels is None:
+            _check_size(w * h * nch, w, h, nch)
+            ids = np.array([mids[i] for i in idx], dtype=np.int64)
+            src = _gradients(ids, w, h, layout)
+        else:
+            raw = [pixels[i] for i in idx]
+            for r in raw:
+                _check_size(len(r), w, h, nch)
+            src = np.frombuffer(b"".join(raw), dtype=np.uint8)
+            src = src.reshape(len(idx), h, w, nch)
+        key = (layout, ri) + _mcus(w, h, layout)
+        grids.setdefault(key, []).append((w, h, idx, src))
+    rows, files, decoded = [None] * n, [None] * n, [None] * n
+    for (layout, ri, my, mx), same_grid in grids.items():
+        side = 8 * _LAYOUTS[layout][0][1]  # MCU side in pixels
+        per = max(1, _STACK_PIXELS // (my * mx * side * side))
+        for parts in _stacks(same_grid, per):
+            stack = _roundtrip_stack(parts, layout, ri, quality, progressive)
+            for i, tail, f, d in stack:
+                rows[i], files[i], decoded[i] = (mids[i], *tail), f, d
+    return rows, files, decoded
 
 
-def _roundtrip_row(
-    mid, w: int, h: int, raw: bytes, quality: int,
-    progressive: bool = False, subsampling: str | None = None,
-) -> list[tuple]:
-    """One codec-QA row: encode ``raw`` — gray, or RGB at
-    ``subsampling`` when given — decode it back, and report the max
-    absolute pixel error. ``progressive`` (gray) also encodes the
-    5-scan SOF2 script and reports ITS error, plus whether its decoded
-    pixels are BYTE-IDENTICAL to the sequential decode (every first
-    scan drops exactly the one bit its refinement scan restores, so
-    the coefficient arrays must coincide; any divergence in EOB-run,
-    ZRL, correction-bit, or spectral-band handling flips the
-    boolean)."""
-    if subsampling is None:
-        dec = decode_jpeg_gray(encode_jpeg_gray(raw, w, h, quality=quality))[2]
-    else:
-        dec = decode_jpeg_rgb(
-            encode_jpeg_rgb(raw, w, h, quality=quality, subsampling=subsampling)
-        )[2]
-    if not progressive:
-        return [(mid, w, h, w * h, _max_abs_err(dec, raw))]
-    prog = decode_jpeg_gray(
-        encode_jpeg_gray_progressive(raw, w, h, quality=quality)
-    )[2]
-    return [(mid, w, h, w * h, _max_abs_err(prog, raw), prog == dec)]
+def _roundtrip_stack(
+    parts: list, layout: str, ri: int, quality: int, progressive: bool
+):
+    """One numpy stack of :func:`_roundtrip_batch`: ``parts`` are
+    ``(w, h, row indexes, uint8 pixels)`` groups on one MCU grid ->
+    per image ``(row index, row after its media_id, files, decoded)``."""
+    import numpy as np
+
+    comps, qts, coefs = _quantized(
+        np.concatenate([_padded(src, layout) for *_, src in parts]), quality, layout
+    )
+    heads = [(w, h, _baseline_head(comps, qts, w, h, ri)) for w, h, *_ in parts]
+    each = [head for head, (*_, idx, _) in zip(heads, parts) for _ in idx]
+    scans = _baseline_scans(comps, coefs, ri)
+    passes = [[head + scan + b"\xff\xd9" for (*_, head), scan in zip(each, scans)]]
+    if progressive:
+        passes.append(
+            [
+                _progressive_gray(cf, w, h, qts, ri)
+                for cf, (w, h, _) in zip(coefs[0], each)
+            ]
+        )
+    pix = [_decoded_stack(p, layout) for p in passes]
+    at = 0
+    for w, h, idx, src in parts:
+        got = [p[at: at + len(idx), :h, :w].reshape(len(idx), -1) for p in pix]
+        err = np.abs(got[-1] - src.reshape(len(idx), -1).astype(np.int64)).max(axis=1)
+        same = (got[-1] == got[0]).all(axis=1)
+        for j, i in enumerate(idx):
+            tail = (w, h, w * h, int(err[j]))
+            tail += (bool(same[j]),) if progressive else ()
+            files = tuple(p[at + j] for p in passes)
+            yield i, tail, files, tuple(g[j].tobytes() for g in got)
+        at += len(idx)
+
+
+def _subsampling(sub) -> str:
+    """A color layout name, checked: '444' or '420'."""
+    if sub not in ("444", "420"):
+        raise ValueError(f"subsampling must be '444' or '420', got {sub!r}")
+    return sub
+
+
+def _pixels_roundtrip(df: DataFrame, quality: int, progressive: bool) -> DataFrame:
+    schema = JPEG_PROGRESSIVE_SCHEMA if progressive else JPEG_ROUNDTRIP_SCHEMA
+
+    def batch(mids, widths, heights, pixels) -> list[tuple]:
+        raw = [_raw_gray(px) for px in pixels]
+        gray = ["gray"] * len(raw)
+        return _roundtrip_batch(
+            mids, widths, heights, gray, quality, progressive, raw
+        )[0]
+
+    return _map_batches(df, schema, batch, "media_id", "width", "height", "pixels")
 
 
 def jpeg_roundtrip_error(df: DataFrame, quality: int = 90) -> DataFrame:
@@ -1857,15 +2198,9 @@ def jpeg_roundtrip_error(df: DataFrame, quality: int = 90) -> DataFrame:
     row as baseline JPEG, decode it back, and emit the max absolute
     pixel error — the validation pass an ingest pipeline runs before
     trusting a lossy codec path at scale. Both codec halves run inside
-    ONE mapInPandas task per batch; payload bytes are born and die
-    task-side (never shuffled)."""
-
-    def row(mid, w, h, px) -> list[tuple]:
-        return _roundtrip_row(mid, int(w), int(h), _raw_gray(px), quality)
-
-    return _map_rows(
-        df, JPEG_ROUNDTRIP_SCHEMA, row, "media_id", "width", "height", "pixels"
-    )
+    ONE mapInPandas task per batch (:func:`_roundtrip_batch`); payload
+    bytes are born and die task-side (never shuffled)."""
+    return _pixels_roundtrip(df, quality, False)
 
 
 def jpeg_progressive_roundtrip_error(
@@ -1873,44 +2208,10 @@ def jpeg_progressive_roundtrip_error(
 ) -> DataFrame:
     """Progressive twin of :func:`jpeg_roundtrip_error`, with a
     strictly stronger check: each row encodes BOTH ways and also
-    reports ``matches_sequential`` (see :func:`_roundtrip_row`). All
+    reports ``matches_sequential`` (see :func:`_roundtrip_batch`). All
     four codec passes run inside ONE mapInPandas task per batch —
     payloads never shuffle."""
-
-    def row(mid, w, h, px) -> list[tuple]:
-        return _roundtrip_row(mid, int(w), int(h), _raw_gray(px), quality, True)
-
-    return _map_rows(
-        df, JPEG_PROGRESSIVE_SCHEMA, row, "media_id", "width", "height", "pixels"
-    )
-
-
-def _gray_gradient(mid: int, w: int, h: int) -> bytes:
-    """Row-major gray gradient ``20 + id%40 + 2x + 3y`` as raw bytes —
-    the multimodal_jpeg_roundtrip pixel formula, generated with numpy
-    in the codec task: a Catalyst ``transform(sequence(...))`` would
-    evaluate per element, interpreted, and ship the whole pixel array
-    across the Arrow boundary (values are integer-exact either way)."""
-    import numpy as np
-
-    row = 20 + mid % 40 + 2 * np.arange(w, dtype=np.int64)
-    img = row[None, :] + 3 * np.arange(h, dtype=np.int64)[:, None]
-    return img.astype(np.uint8).tobytes()
-
-
-def _rgb_gradient(mid: int, w: int, h: int) -> bytes:
-    """Interleaved RGB gradient of multimodal_jpeg_color_roundtrip
-    (R = 20+id%40+2x+3y, G = 10+(id%40)//2+3x+2y, B = 40+id%20+x+4y),
-    generated in the codec task like :func:`_gray_gradient`."""
-    import numpy as np
-
-    x = np.arange(w, dtype=np.int64)[None, :]
-    y = np.arange(h, dtype=np.int64)[:, None]
-    r = 20 + mid % 40 + 2 * x + 3 * y
-    g = 10 + (mid % 40) // 2 + 3 * x + 2 * y
-    b = 40 + mid % 20 + x + 4 * y
-    planes = [np.broadcast_to(p, (h, w)) for p in (r, g, b)]
-    return np.stack(planes, axis=-1).astype(np.uint8).tobytes()
+    return _pixels_roundtrip(df, quality, True)
 
 
 def jpeg_gradient_roundtrip(
@@ -1919,35 +2220,33 @@ def jpeg_gradient_roundtrip(
     """Fused generate+roundtrip stage for the gradient corpus:
     (media_id, width, height) -> the :func:`jpeg_roundtrip_error`
     output (the :func:`jpeg_progressive_roundtrip_error` output when
-    ``progressive``), with the gradient pixels generated IN the task
-    (``_gray_gradient``): three small int columns cross the Arrow
+    ``progressive``), with the gray gradient pixels generated IN the
+    task (:func:`_gradients`): three small int columns cross the Arrow
     boundary instead of a per-pixel array."""
     schema = JPEG_PROGRESSIVE_SCHEMA if progressive else JPEG_ROUNDTRIP_SCHEMA
 
-    def row(mid, w, h) -> list[tuple]:
-        mid, w, h = int(mid), int(w), int(h)
-        raw = _gray_gradient(mid, w, h)
-        return _roundtrip_row(mid, w, h, raw, quality, progressive)
+    def batch(mids, widths, heights) -> list[tuple]:
+        gray = ["gray"] * len(mids)
+        return _roundtrip_batch(mids, widths, heights, gray, quality, progressive)[0]
 
-    return _map_rows(df, schema, row, "media_id", "width", "height")
+    return _map_batches(df, schema, batch, "media_id", "width", "height")
 
 
 def jpeg_gradient_color_roundtrip(df: DataFrame, quality: int = 90) -> DataFrame:
     """Color twin of :func:`jpeg_gradient_roundtrip`: (media_id, width,
     height, subsampling) -> (media_id, width, height, n_pixels,
-    max_abs_err), the RGB gradient (``_rgb_gradient``) generated
+    max_abs_err), the RGB gradient (:func:`_gradients`) generated
     task-side and each row encoded as a baseline color JPEG at its own
     subsampling ('444' or '420' — different MCU interleave and chroma
     paths, so a mixed frame covers both in one pass); the error is
     over all three channels."""
 
-    def row(mid, w, h, sub) -> list[tuple]:
-        mid, w, h = int(mid), int(w), int(h)
-        raw = _rgb_gradient(mid, w, h)
-        return _roundtrip_row(mid, w, h, raw, quality, subsampling=str(sub))
+    def batch(mids, widths, heights, subs) -> list[tuple]:
+        layouts = [_subsampling(s) for s in subs]
+        return _roundtrip_batch(mids, widths, heights, layouts, quality)[0]
 
-    return _map_rows(
-        df, JPEG_ROUNDTRIP_SCHEMA, row, "media_id", "width", "height", "subsampling"
+    return _map_batches(
+        df, JPEG_ROUNDTRIP_SCHEMA, batch, "media_id", "width", "height", "subsampling"
     )
 
 
@@ -1960,9 +2259,9 @@ def _decode_media_row(mid, payload) -> list[tuple]:
         # files the interleaved RGB bytes under their own tag.
         w, h, planes = _decode_jpeg_planes(b)
         if len(planes) == 1:
-            fmt, vals = "jpeg", _gray_bytes(planes[0])
+            fmt, vals = "jpeg", _u8(planes[0]).tobytes()
         else:
-            fmt, vals = "jpeg_rgb", _rgb_bytes(planes)
+            fmt, vals = "jpeg_rgb", _rgb(planes).tobytes()
     elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
         # For audio the (width, height) slots carry (sample_rate, 0):
         # DECODED_MEDIA_SCHEMA is one shape for all kinds, so filter on
@@ -2093,7 +2392,7 @@ def _dhash_row(mid, payload) -> list[tuple]:
     if b[:2] == b"\xff\xd8":
         # JPEG: hash the luma plane (plane 0 is gray or Y).
         w, h, planes = _decode_jpeg_planes(b)
-        px = _gray_bytes(planes[0])
+        px = _u8(planes[0]).tobytes()
     else:
         w, h, px = decode_png_gray(b)
     if (w, h) != (9, 8):

@@ -1102,12 +1102,13 @@ FROM documents ORDER BY media_id
     "zigzag, standard-table Huffman with byte stuffing) -> "
     "decode_jpeg_gray (generic DQT/DHT/SOF0 parse, Huffman decode, "
     "dequantize, IDCT) -> per-image max abs pixel error, all inside "
-    "ONE mapInPandas stage per batch (payloads never shuffle). JPEG "
+    "ONE mapInPandas stage that runs the codec once per Arrow batch "
+    "over same-shape image stacks (payloads never shuffle). JPEG "
     "is lossy, so unlike multimodal_png_roundtrip the gate is an "
     "ERROR BOUND: within_tol pins max_abs_err <= 4, a fixed "
     "deterministic fact (the exhaustive sweep of all 9*7*40 "
     "(width, height, seed) classes the formula can produce measured "
-    "worst-case 2 at quality 90 — r11, tools-local). The oracle "
+    "worst-case 2 at quality 90). The oracle "
     "re-derives dims and pixel counts from the formula and pins the "
     "bound TRUE; any codec regression (quantizer, Huffman table, "
     "filter, stuffing) blows the bound or the dims and flips the "
@@ -1119,14 +1120,11 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_parquet_importer_spark.operators import multimodal as M
     from hdfs_parquet_importer_spark.operators.util import ensure_parallelism
 
-    # r13 optimization: pixels are generated task-side with numpy
-    # inside the same mapInPandas as the codec (guide §4.1/§4.2 — the
-    # former Catalyst transform(sequence(...)) generator was
-    # interpreted per element and shipped the whole pixel array across
-    # the Arrow boundary), and the terminal presentation orderBy is
-    # dropped (guide §2.4: the driver's value digest is
-    # order-insensitive, and the rangepartitioning sampling pass
-    # re-executed the entire codec subtree a second time per run).
+    # Pixels are generated task-side, inside the codec's mapInPandas:
+    # only (media_id, width, height) cross the Arrow boundary, never a
+    # per-pixel array. No terminal orderBy: the oracle digest is
+    # order-insensitive, and a range-partitioned sort would run the
+    # whole codec subtree a second time to sample its bounds.
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     gen = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -1155,10 +1153,7 @@ SELECT doc_id AS media_id,
 FROM documents ORDER BY media_id
 """,
     doc="REAL PROGRESSIVE (SOF2) JPEG codec through the multimodal "
-    "pipeline — retires the last implementable codec boundary (the "
-    "r11 verdict's remaining NotImplementedError after r12's color "
-    "work; video stays honestly stubbed, ffmpeg is absent by "
-    "contract). Encoder: a 5-scan script exercising the FULL "
+    "pipeline. Encoder: a 5-scan script exercising the FULL "
     "progressive feature set (ITU T.81 G.1.2) — DC first scan at "
     "successive-approximation precision Al=1, DC refinement bit "
     "scan, two AC spectral-selection bands (1-5, 6-63) at Al=1 with "
@@ -1179,8 +1174,8 @@ FROM documents ORDER BY media_id
     "exactly the one bit its refinement restores, so coefficient "
     "arrays coincide), verified exhaustively over all 2520 "
     "(width, height, seed) classes plus 300 adversarial "
-    "noise/flat/checker images at qualities 5-100 (r12 second "
-    "pass). All four codec passes run in ONE mapInPandas stage; "
+    "noise/flat/checker images at qualities 5-100. All four codec "
+    "passes run in ONE mapInPandas stage, once per Arrow batch; "
     "payloads never shuffle. Cites reference gap: the reference has "
     "no media codecs — driver-mandated extension surface.",
 )
@@ -1190,9 +1185,8 @@ def multimodal_jpeg_progressive_roundtrip(
     from hdfs_parquet_importer_spark.operators import multimodal as M
     from hdfs_parquet_importer_spark.operators.util import ensure_parallelism
 
-    # r13 optimization: task-side numpy pixel generation fused into
-    # the codec mapInPandas + terminal presentation orderBy dropped —
-    # same rationale as multimodal_jpeg_roundtrip (guide §2.4, §4.1).
+    # Pixels generated inside the codec's mapInPandas and no terminal
+    # orderBy, for the reasons given in multimodal_jpeg_roundtrip.
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     gen = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -1221,9 +1215,8 @@ SELECT doc_id AS media_id,
        TRUE AS within_tol
 FROM documents ORDER BY media_id
 """,
-    doc="REAL COLOR JPEG codec through the multimodal pipeline (r11 "
-    "VERDICT item 8 — retires the multi-component codec boundary, "
-    "BOTH sampling modes): deterministic per-doc smooth RGB "
+    doc="REAL COLOR JPEG codec through the multimodal pipeline, in "
+    "BOTH sampling modes: deterministic per-doc smooth RGB "
     "gradients (R = 20 + id%40 + 2x + 3y, G = 10 + (id%40)//2 + 3x "
     "+ 2y, B = 40 + id%20 + x + 4y; all <= 129, no wrap edges) -> "
     "encode_jpeg_rgb (BT.601 RGB->YCbCr, Annex K luminance AND "
@@ -1233,12 +1226,13 @@ FROM documents ORDER BY media_id
     "MCU — the libjpeg default for real-world color files) -> "
     "decode_jpeg_rgb (generic sampled multi-component parse, "
     "replicate-upsample, YCbCr->RGB) -> per-image max abs channel "
-    "error, all inside ONE mapInPandas stage (payloads never "
-    "shuffle). within_tol pins max_abs_err <= 4 for 4:4:4 and <= 6 "
+    "error, all inside ONE mapInPandas stage that runs the codec "
+    "once per Arrow batch (payloads never shuffle). within_tol pins "
+    "max_abs_err <= 4 for 4:4:4 and <= 6 "
     "for 4:2:0 — fixed deterministic facts: the exhaustive sweep of "
     "all lcm(9,7,40) = 2520 (width, height, values) classes the "
     "formula can produce measured worst-case 3 / 5 at quality 90 "
-    "(tools/jpeg_color_sweep.py, r12). The oracle re-derives dims, "
+    "(tools/jpeg_color_sweep.py). The oracle re-derives dims, "
     "counts, and the parity-assigned mode and pins the bound TRUE; "
     "a regression in either color table, the chroma Huffman pair, "
     "either MCU interleave, the subsample/upsample pair, or the "
@@ -1252,11 +1246,9 @@ def multimodal_jpeg_color_roundtrip(
     from hdfs_parquet_importer_spark.operators import multimodal as M
     from hdfs_parquet_importer_spark.operators.util import ensure_parallelism
 
-    # r13 optimization: task-side numpy RGB generation fused into the
-    # codec mapInPandas + terminal presentation orderBy dropped — same
-    # rationale as multimodal_jpeg_roundtrip (guide §2.4, §4.1; the
-    # former Catalyst transform(sequence(...)) emitted 3*w*h values
-    # per row through an interpreted 3-way CASE).
+    # RGB pixels generated inside the codec's mapInPandas and no
+    # terminal orderBy, for the reasons given in
+    # multimodal_jpeg_roundtrip.
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     gen = docs.select(
         F.col("doc_id").alias("media_id"),

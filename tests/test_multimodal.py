@@ -886,3 +886,93 @@ def test_blockwise_dct_matches_per_block_loop():
                 ref = c.T @ (block.reshape(8, 8) * qmat) @ c + 128.0
                 got = pix[by * 8: by * 8 + 8, bx * 8: bx * 8 + 8]
                 assert np.array_equal(got, ref)
+
+
+def test_raw_gray_wraps_ints_modulo_256():
+    """Int pixel cells wrap modulo 256, bytes pass through."""
+    import numpy as np
+
+    assert M._raw_gray([-1, 256, 300]) == bytes([255, 0, 44])
+    assert M._raw_gray(np.array([-1, 256, 300], dtype=np.int32)) == bytes([255, 0, 44])
+    assert M._raw_gray(bytearray(b"\x01\xff")) == b"\x01\xff"
+
+
+def _query_gradient(mid, w, h, channels):
+    """The gradient roundtrip queries' pixel formulas, pixel by pixel."""
+    px = []
+    for y in range(h):
+        for x in range(w):
+            rgb = (
+                20 + mid % 40 + 2 * x + 3 * y,
+                10 + (mid % 40) // 2 + 3 * x + 2 * y,
+                40 + mid % 20 + x + 4 * y,
+            )
+            px += rgb[:channels]
+    return bytes(v & 0xFF for v in px)
+
+
+def test_roundtrip_batch_equals_per_image_codec():
+    """One batch mixing all 126 (width, height, subsampling) classes of
+    multimodal_jpeg_color_roundtrip with gray rows at restart intervals
+    0, 1 and 3: every row gets the file, the decoded pixels and the
+    error of the per-image encode -> decode calls."""
+    color = [
+        (i, 8 + i % 9, 8 + i % 7, "444" if i % 2 == 0 else "420", 0)
+        for i in range(126)
+    ]
+    gray = [
+        (1000 + i, 1 + i % 17, 1 + i % 13, "gray", (0, 1, 3)[i % 3])
+        for i in range(40)
+    ]
+    cases = color + gray
+    mids, ws, hs, layouts, ris = zip(*cases)
+    rows, files, decoded = M._roundtrip_batch(mids, ws, hs, layouts, 90, restarts=ris)
+    for (mid, w, h, layout, ri), row, f, d in zip(cases, rows, files, decoded):
+        if layout == "gray":
+            raw = _query_gradient(mid, w, h, 1)
+            jpeg = M.encode_jpeg_gray(raw, w, h, 90, ri)
+            pix = M.decode_jpeg_gray(jpeg)[2]
+        else:
+            raw = _query_gradient(mid, w, h, 3)
+            jpeg = M.encode_jpeg_rgb(raw, w, h, 90, ri, subsampling=layout)
+            pix = M.decode_jpeg_rgb(jpeg)[2]
+        assert (f, d) == ((jpeg,), (pix,)), (mid, w, h, layout, ri)
+        assert row == (mid, w, h, w * h, max(abs(a - b) for a, b in zip(pix, raw)))
+
+
+def test_roundtrip_batch_progressive_pixels_equal_per_image_codec():
+    """The pixel-column and progressive paths of the batch stage: noise
+    images (several per size) at restart intervals 0, 1 and 3 get the
+    per-image baseline and progressive files, pixels and errors."""
+    import random
+
+    rng = random.Random(5)
+    cases = []
+    for i in range(36):
+        w, h = rng.choice((1, 8, 13)), rng.choice((5, 16))
+        px = bytes(rng.randrange(256) for _ in range(w * h))
+        cases.append((i, w, h, px, (0, 1, 3)[i % 3]))
+    mids, ws, hs, pxs, ris = zip(*cases)
+    rows, files, decoded = M._roundtrip_batch(
+        mids, ws, hs, ["gray"] * len(cases), 50, True, list(pxs), ris
+    )
+    for (mid, w, h, px, ri), row, f, d in zip(cases, rows, files, decoded):
+        base = M.encode_jpeg_gray(px, w, h, 50, ri)
+        prog = M.encode_jpeg_gray_progressive(px, w, h, 50, ri)
+        pb, pp = M.decode_jpeg_gray(base)[2], M.decode_jpeg_gray(prog)[2]
+        assert (f, d) == ((base, prog), (pb, pp)), (mid, w, h, ri)
+        err = max(abs(a - b) for a, b in zip(pp, px))
+        assert row == (mid, w, h, w * h, err, pp == pb)
+
+
+def test_jpeg_scan_band_past_63_raises():
+    """A progressive AC scan whose SOS claims Se > 63 is refused by
+    name instead of decoding into the next block."""
+    data = M.encode_jpeg_gray_progressive(_gradient(16, 16), 16, 16)
+    sos = data.find(b"\xff\xda", data.find(b"\xff\xda") + 2)  # 2nd scan
+    sos = data.find(b"\xff\xda", sos + 2)  # 3rd scan: AC band 1-5
+    se = sos + 4 + 1 + 2 + 1  # marker, length, Ns, one selector, Ss
+    assert data[se] == 5
+    bad = data[:se] + bytes([64]) + data[se + 1:]
+    with pytest.raises(ValueError, match="Se = 64"):
+        M.decode_jpeg_gray(bad)
