@@ -33,11 +33,11 @@ def parse_string_array(col: Column) -> Column:
     an empty inner string and yields ``[""]`` where the reference's
     ``s.substring(1, s.length - 1)`` throws
     StringIndexOutOfBoundsException and kills the job — the clamp is
-    a deliberate robustness improvement (r11 review made it explicit).
+    a deliberate robustness improvement.
 
     Element trim matches Java ``String.trim`` — strips every char
     <= U+0020 (tabs, CR, NUL), not just ASCII space, which is what
-    ``F.trim`` strips (r11 review: ``"[a,\tb]"`` must yield
+    ``F.trim`` strips (``"[a,\tb]"`` must yield
     ``["a", "b"]`` like the reference, not ``["a", "\tb"]``).
     """
     inner = F.substring(col, 2, F.greatest(F.length(col) - 2, F.lit(0)))

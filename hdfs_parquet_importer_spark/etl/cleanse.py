@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 # tests the match). Anchored with \A/\z, not ^/$: the reference's
 # `case regex(...)` is Matcher.matches() (whole string), while rlike is
 # find-based where $ also matches BEFORE a trailing newline — so
-# '2020-01-01 10:10\n' must stay corrupt (r11 review; reachable via
+# '2020-01-01 10:10\n' must stay corrupt (reachable via
 # multiLine CSV or direct DataFrame callers).
 TIME_REGEX = r"\A\d{4}-\d{2}-\d{2} \d{2}:\d{2}\z"
 
@@ -78,12 +78,12 @@ def cleanse_suspect_rows_not_in(
             F.col(time_col).isNull() | ~F.col(time_col).rlike(TIME_REGEX)
         )
         .select(id_col)
-        # DISTINCT before the guard (r11 review): the broadcast build
+        # DISTINCT before the guard: the broadcast build
         # side is the distinct id set, so 2M corrupt rows sharing 1k
         # ids must pass the memory guard, not spuriously abort.
         .distinct()
         .limit(max_bad_ids + 1)
-        # localCheckpoint, not cache (r11 review): materializes once
+        # localCheckpoint, not cache: materializes once
         # for the guard count + anti-join build without pinning a
         # cached frame in executor storage for the session's lifetime
         # — the checkpoint RDD is GC-reclaimed once unreferenced.

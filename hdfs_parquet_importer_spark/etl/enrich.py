@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 # reference extractors are whole-string matches (Matcher.matches) while
 # regexp_extract is find-based, where $ also matches before a trailing
 # newline: '2020-01-01 10:10\n' must yield '' (and the empty Hive
-# partition), not year=2020/month=01 (r11 review).
+# partition), not year=2020/month=01.
 DATE_TIME_REGEX = r"\A(\d{4})-(\d{2})-(\d{2}) (\d{2}):(\d{2})\z"
 
 

@@ -94,8 +94,8 @@ def build_pipeline(spark: SparkSession, opts: PipelineOptions) -> DataFrame:
         # sort rows inside each partition — no order-destroying second
         # exchange, sorted parquet files per Hive dir.
         #
-        # The partition columns MUST lead the sort (r11 review,
-        # verified empirically): the partitioned writer requires its
+        # The partition columns MUST lead the sort (verified
+        # empirically): the partitioned writer requires its
         # output ordered by the partition columns and, if the incoming
         # order doesn't already satisfy that, V1Writes injects its own
         # NON-STABLE Sort[partition_cols] above this one — silently

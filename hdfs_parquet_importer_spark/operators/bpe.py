@@ -3,7 +3,7 @@
 ``bpe_top_merges`` (queries/mixing.py) learns WHICH adjacent pairs to
 merge; this module APPLIES a learned merge table to text — the encode
 half of the tokenizer loop, and the step that turns "estimated token
-counts" into REAL ones for sequence packing (VERDICT r6 item 4).
+counts" into REAL ones for sequence packing.
 
 Formulation: a token sequence travels as one separator-framed string
 ``.t1.t2.t3.`` (SEP = ``.``, outside the ``[a-z0-9]`` token alphabet
@@ -34,9 +34,8 @@ cross-engine oracle.
 Merge rules are whole-token pairs ``"L R"`` (space-separated; space
 is outside both the token alphabet and SEP), so multi-round tables
 whose sides are themselves merged tokens (``"ab c"``, ``"a bc"``)
-apply exactly — ADVICE r7 closed the old 2-char-positional format's
-latent hazard, and :func:`merge_pass` now REJECTS a rule without
-exactly one space at run time instead of misapplying it.
+apply exactly, and :func:`merge_pass` REJECTS a rule without exactly
+one space at run time instead of misapplying it.
 
 Encode semantics: one ordered pass per rule replays EXACTLY the
 corpus state :func:`learn_merges_iterative` maintains during
@@ -76,7 +75,7 @@ SEP = "."
 RULE_SEP = " "  # between L and R inside one rule; outside [a-z0-9] and SEP
 
 
-# Column-expression memo (r13, same contract as operators/dedup.py's
+# Column-expression memo (same contract as operators/dedup.py's
 # _EXPR_CACHE): the fold builders construct large expression trees per
 # call — pure py4j build time, re-paid per bench cycle and per
 # multiround iteration. Keyed by the input expressions' string forms;
@@ -95,8 +94,7 @@ def learn_merges(docs: DataFrame, text_col: str, k: int = 16) -> DataFrame:
     holding ``merges: array<string>`` of ``"L R"`` rules in priority
     order (count DESC, pair ASC tiebreak). Stays a DataFrame so
     callers can broadcast it into an encode pass without any
-    driver-side collect (the registry builder convention is lazy —
-    ADVICE r6 on dedup_simhash)."""
+    driver-side collect (the registry builder convention is lazy)."""
     words = docs.select(
         F.explode(D.tokens(F.col(text_col))).alias("w")
     ).filter(F.length("w") >= 2)
@@ -154,8 +152,8 @@ def merge_pass(s: Column, m: Column) -> Column:
     measured +30% on the sf0.1 encode query; hoisting parsed structs
     out of the fold measured +100% — struct construction per word
     costs more than it saves). A rule that is not exactly two
-    space-separated sides raises at run time (ADVICE r7: never
-    silently misapply), checked once per (word, rule) in the outer
+    space-separated sides raises at run time (never silently
+    misapply), checked once per (word, rule) in the outer
     gate, outside the token fold."""
     toks = F.filter(F.split(s, "[" + SEP + "]"), lambda t: t != F.lit(""))
     left = F.substring_index(m, RULE_SEP, 1)
@@ -236,7 +234,7 @@ def word_counts(docs: DataFrame, text_col: str) -> DataFrame:
 def learn_merges_iterative(
     docs: DataFrame, text_col: str, rounds: int
 ) -> DataFrame:
-    """Real multi-round BPE learning (VERDICT r7 item 6): each round
+    """Real multi-round BPE learning: each round
     re-encodes the vocabulary under the rules adopted so far,
     recounts adjacent TOKEN pairs (frequency-weighted, so counts are
     corpus-exact), and adopts the single top pair (count DESC, pair
@@ -332,7 +330,7 @@ def token_count(word: Column, merges: Column) -> Column:
     ``replace(framed, ...)``) duplicates the whole encode fold in the
     plan — higher-order functions are CodegenFallback, so no
     subexpression elimination rescues it and the fold genuinely ran
-    twice per word (r13 measurement: the encode projection halved
+    twice per word (measured: the encode projection halved
     when the second evaluation went away)."""
     return _memo(
         ("token_count", str(word), str(merges)),
@@ -349,54 +347,30 @@ def token_count(word: Column, merges: Column) -> Column:
     )
 
 
-def vocab_token_counts(
-    docs: DataFrame, text_col: str, merges: DataFrame
-) -> DataFrame:
-    """Distinct words with their encoded BPE token count ``(w,
-    _wtok)`` — the encode fold runs once per VOCABULARY entry, not
-    once per corpus occurrence (the same Sennrich trainer reduction
-    :func:`word_counts` applies to learning, now applied to
-    encoding). The fold's cost becomes sublinear in corpus bytes;
-    the corpus-sized pass that remains is a plain tokenize."""
-    vocab = (
-        docs.select(F.explode(D.tokens(F.col(text_col))).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
-    return vocab.crossJoin(F.broadcast(merges)).select(
-        "w", token_count(F.col("w"), F.col("merges")).alias("_wtok")
-    )
-
-
 def doc_token_counts(
     docs: DataFrame, id_cols: list[str], text_col: str, merges: DataFrame
 ) -> DataFrame:
     """Per-document REAL BPE token count (plus word/char counts).
 
-    r13 optimization (guide §8 — decide with small rows): the encode
-    fold is O(len^2) interpreted string building per (word, rule) and
-    used to run on every word OCCURRENCE inside a per-row projection
-    — at sf0.1 that is 270,704 fold evaluations for a corpus whose
-    vocabulary holds 31 distinct words (and the twice-referenced
-    fold result doubled it; see :func:`token_count`). Now the fold
-    runs once per distinct word (:func:`vocab_token_counts`), the
-    per-word counts come back via a broadcast hash join on ``w``,
-    and per-document sums are a map-side partial aggregation —
-    integer-identical output, vocabulary-sized fold work.
-    ``explode_outer`` keeps zero-token documents as (0, 0, 0) rows
-    exactly as the old projection did; casts pin the three counts to
-    the projection's original ``int`` so downstream schemas are
-    unchanged."""
+    The encode fold is O(len^2) interpreted string building per
+    (word, rule), so it runs once per distinct WORD, never per word
+    occurrence: at sf0.1 a per-occurrence projection makes 270,704
+    fold evaluations for a corpus whose vocabulary holds 31 distinct
+    words. The per-word counts come back via a broadcast hash join on
+    ``w``, and per-document sums are a map-side partial aggregation —
+    integer-identical output, vocabulary-sized fold work (the same
+    Sennrich reduction :func:`word_counts` applies to learning).
+    ``explode_outer`` keeps zero-token documents as (0, 0, 0) rows;
+    the casts pin the three counts to ``int``."""
     words = docs.select(
         *id_cols,
         F.explode_outer(
             F.filter(D.tokens(F.col(text_col)), lambda w: w != "")
         ).alias("w"),
-        # r13: ONE tokenize pass — the vocabulary below derives from
-        # this persisted explode instead of vocab_token_counts'
-        # second tokenize of the corpus (explode_outer emits NULL
-        # only for empty docs, so the non-null distinct set equals
-        # the old filter(w != '') vocabulary exactly).
+        # ONE tokenize pass: the vocabulary below derives from this
+        # persisted explode (explode_outer emits NULL only for empty
+        # docs, so the non-null distinct set is exactly the
+        # filter(w != '') vocabulary).
     ).localCheckpoint(eager=False)
     vocab = words.select("w").filter(F.col("w").isNotNull()).distinct()
     per_word = vocab.crossJoin(F.broadcast(merges)).select(

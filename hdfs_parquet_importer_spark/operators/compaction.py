@@ -125,7 +125,7 @@ def compact_parquet(
         # Both sides of the lookup go through the same scheme/slash
         # normalization: Hadoop Path.toString() prints 'file:/tmp/x'
         # while input_file_name() prints 'file:///tmp/x' — the raw
-        # strings NEVER match (r9 review), which silently degraded
+        # strings NEVER match, which silently degraded
         # every directory to one output file.
         file_dir = F.regexp_replace(
             F.regexp_replace(
@@ -149,8 +149,8 @@ def compact_parquet(
         # K ≈ n_output_files distinct keys hashed into K partitions,
         # ~1/e of the partitions come up empty and colliding salts of
         # the same directory merge, so per-directory file counts
-        # systematically undershoot and file sizes overshoot ~2x
-        # (ADVICE r9). Range exchange never SPLITS equal keys (bounds
+        # systematically undershoot and file sizes overshoot ~2x.
+        # Range exchange never SPLITS equal keys (bounds
         # are distinct key values), but its sampled boundaries can
         # still MERGE two adjacent keys when a key's sampled share
         # reads low — so ask for 2x the partitions. With 2x headroom
@@ -171,8 +171,8 @@ def compact_parquet(
     if sort_within:
         # Partition columns lead so the partitioned writer's required
         # ordering is already satisfied — otherwise V1Writes injects a
-        # NON-STABLE Sort[part_cols] that destroys this order (r11
-        # review; harmless no-op for unpartitioned compaction).
+        # NON-STABLE Sort[part_cols] that destroys this order (a
+        # harmless no-op for unpartitioned compaction).
         df = df.sortWithinPartitions(*part_cols, *sort_within)
     writer = df.write.mode("overwrite")
     if part_cols:
@@ -202,7 +202,7 @@ def _infer_partition_cols(spark: SparkSession, df) -> list[str]:
     probed file: under schema evolution a data column missing from an
     older file's footer would otherwise be misread as a partition
     column and the rewrite would partitionBy a (possibly
-    high-cardinality) data column (r9 review).
+    high-cardinality) data column.
     """
     files = df.inputFiles()
     if not files:

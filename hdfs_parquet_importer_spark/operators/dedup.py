@@ -32,7 +32,7 @@ from hdfs_parquet_importer_spark.operators.util import ensure_parallelism
 # Mersenne prime 2^31-1: permutation arithmetic stays < 2^62.
 _MERSENNE = (1 << 31) - 1
 
-# Column-expression memos (r13): the wide fingerprint/signature
+# Column-expression memos: the wide fingerprint/signature
 # builders construct hundreds of Column objects per call, each a py4j
 # round-trip — measured 0.6-1.3 s of pure driver-side build time per
 # bench cycle. The expression trees reference only fixed internal
@@ -73,7 +73,7 @@ def content_pair_hash_cols(
 ) -> tuple[Column, Column]:
     """The (kd, ks) planted-copy hash Column pair — the ONE definition
     :func:`content_pair_hashes` persists and that fused single-scan
-    callers (eval_dsir_recall r14) project alongside their own
+    callers (eval_dsir_recall) project alongside their own
     columns; both hashes are 8-byte longs (string-key rule)."""
     return (
         F.xxhash64(text_col),
@@ -88,9 +88,9 @@ def content_pair_hashes(
     """(id, kd, ks): xxhash64 of the text and of text+marker from ONE
     scan of the text column, persisted lazily — the planted-copy eval
     queries self-join ``kd`` against ``ks`` to recover (copy, source)
-    pairs. The old per-query form projected each hash in its own
-    select, so the parquet text column was scanned twice per query
-    (r13); both hashes are 8-byte longs (string-key rule)."""
+    pairs. Projecting each hash in its own select would scan the
+    parquet text column twice per query; both hashes are 8-byte longs
+    (string-key rule)."""
     kd, ks = content_pair_hash_cols(F.col(text_col), marker)
     return docs.select(
         F.col(id_col), kd.alias("kd"), ks.alias("ks")
@@ -149,7 +149,7 @@ def jaccard(a: Column, b: Column) -> Column:
     exactly because the contract is distinct elements — the previous
     array_distinct(concat(a, b)) allocated and hash-deduped a
     combined array PER CANDIDATE PAIR in the verify-join hot path for
-    the same number (r10 review)."""
+    the same number."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = (F.size(a) + F.size(b)).cast("double") - inter
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -161,32 +161,6 @@ def _permute(h32: Column, i: int) -> Column:
     a = (2654435761 * (i + 1) + 40503) % _MERSENNE or 1
     b = (2246822519 * (i + 1) + 12345) % _MERSENNE
     return (F.lit(a) * h32 + F.lit(b)) % F.lit(_MERSENNE)
-
-
-def minhash_signature(df: DataFrame, id_col: str, text_col: str,
-                      num_perm: int = 32, shingle_n: int = 3) -> DataFrame:
-    """(id, sig_0..sig_{k-1}) via explode + k partial-min aggregations.
-
-    The explode is map-local; the groupBy's partial aggregation reduces
-    each partition to one row per doc before the shuffle. The input is
-    spread across cores first — shingling + permuting is CPU-bound, so
-    a narrow (small-file) input must not pin the stage to one core.
-    """
-    df = ensure_parallelism(df)
-    tok_df = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-    sh = tok_df.select(
-        F.col(id_col),
-        F.explode(shingles_of_tokens(F.col("_toks"), shingle_n)).alias("sh"),
-    )
-    h32 = F.pmod(F.xxhash64("sh"), F.lit(_MERSENNE))
-    sh = sh.select(id_col, h32.alias("h"))
-    key = ("minhash_sig", num_perm)
-    if key not in _EXPR_CACHE:
-        _EXPR_CACHE[key] = [
-            F.min(_permute(F.col("h"), i)).alias(f"sig_{i}")
-            for i in range(num_perm)
-        ]
-    return sh.groupBy(id_col).agg(*_EXPR_CACHE[key])
 
 
 def lsh_candidate_pairs(sig_df: DataFrame, id_col: str,
@@ -243,14 +217,10 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str,
     normalizes whole texts) rather than lowering ``shingle_n``.
     """
     df = ensure_parallelism(df)
-    # r14 (guide §1.2 first-principles / §2.3): ONE text scan + ONE
-    # tokenize/shingle pass for the whole operator. The checkpointed
-    # shingle-set table feeds BOTH the signature explode and the
-    # verify join; before, the signatures came from their own scan
-    # (minhash_signature re-tokenized + re-shingled the corpus).
-    # Same explode + groupBy-min signature computation as before —
-    # identical values from identical shingle sets, only the SOURCE
-    # changes (checkpointed arrays instead of a second parquet scan).
+    # ONE text scan + ONE tokenize/shingle pass for the whole
+    # operator: the checkpointed shingle-set table feeds BOTH the
+    # signature explode and the verify join, so the corpus is never
+    # re-tokenized or re-shingled for the signatures.
     # A shuffle-free per-row variant (32x array_min(transform(...)))
     # was measured 3.5x SLOWER here (dedup_minhash_lsh 1.44 -> 5.10 s
     # same-window): each transform materializes a permuted copy of

@@ -31,12 +31,12 @@ from hdfs_parquet_importer_spark.operators.util import (
     record_loop_leg,
 )
 
-# Size gate for the driver-local CC strategy (r14). The analogy is
-# Spark's own broadcast-join selection (guide §3.1): pick the physical
-# strategy by measured input size. 2e5 symmetrized rows ≈ a few MB
-# collected — bounded at ANY corpus scale (the same boundedness
-# argument as the k-row kmeans init and the <=256-row model collects);
-# graphs past the gate take the distributed loop unchanged.
+# Size gate for the driver-local CC strategy, read on every call. The
+# analogy is Spark's own broadcast-join selection: pick the physical
+# strategy by measured input size. 2e5 symmetrized rows is a few MB
+# collected, bounded at any corpus scale (the same argument as the
+# k-row kmeans init and the <=256-row model collects); graphs past the
+# gate, and every graph when it is 0, take the distributed loop.
 DRIVER_CC_MAX_SYM_ROWS = 200_000
 
 
@@ -45,7 +45,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 20,
-    driver_max_sym_rows: int = DRIVER_CC_MAX_SYM_ROWS,
 ) -> DataFrame:
     """(node, component) for every node in the edge list; component =
     the minimum node id reachable from it.
@@ -63,39 +62,41 @@ def connected_components(
     min-reachable-id invariant is preserved; the fixpoint VALUES are
     identical to plain min-propagation, only the round count changes
     (15 plain rounds vs 4 measured on the sf0.1 SemDeDup chain-shaped
-    edge list). The jump was kept in a separate function through r8 so
-    the rotation contract held for this operator's already-verified
-    consumers; the r9 window seats all of them, so r9 folds it in
-    (the r8 plan's committed follow-up).
+    edge list).
+
+    Raises ``ValueError`` for ``max_iter < 1`` before any Spark work,
+    and ``RuntimeError`` if labels still move after ``max_iter``
+    rounds.
     """
+    if max_iter < 1:
+        # With max_iter=0 the changed=0 initialization would read as
+        # "converged" and return identity labels.
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
     sym = sym.distinct().localCheckpoint(eager=False)
 
-    if max_iter < 1:
-        # With max_iter=0 the changed=0 initialization would read as
-        # "converged" and return identity labels (ADVICE r8 item 5).
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-
-    # r14 strategy selection (guide §1.1 first-principles + §3.1 pick
-    # by size): after LSH/banding, pair graphs are a tiny DECISION
-    # table relative to the corpus (~5% of docs at the planted rate
-    # here; the heavy work — hashing, banding, the pair join — already
+    # Strategy selection by size. After LSH/banding, pair graphs are a
+    # tiny decision table relative to the corpus (~5% of docs at the
+    # planted rate here; hashing, banding and the pair join already
     # happened upstream). The distributed loop costs ~7 driver-
     # blocking micro-jobs per round regardless of data size (measured
-    # 1.93 s / 29 jobs with 1.37 s of BETWEEN-job driver time for a
-    # 243-edge graph at sf0.1 — pure fixed overhead, 8->32-core
-    # scaling 0.65). When the symmetrized edge list is provably small
-    # (one cheap count over the already-checkpointed sym), run the
-    # IDENTICAL rounds on the driver: same propagate+jump schedule,
-    # same per-round changed test, same max_iter/raise contract, same
-    # labels — one collect instead of rounds x (plan + stages + count)
-    # round-trips. Loop-leg capture forces the distributed path so the
-    # plan-audit gates keep seeing the iterated join.
-    if driver_max_sym_rows > 0 and not loop_leg_capture_active():
-        if sym.count() <= driver_max_sym_rows:
-            return _driver_cc(sym, max_iter)
+    # 1.93 s / 29 jobs, 1.37 s of it driver time between jobs, for a
+    # 243-edge graph at sf0.1). When the symmetrized edge list is at
+    # most DRIVER_CC_MAX_SYM_ROWS rows (one count over the
+    # checkpointed sym), _driver_cc runs the identical rounds on the
+    # driver: same propagate+jump schedule, same per-round changed
+    # test, same max_iter/raise contract, same labels. Loop-leg
+    # capture forces the distributed path so the plan-audit gates
+    # keep seeing the iterated join.
+    if (
+        DRIVER_CC_MAX_SYM_ROWS > 0
+        and not loop_leg_capture_active()
+        and sym.count() <= DRIVER_CC_MAX_SYM_ROWS
+    ):
+        return _driver_cc(sym, max_iter)
 
     labels = (
         sym.select(F.col("u").alias("node"))
@@ -108,13 +109,12 @@ def connected_components(
     # range(max_iter + 1): the +1 is a VERIFICATION round — a graph
     # whose labels finish moving exactly on round max_iter is
     # converged (the extra round measures changed == 0), so only
-    # movement BEYOND max_iter rounds raises (ADVICE r8 item 5).
-    # r14 note: a 2-rounds-per-checkpoint unroll was measured SLOWER
-    # (split_leakage_audit 2.63 -> 3.54 s, dedup_cluster_canonical
-    # 4.46 -> 5.21 s same-window): labels feed two joins per leg and
-    # l1 feeds the jump self-join, so the un-checkpointed first leg
-    # re-executes up to 4x inside the second — the duplication the
-    # per-round checkpoint exists to prevent. Rolled form kept.
+    # movement BEYOND max_iter rounds raises.
+    # One checkpoint per round: a 2-rounds-per-checkpoint unroll was
+    # measured SLOWER (split_leakage_audit 2.63 -> 3.54 s,
+    # dedup_cluster_canonical 4.46 -> 5.21 s same-window). Labels feed
+    # two joins per leg and l1 feeds the jump self-join, so an
+    # un-checkpointed first leg re-executes up to 4x inside the second.
     for _ in range(max_iter + 1):
         # Candidate label for each node: the min label among neighbors.
         neighbor_min = (
@@ -172,9 +172,9 @@ def _driver_cc(sym: DataFrame, max_iter: int) -> DataFrame:
     propagation, then the pointer jump over the SAME round's
     post-propagation labels, changed = (label < round-start label),
     break at changed == 0, raise past ``max_iter`` — so convergence
-    behavior (including the ADVICE r8 verification-round semantics)
-    is indistinguishable from the distributed loop, and the labeling
-    is the identical min-reachable-id fixpoint."""
+    behavior (including the extra verification round) is
+    indistinguishable from the distributed loop, and the labeling is
+    the identical min-reachable-id fixpoint."""
     rows = sym.collect()
     nbrs: dict = {}
     for r in rows:
@@ -214,18 +214,6 @@ def _driver_cc(sym: DataFrame, max_iter: int) -> DataFrame:
     )
 
 
-def connected_components_jump(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 12,
-) -> DataFrame:
-    """Alias of :func:`connected_components` (r9: the pointer-jumping
-    step was folded into the main operator per the r8 plan; kept so
-    existing callers and the r8-verified name keep working)."""
-    return connected_components(edges, src, dst, max_iter)
-
-
 def grouped_connected_components(
     edges: DataFrame,
     group_col: str,
@@ -243,7 +231,7 @@ def grouped_connected_components(
     labeling is identical to ``connected_components`` run on the same
     edges. Scale contract: one group's edge list must fit in one task
     — true when the grouping is a real cluster assignment (bounded
-    cluster size); for unbounded groups use the iterative variants.
+    cluster size); for unbounded groups use :func:`connected_components`.
     """
     import pandas as pd
 
@@ -278,13 +266,10 @@ def pagerank(
     weight: str | None = None,
     damping: float = 0.85,
     n_iter: int = 5,
-    checkpoint_every: int = 0,
-    materialize: bool = True,
 ) -> DataFrame:
     """Weighted PageRank with uniform dangling-mass redistribution,
     run for a FIXED ``n_iter`` power iterations (no convergence
-    action — an oracle can unroll the identical iterations; with
-    ``materialize=False`` the whole computation is one lazy plan):
+    action — an oracle can unroll the identical iterations):
 
         r'(v) = (1-d)/N + d * (sum_{u->v} r(u) * w(u,v)/out_w(u)
                                + dangling_mass / N)
@@ -300,32 +285,22 @@ def pagerank(
 
     — a 1-row aggregate over the (in-degree-bounded) contribution
     table, not an anti-join over ranks. That makes the contribution
-    table the ONLY per-iteration state: with ``materialize`` it
-    checkpoints once per iteration (tiny — one row per in-linked
-    node) and everything else derives lazily at constant plan depth.
-    Every scalar (node count, conserved dangling mass) reaches the
-    plan as a broadcast 1-row aggregate, never a ``collect``. At web
-    scale, partition ``edges`` by ``src`` once upfront so every
-    iteration's join reuses the layout; ``checkpoint_every``
-    checkpoints the derived rank vector every k iterations and
-    applies ONLY when the per-iteration contrib checkpoint is
-    disabled (``materialize=False``) — with ``materialize=True`` the
-    plan depth is already constant, so the rank checkpoint would be
-    pure duplicate work and is skipped (ADVICE r6). With both at
-    0/False the whole computation is one lazy plan growing linearly
-    in ``n_iter``.
+    table the ONLY per-iteration state: it is checkpointed once per
+    iteration (tiny — one row per in-linked node) and everything else
+    derives lazily at constant plan depth. Every scalar (node count,
+    conserved dangling mass) reaches the plan as a broadcast 1-row
+    aggregate, never a ``collect``.
     """
     e = edges.select(
         F.col(src).alias("_src"),
         F.col(dst).alias("_dst"),
         (F.col(weight) if weight else F.lit(1.0)).cast("double").alias("_w"),
     )
-    if materialize:
-        # Materialize the (possibly expensive) upstream edge pipeline
-        # ONCE; nodes/out-weights/normalized edges below all derive
-        # from this table, so each of their checkpoint jobs reads the
-        # cached edge rows instead of re-running the pipeline.
-        e = e.localCheckpoint(eager=False)
+    # Materialize the (possibly expensive) upstream edge pipeline
+    # ONCE; nodes/out-weights/normalized edges below all derive from
+    # this table, so each of their checkpoint jobs reads the cached
+    # edge rows instead of re-running the pipeline.
+    e = e.localCheckpoint(eager=False)
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -336,38 +311,32 @@ def pagerank(
     en = e.join(outw, "_src").select(
         "_src", "_dst", (F.col("_w") / F.col("_ow")).alias("_p")
     )
-    if materialize:
-        # Spark does not dedupe common subplans: every iteration
-        # references nodes/en, so the pure-lazy form re-derives the
-        # edge list once per reference. Materialize the loop
-        # invariants once — at web scale this is "pre-partition the
-        # edge list and keep it", the standard PageRank layout. r13:
-        # the pre-partitioning is now LITERAL — en is hashed by _src
-        # once, so no iteration's rank join ever shuffles the edge
-        # side again, and contrib's key is renamed to `node` so the
-        # rank-update join reuses the hash(node)/hash(_dst)
-        # partitionings both sides already carry (guide §2.4;
-        # measured 3.46 -> 2.85 s on the 5-iteration sf0.1 query,
-        # value-identical output).
-        nodes = nodes.localCheckpoint(eager=False)
-        en = en.repartition("_src").localCheckpoint(eager=False)
+    # Spark does not dedupe common subplans: every iteration references
+    # nodes/en, so the lazy form would re-derive the edge list once per
+    # reference. Materialize the loop invariants once — "pre-partition
+    # the edge list and keep it", the standard PageRank layout. en is
+    # hashed by _src once, so no iteration's rank join shuffles the
+    # edge side again, and contrib's key is renamed to `node` so the
+    # rank-update join reuses the hash(node)/hash(_dst) partitionings
+    # both sides already carry (measured 3.46 -> 2.85 s on the
+    # 5-iteration sf0.1 query, value-identical output).
+    nodes = nodes.localCheckpoint(eager=False)
+    en = en.repartition("_src").localCheckpoint(eager=False)
 
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", (F.lit(1.0) / F.col("_n")).alias("rank")
     )
-    for i in range(n_iter):
+    for _ in range(n_iter):
+        # The only per-iteration job: one shuffle join + partial agg,
+        # one row per in-linked node. ranks below derives from THIS
+        # table lazily, so plan depth stays constant without ever
+        # materializing the rank vector.
         contrib = (
             ranks.join(en, ranks.node == en._src)
             .groupBy("_dst")
             .agg(F.sum(F.col("rank") * F.col("_p")).alias("_contrib"))
             .withColumnRenamed("_dst", "node")
-        )
-        if materialize:
-            # The only per-iteration job: one shuffle join + partial
-            # agg, one row per in-linked node. ranks below derives
-            # from THIS table lazily, so plan depth stays constant
-            # without ever materializing the rank vector.
-            contrib = contrib.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
         # Mass conservation: sum(r) == 1 every iteration and each
         # source's outgoing p sums to 1, so the rank mass that did NOT
         # arrive as a contribution is exactly the dangling mass.
@@ -393,12 +362,6 @@ def pagerank(
             )
         )
         record_loop_leg("pagerank.leg", ranks)
-        if (
-            checkpoint_every
-            and not materialize
-            and (i + 1) % checkpoint_every == 0
-        ):
-            ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -448,8 +411,8 @@ def oriented_edges(
     caller can materialize it ONCE: :func:`triangles_of_oriented`
     reads it three times (both wedge legs + the closure semi-join),
     and without a checkpoint Catalyst re-executes the two degree
-    joins per consumer (r13: the sf0.1 plan held the identical
-    4-exchange subtree three times)."""
+    joins per consumer (the sf0.1 plan held the identical 4-exchange
+    subtree three times)."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if deg is None:
         deg = (
@@ -507,18 +470,17 @@ def label_propagation(
     label ASC, the same deterministic winner as a sorted window but
     with map-side partial aggregation and no per-partition sort.
 
-    r14 (VERDICT r13 item 5): NO per-round checkpoint — the label
-    state is referenced exactly ONCE per round (the message join), so
-    the unrolled lineage grows LINEARLY in ``rounds`` (unlike CC and
-    pagerank, whose per-round state is read twice and would double
-    the plan per un-checkpointed round). The whole loop is one lazy
-    plan: one driver round-trip instead of ``rounds`` blocking
-    localCheckpoint materializations (each of which stalled the
-    driver while AQE materialized every stage below it — the
-    mechanism behind the flat 8->32-core scaling of the loop
-    queries). All aggregates are integer counts and struct-MIN, so
-    the values are partitioning-independent; only the final state is
-    checkpointed, for consumers that read it more than once.
+    NO per-round checkpoint — the label state is referenced exactly ONCE
+    per round (the message join), so the unrolled lineage grows LINEARLY
+    in ``rounds`` (unlike CC and pagerank, whose per-round state is read
+    twice and would double the plan per un-checkpointed round). The
+    whole loop is one lazy plan: one driver round-trip instead of
+    ``rounds`` blocking localCheckpoint materializations (each of which
+    stalled the driver while AQE materialized every stage below it — the
+    mechanism behind the flat 8->32-core scaling of the loop queries).
+    All aggregates are integer counts and struct-MIN, so the values are
+    partitioning-independent; only the final state is checkpointed, for
+    consumers that read it more than once.
     """
     nbr = edges.select(
         F.col(src).alias("node"), F.col(dst).alias("nb")
@@ -528,10 +490,9 @@ def label_propagation(
     # labels: without materialization the upstream EDGES pipeline
     # (often itself a banded self-join) re-executes ~2x per round —
     # the same reason connected_components checkpoints `sym` and
-    # pagerank its edge table (r10 review). r13: pre-partitioned by
-    # the join key ONCE, so no round ever shuffles the edge side
-    # again (guide §2.4 two operations keyed the same way share one
-    # exchange).
+    # pagerank its edge table. Pre-partitioned by the join key ONCE,
+    # so no round ever shuffles the edge side again (two operations
+    # keyed the same way share one exchange).
     ).repartition("nb").localCheckpoint(eager=False)
     lbl = (
         nbr.select("node")
@@ -543,7 +504,7 @@ def label_propagation(
             lbl.withColumnRenamed("node", "nb"), "nb"
         ).select("node", "label")
         lbl = (
-            # r13: ONE exchange per round instead of three — hash by
+            # ONE exchange per round instead of three — hash by
             # `node` once; HashPartitioning(node) satisfies the
             # clustered distribution of BOTH downstream aggregates
             # (node is a prefix subset of (node, label)), so neither

@@ -155,43 +155,3 @@ def kmeans_assign(
 ) -> DataFrame:
     """(id, cluster) after Lloyd iterations with deterministic init."""
     return kmeans_fit(vectors, k, max_iter, tol, id_col, vec_col)[0]
-
-
-def inertia(
-    vectors: DataFrame,
-    assignments: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> float:
-    """Sum of squared distances to assigned centroids (quality metric).
-
-    ONE job: per-cluster distance expressions are chained into a
-    single CASE projection and summed in one aggregate — k sequential
-    filter+agg jobs would rescan the (uncached) vectors join k times.
-    """
-    joined = vectors.join(assignments, id_col).select(
-        F.col(vec_col).alias("embedding"), "cluster"
-    )
-
-    def d2(cent: list[float]) -> F.Column:
-        cent_col = F.array(*[F.lit(float(v)) for v in cent])
-        return F.aggregate(
-            F.zip_with(
-                F.col("embedding"), cent_col,
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    expr = None
-    for ci, cent in enumerate(centroids):
-        branch = d2(cent)
-        expr = (
-            F.when(F.col("cluster") == ci, branch)
-            if expr is None
-            else expr.when(F.col("cluster") == ci, branch)
-        )
-    row = joined.agg(F.sum(expr)).first()
-    return row[0] or 0.0

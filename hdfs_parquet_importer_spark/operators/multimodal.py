@@ -77,19 +77,6 @@ DECODED_MEDIA_SCHEMA = _struct(
     ("n_values", _LONG), ("value_sum", _LONG), ("value_min", _LONG),
     ("value_max", _LONG),
 )
-FEATURES_SCHEMA = _struct(
-    ("media_id", _LONG), ("feature", T.ArrayType(T.FloatType()))
-)
-FRAMES_SCHEMA = _struct(
-    ("media_id", _LONG),
-    ("frame_idx", _INT),
-    ("frame_crc32", _LONG),
-    # Hex of the raw frame bytes — the cross-engine-checkable
-    # fingerprint (DuckDB has sha256 but not crc32, and SGMM frame
-    # slots ARE sha256 digests, so an oracle can re-derive this column
-    # from the generative formula).
-    ("frame_hex", _STR),
-)
 _PAYLOAD_SCHEMA = _struct(("media_id", _LONG), ("payload", _BIN))
 JPEG_ROUNDTRIP_SCHEMA = _struct(
     ("media_id", _LONG), ("width", _LONG), ("height", _LONG),
@@ -1942,46 +1929,6 @@ def decode_image(df: DataFrame) -> DataFrame:
     return _map_rows(df, DECODED_SCHEMA, _decode_image_row, "media_id", "payload")
 
 
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature extraction stub: payload bytes -> deterministic
-    unit-normalized float vector (sha256-expanded). The real path
-    would run a vision/audio encoder per Arrow batch (the batch loop
-    is exactly where a GPU model call goes)."""
-
-    def row(mid, payload) -> list[tuple]:
-        import numpy as np
-
-        raw = b""
-        seed = hashlib.sha256(bytes(payload))
-        while len(raw) < 4 * dim:
-            seed.update(b"x")
-            raw += seed.digest()
-        v = np.frombuffer(raw[: 4 * dim], dtype=np.uint32).astype(np.float64)
-        v = (v / 2**32) * 2.0 - 1.0
-        v /= np.linalg.norm(v) or 1.0
-        return [(mid, v.astype(np.float32).tolist())]
-
-    return _map_rows(df, FEATURES_SCHEMA, row, "media_id", "payload")
-
-
-def frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame sampling for video payloads: one output row per sampled
-    frame (1-to-many inside ``mapInPandas``). Frames are fixed-size
-    32-byte slots in the fake container; the real path would seek with
-    a demuxer. Rows multiply inside the task — no shuffle."""
-
-    def row(mid, payload) -> list[tuple]:
-        b = bytes(payload)
-        body = b[_HDR_SIZE:] if b[:4] == _MAGIC else b
-        frames = (
-            (idx, body[idx * 32: (idx + 1) * 32])
-            for idx in range(0, max(1, len(body) // 32), every_n)
-        )
-        return [(mid, idx, zlib.crc32(f), f.hex()) for idx, f in frames]
-
-    return _map_rows(df, FRAMES_SCHEMA, row, "media_id", "payload")
-
-
 def png_encode_pixels(df: DataFrame) -> DataFrame:
     """Encode stage: (media_id, width, height, pixels raw-gray bytes or
     int array) -> (media_id, payload PNG bytes), Arrow-batched. The
@@ -1992,21 +1939,6 @@ def png_encode_pixels(df: DataFrame) -> DataFrame:
         _PAYLOAD_SCHEMA,
         lambda mid, w, h, px: [(mid, encode_png_gray(_raw_gray(px), int(w), int(h)))],
         "media_id", "width", "height", "pixels",
-    )
-
-
-def jpeg_encode_pixels(df: DataFrame, quality: int = 90) -> DataFrame:
-    """Encode stage: (media_id, width, height, pixels raw-gray bytes or
-    int array) -> (media_id, payload baseline-JPEG bytes),
-    Arrow-batched — the lossy twin of :func:`png_encode_pixels`. Rows
-    never leave their task."""
-
-    def row(mid, w, h, px) -> list[tuple]:
-        jpeg = encode_jpeg_gray(_raw_gray(px), int(w), int(h), quality=quality)
-        return [(mid, jpeg)]
-
-    return _map_rows(
-        df, _PAYLOAD_SCHEMA, row, "media_id", "width", "height", "pixels"
     )
 
 

@@ -104,7 +104,7 @@ def top_eigenvector(
         record_loop_leg("pca_power.leg", v)
         # EAGER: v is a normalized double-sum vector read by the
         # next iteration AND the Rayleigh quotient — a recompute
-        # race could hand consumers ulp-different vectors (r13).
+        # race could hand consumers ulp-different vectors.
         v = v.localCheckpoint(eager=True)
     # Rayleigh quotient lambda = v' A v.
     av = (

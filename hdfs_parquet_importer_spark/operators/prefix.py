@@ -34,7 +34,7 @@ _BASE = "__psbase"
 _ONE = "__psone"
 # Long.MIN sentinel for NULL order keys: sorts before every real
 # bucket/cell id, exactly where the naive window's NULLS FIRST puts a
-# NULL (shared by prefix_sums and banded_range_agg — r11 review).
+# NULL (shared by prefix_sums and banded_range_agg).
 _NULL_SENTINEL = -(2**63)
 
 
@@ -61,7 +61,7 @@ def prefix_sums(
     with bucketing. Monotonicity is what lets per-bucket sums compose
     into a global prefix.
 
-    ``group_cols`` (VERDICT r7 item 4) makes the prefix PER GROUP —
+    ``group_cols`` makes the prefix PER GROUP —
     the running sum restarts for each distinct group-key value, i.e.
     ``SUM(v) OVER (PARTITION BY group ORDER BY order)`` without a hot
     group ever serializing through one task: the local phase
@@ -96,8 +96,7 @@ def prefix_sums(
     # out_cols may shadow THEIR OWN value column (in-place prefix) but
     # not a DIFFERENT one: out_cols[0] == value_cols[1] would make the
     # i=1 offset read the i=0 result instead of the original values —
-    # silently wrong. Duplicate out_cols likewise overwrite (r11
-    # review).
+    # silently wrong. Duplicate out_cols likewise overwrite.
     if len(set(out_cols)) != len(out_cols):
         raise ValueError(f"duplicate out_cols: {list(out_cols)!r}")
     for i, oc in enumerate(out_cols):
@@ -195,10 +194,10 @@ def prefix_sum(
 def adaptive_bucket_count(
     n_rows: int, target_rows: int = 2048, max_buckets: int = 256
 ) -> int:
-    """Scale-aware bucket count for :func:`prefix_sums` (VERDICT r8
-    item 5): a constant 256-way bucketing makes tiny inputs pay the
-    full two-phase machinery (5 exchanges at sf0.1 for
-    mix_domain_quota, doubling its bench cell), while
+    """Scale-aware bucket count for :func:`prefix_sums`: a constant
+    256-way bucketing makes tiny inputs pay the full two-phase
+    machinery (5 exchanges at sf0.1 for mix_domain_quota, doubling
+    its bench cell), while
     ``n_rows // target_rows`` keeps per-bucket work ~``target_rows``
     rows and collapses to 1 bucket — i.e. the plain partitioned
     window — when the input is small. Output VALUES are independent
@@ -313,7 +312,7 @@ def banded_range_agg(
         # is NULL in non-ANSI Spark) — the exact single-reducer
         # collapse this operator exists to avoid — and a negative
         # width inverts the frame and the mirroring direction; both
-        # previously failed silently (r11 review).
+        # would otherwise fail silently.
         raise ValueError(
             f"width must be a positive whole number (rangeBetween takes "
             f"long boundaries); scale the order column instead: {width!r}"
@@ -365,7 +364,7 @@ def pack_sequences(
     if int(budget) < 1:
         # budget=0 would make every bin_id NULL (non-ANSI div-by-zero)
         # and a downstream groupBy would collapse the corpus into one
-        # bogus bin with no error (r11 review).
+        # bogus bin with no error.
         raise ValueError(f"budget must be >= 1 token, got {budget}")
     with_off = prefix_sum(df, order_col, tokens_col, bucket, out_col="offset")
     return with_off.withColumn(

@@ -1,4 +1,4 @@
-"""Model-scored quality filtering (VERDICT r9 item 6): a small linear
+"""Model-scored quality filtering: a small linear
 classifier — hashed n-gram features -> weight vector -> sigmoid —
 broadcast to every executor and evaluated as a pure Catalyst dot
 product. The classifier-based filter stage of CCNet (Wenzek et al.
@@ -50,7 +50,7 @@ def hashed_doc_features(
     is computed per exploded token and grouped directly on (doc_id, b)
     — the intermediate (doc_id, term, n) grouping was a second full
     shuffle+agg whose term granularity no consumer of this table
-    reads (r13; the sum over terms of a bucket equals the direct
+    reads (the sum over terms of a bucket equals the direct
     occurrence count, so values are identical). Map-side partial
     aggregation reduces each task to <=256 rows per doc before the
     exchange.
@@ -59,9 +59,9 @@ def hashed_doc_features(
     ``source``) to keep on the output rows: grouping additionally on a
     column the id determines yields the IDENTICAL (doc_id, b, n) rows
     plus the carried value, and spares every consumer a join back to
-    the doc table for it (r13, guide §2.4 remove shuffles outright).
+    the doc table for it.
 
-    ``tokens_df`` (r14): a pre-built :func:`~hdfs_parquet_importer_
+    ``tokens_df``: a pre-built :func:`~hdfs_parquet_importer_
     spark.operators.tokenize.doc_tokens`-shaped frame (doc_id, *carry,
     tokens) to derive the features from instead of tokenizing
     ``docs`` — the tokenize-once-upstream contract (tokenize.py module
@@ -96,13 +96,13 @@ def dsir_log_weights(doc_b: DataFrame, target) -> DataFrame:
     ``doc_b`` is the (doc_id, b, n) hashed-feature table (plus any
     columns ``target`` needs); ``target`` is a boolean Column
     selecting the curated-exemplar rows. Shared by
-    ``quality_dsir_weights`` and ``eval_dsir_recall`` (r13) so the
+    ``quality_dsir_weights`` and ``eval_dsir_recall`` so the
     scorer and its eval measure the SAME weight definition
     structurally — the same single-definition contract as
-    ``hashed_doc_features`` (r10 review). Both aggregates are
+    ``hashed_doc_features``. Both aggregates are
     fixed-width (256 rows); the totals ride a 1-row broadcast.
 
-    r13: target and raw bucket totals come from ONE conditional-sum
+    Target and raw bucket totals come from ONE conditional-sum
     pass over ``doc_b`` (the nb_linear_classifier shape) instead of
     two aggregations joined back together — a bucket with no target
     rows sums to 0, exactly what the old left join coalesced."""
@@ -138,7 +138,7 @@ def nb_linear_classifier(
     join plus a 1-row bias broadcast. V is the count of buckets
     PRESENT in the corpus (matches the DSIR smoothing convention).
 
-    ``pos_col`` (r13): a boolean Column evaluable directly on
+    ``pos_col``: a boolean Column evaluable directly on
     ``feats`` (e.g. over a carried ``source`` column from
     :func:`hashed_doc_features`). When given, the per-bucket
     aggregation skips the (feats x labels) doc_id join entirely —
@@ -186,7 +186,7 @@ def score_documents(
     validate: bool = True,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(doc_id, *carry, n_tokens, margin, prob). ``carry`` (r13)
+    """(doc_id, *carry, n_tokens, margin, prob). ``carry``
     propagates per-document columns already riding ``feats`` (see
     :func:`hashed_doc_features`) through the doc-level aggregate —
     grouping additionally on a column doc_id determines leaves the
@@ -219,7 +219,7 @@ def score_documents(
     downstream. Callers composing lazy plans on the trusted
     closed-form path (model fresh from :func:`nb_linear_classifier`
     in the same lineage) can pass ``validate=False`` to keep the
-    build fully lazy — no checkpoint, no driver job (r10 ADVICE)."""
+    build fully lazy — no checkpoint, no driver job."""
     margin = (
         F.sum(F.col("n") * F.coalesce(F.col("w"), F.lit(0.0))) / F.sum("n")
     )
@@ -234,7 +234,7 @@ def score_documents(
         # table (bad offline load) would make bias NULL and prob NULL
         # for every document, and the margin>0 filter would then
         # silently drop the whole corpus; inconsistent per-row biases
-        # mean the table is not one model (r10 review).
+        # mean the table is not one model.
         biases = {
             r["bias"] for r in model.select("bias").distinct().collect()
         }

@@ -3,24 +3,24 @@ operator: cluster the embedding space, find near-duplicate pairs ONLY
 within a cluster, connected-components the edge list, keep the min-id
 canonical per component.
 
-The CLUSTER COUNT is the load-bearing production knob (VERDICT r9
-item 4): the pair stage is quadratic per cluster, so total pair work
-is sum(n_b^2) ~ n^2 / 2^bits for balanced buckets. Production scales
-clusters with corpus size — constant expected cluster size gives
-LINEAR total pair work. This module exposes that knob as ``bits``
-(signed-random-projection bucket width); the registered
-``dedup_semdedup`` query pins ``bits=3`` so its DuckDB oracle replays
-the identical buckets, and ``tests/test_semdedup_knob.py`` verifies
-value-level correctness at two knob settings plus the refinement
-property (finer buckets only ever REMOVE candidate pairs, because the
-b-bit bucket is a prefix of the (b+k)-bit bucket).
+The CLUSTER COUNT is the load-bearing production knob: the pair stage is
+quadratic per cluster, so total pair work is sum(n_b^2) ~ n^2 / 2^bits
+for balanced buckets. Production scales clusters with corpus size —
+constant expected cluster size gives LINEAR total pair work. This module
+exposes that knob as ``bits`` (signed-random-projection bucket width);
+the registered ``dedup_semdedup`` query pins ``bits=3`` so its DuckDB
+oracle replays the identical buckets, and
+``tests/test_semdedup_knob.py`` verifies value-level correctness at two
+knob settings plus the refinement property (finer buckets only ever
+REMOVE candidate pairs, because the b-bit bucket is a prefix of the
+(b+k)-bit bucket).
 
 The SRP axes are fixed dims 0..bits-1 (not learned k-means centroids)
 precisely so both engines replay the bucketing bit-identically; swap
 in ``operators/kmeans.assign`` for learned clusters — the downstream
 shape (bucket equi-join, grouped CC) is unchanged.
 
-Scale notes (measured r9, preserved here from queries/llm.py):
+Scale notes (measured at sf0.1):
 vectors are normalized ONCE scan-side so the quadratic pair stage
 folds a single dot product; ``localCheckpoint`` MATERIALIZES that
 projection — without it Catalyst inlines the per-element lambda
@@ -65,7 +65,7 @@ def srp_bucket(vec: Column, bits: int) -> Column:
     # fall through to a silent NULL bucket — the exact silent-
     # exclusion mode this guard exists to kill. NULL ELEMENTS within
     # the first `bits` dims null the bucket the same way, so they
-    # raise too (r10 review).
+    # raise too.
     bad = (
         vec.isNull()
         | (F.size(vec) < bits)
@@ -161,7 +161,7 @@ def semdedup(
     bucket equi-joins; CC is ONE grouped union-find pass (components
     cannot span buckets by construction — no iterative fixpoint).
 
-    RECALL TRADE (r10 verdict): dedup is cluster-scoped by
+    RECALL TRADE: dedup is cluster-scoped by
     definition, so raising ``bits`` trades recall for cost — a
     near-dup pair split across two finer buckets is simply not a
     candidate. The knob study (tools/semdedup_knob_study.py,
@@ -178,9 +178,8 @@ def semdedup(
     # ``precomputed_edges`` lets a caller that already materialized
     # the (checkpointed) edge frame — e.g. the knob study, which
     # counts it for the recall table — feed it straight into the CC
-    # stage instead of re-running the quadratic pair scan (r11
-    # ADVICE). Must be the output of :func:`semdedup_edges` at the
-    # same knob settings.
+    # stage instead of re-running the quadratic pair scan. Must be the
+    # output of :func:`semdedup_edges` at the same knob settings.
     edges = precomputed_edges
     if edges is None:
         edges = semdedup_edges(

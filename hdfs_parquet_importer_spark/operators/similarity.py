@@ -125,7 +125,7 @@ def salted_topk(
         # every candidate of a query would collapse into ONE window
         # partition — the single-reducer funnel this function exists
         # to prevent, silently, with correct-looking results. Fail
-        # fast instead (r10 review).
+        # fast instead.
         raise TypeError(
             f"salted_topk: {id_col} must be numeric for the salt "
             f"modulus, got {id_type.simpleString()}; hash non-numeric "
@@ -176,8 +176,8 @@ def lsh_tables(
     index WRITER (build_lsh_index) and the index READER
     (query_lsh_index). Writer and reader must compute bit-identical
     buckets forever or probes silently miss and recall collapses with
-    no error; before r10 the expression was copy-pasted at all three
-    sites, which is exactly the drift this helper removes."""
+    no error; one definition shared by all three sites rules out that
+    drift."""
     return F.array(*[
         F.struct(
             F.lit(t).alias("tbl"),
@@ -407,20 +407,20 @@ def query_lsh_index(
     # must fail loudly — probing with planes of the wrong dim would
     # compute unrelated buckets and the cosine over zip_with of
     # mismatched arrays null-pads, so the job would SUCCEED with
-    # garbage neighbors (r10 review — the same guard lsh_topk has).
+    # garbage neighbors (the same guard lsh_topk has).
     index = spark.read.parquet(path)
     qdim = _vec_dim(queries, query_vec_col)
     # First NON-NULL vector, not first row: a stray NULL row that
     # parquet happens to return first must not silently bypass the
-    # encoder-mismatch guard (r11 review of the r10-ADVICE fix).
+    # encoder-mismatch guard.
     head = index.filter(F.col(vec_col).isNotNull()).select(vec_col).first()
     if head is None:
         # Genuinely empty index (no non-null vectors): stay queryable
         # — probe with the query-side dim so the plan below runs; the
         # candidate join against the empty index yields an empty
         # top-k with the normal schema instead of the opaque
-        # "cannot infer vector dim" raise (r10 ADVICE: the dim
-        # guard must not break the zero-rows edge).
+        # "cannot infer vector dim" raise (the dim guard must not
+        # break the zero-rows edge).
         dim = qdim
     else:
         dim = len(head[0])

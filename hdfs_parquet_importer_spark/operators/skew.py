@@ -105,7 +105,7 @@ _MERGE_BY_FN = {
 def _merge_fn(name: str, expr: Column):
     """Resolve — and ENFORCE — the phase-2 merge for a partial expr.
 
-    The mergeable-aggregate contract (ADVICE r8 item 4): a caller
+    The mergeable-aggregate contract: a caller
     passing ``avg``/``count(DISTINCT)``-style partials used to get
     silently wrong results (the old merge summed whatever came out of
     phase 1). Validation happens here, at the merge-resolution step:
@@ -120,7 +120,7 @@ def _merge_fn(name: str, expr: Column):
     # Introspection FAILURE (no _jc/node in this environment, e.g.
     # Spark Connect) must stay distinct from a non-mergeable verdict:
     # silently rejecting F.sum there would break every salted_agg
-    # caller with a misleading message (r9 review).
+    # caller with a misleading message.
     if not hasattr(expr, "_jc"):
         raise TypeError(
             f"salted_agg cannot validate partial {name!r} in this "

@@ -154,12 +154,6 @@ def kgram_min_from_tokens(toks: Column, k: int = 5) -> Column:
     return F.when(count >= 1, F.array_min(grams))
 
 
-def kgram_min_fingerprint(col: Column, k: int = 5) -> Column:
-    """Convenience/compat form over a raw text column (slow path —
-    prefer projecting ``tokens(col)`` first)."""
-    return kgram_min_from_tokens(tokens(col), k)
-
-
 # Rabin-Karp rolling-hash parameters: base 31, Mersenne prime modulus.
 # acc stays < 2^31, so acc*31 + codepoint < 2^36 — no BIGINT overflow
 # even under ANSI mode, and the identical fold is expressible in

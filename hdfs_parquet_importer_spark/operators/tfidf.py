@@ -34,7 +34,6 @@ def tfidf_weights(
     id_col: str,
     text_col: str,
     max_df_frac: float = 0.79,
-    materialize: bool = True,
 ) -> DataFrame:
     """(id, term, w) sparse tf-idf vectors: w = tf * ln(N / df).
 
@@ -42,11 +41,11 @@ def tfidf_weights(
     corpus size N and per-term df enter the plan as aggregates — the
     scalar N via a broadcast 1-row cross join, never a collect.
 
-    ``materialize`` localCheckpoints the term-frequency table: three
-    consumers read it (corpus size, document frequency, the weights
-    themselves), and Spark does not dedupe common subplans, so the
-    pure-lazy form re-tokenizes and re-aggregates the corpus once per
-    consumer (measured: 23 exchanges vs 8). At 100 TB the tf table is
+    The term-frequency table is localCheckpointed: three consumers
+    read it (corpus size, document frequency, the weights themselves),
+    and Spark does not dedupe common subplans, so the pure-lazy form
+    re-tokenizes and re-aggregates the corpus once per consumer
+    (measured: 23 exchanges vs 8). At 100 TB the tf table is
     materialized once for exactly this reason — same contract as the
     fingerprint checkpoint in dedup_simhash.
     """
@@ -55,9 +54,7 @@ def tfidf_weights(
         .filter(F.col("term") != "")
         .groupBy("id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    if materialize:
-        tf = tf.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     n_df = tf.agg(F.countDistinct("id").cast("double").alias("_n"))
     df = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
     return (

@@ -1,4 +1,4 @@
-"""Shared tokenized-corpus intermediates (VERDICT r6 item 8).
+"""Shared tokenized-corpus intermediates.
 
 Six registered queries (BM25, tf-idf, vocab coverage, CCNet buckets,
 bigram perplexity, source overlap) each start by tokenizing
@@ -34,7 +34,7 @@ the shapes follow the public inverted-index/posting-list literature.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hdfs_parquet_importer_spark.operators import dedup as D
@@ -50,8 +50,8 @@ def doc_tokens(
     document, empty tokens dropped. Order-preserving: n-gram consumers
     slice this array. ``carry`` names per-document columns kept on the
     output row so downstream aggregates can group on them instead of
-    joining them back by id (r13, guide §2.4: a carried column that is
-    a function of the id adds zero groups and removes a shuffle)."""
+    joining them back by id (a carried column that is a function of
+    the id adds zero groups and removes a shuffle)."""
     return docs.select(
         F.col(id_col),
         *[F.col(c) for c in carry],

@@ -1,5 +1,5 @@
 """URL canonicalization — the standard pre-dedup stage of a
-crawl-scale corpus pipeline (VERDICT r8 item 8).
+crawl-scale corpus pipeline.
 
 Crawl corpora address the same page many ways: scheme/host case,
 explicit default ports, duplicate slashes, trailing slashes, tracking
@@ -37,8 +37,8 @@ carries RFC 3986 userinfo (``user:pw@host``) pass through for the
 same reason: ``_HOST_RE`` reads up to the first ``:``, which inside a
 userinfo authority is the *username* — two different hosts behind the
 same username would collapse onto one canonical key and the dedup
-survivor policy would silently drop documents from a different host
-(ADVICE r9). Real crawls contain such URLs but they are rare and
+survivor policy would silently drop documents from a different host.
+Real crawls contain such URLs but they are rare and
 usually non-content (auth endpoints), so keeping them distinct is the
 safe trade.
 
@@ -115,7 +115,7 @@ def canonicalize_url(url: Column) -> Column:
     # such inputs would collapse onto the shared key ':///...'. A
     # userinfo authority ('user:pw@host') also passes through — the
     # host split above would otherwise canonicalize two DIFFERENT
-    # hosts behind one username to the same key (ADVICE r9).
+    # hosts behind one username to the same key.
     return F.when(
         url.rlike(_ABS_RE) & ~hostport.contains("@"), canon
     ).otherwise(url)

@@ -36,7 +36,7 @@ def quantize(col: Column, lo: float, hi: float, bits: int) -> Column:
     through ``zorder_by``'s auto min/max) are an error: the division
     by span would yield NaN, and NaN-is-largest ordering would
     silently clip EVERY row to the top cell — garbage curve bits with
-    no signal that the dimension is dead (ADVICE r4). A constant
+    no signal that the dimension is dead. A constant
     column carries no layout information; drop it from ``cols``.
     """
     import math

@@ -53,144 +53,84 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return wrap
 
 
-# ROTATION CONTRACT (stated as policy per ADVICE r5 item 4, no more
-# per-round ad-hoc argument):
+# ROTATION CONTRACT. The external driver records a correctness row for
+# only the FIRST 50 registrations (registry() emits this window first),
+# so driver coverage is cumulative across rotations. Slot priority,
+# highest first:
 #
-# The external driver records a correctness row for only the FIRST 50
-# registrations each round (CORRECTNESS_r01.json stopped at exactly 50
-# entries, in registration order). This tuple pins that window; driver
-# coverage is CUMULATIVE across rounds. Slot priority, highest first:
+#   P1. Any query whose Spark code OR oracle SQL changed since the last
+#       rotation (a changed query may never ship on a stale green).
+#   P2. Any query red in the latest CORRECTNESS file.
+#   P3. Queries that have NEVER held a driver row, oldest registration
+#       first. A new registration may take a slot left over once P1,
+#       P2 and the committed queue are seated.
+#   P4. Stale greens, oldest driver row first, spread across families.
+#   P5. A representative of every module that would otherwise have no
+#       row (tests/test_smoke.py::test_driver_window_covers_every_family).
 #
-#   P1. Any query whose Spark code OR oracle SQL changed this round
-#       (a changed query may never ship on a stale green).
-#   P2. Any query red in the previous round's CORRECTNESS file.
-#   P3. Queries that have NEVER held a driver row (registration
-#       backlog), oldest registration first.
-#   P4. Value-neutral-change cohorts (e.g. a shared plan-heuristic
-#       tweak) and stale greens, oldest driver round first.
-#   P5. Per-module family representatives if a required module would
-#       otherwise have no row this round
-#       (tests/test_smoke.py::test_driver_window_covers_every_family).
-#
-# New registrations land AFTER the window (registry() emits window
-# first) and queue at P3 for the NEXT round — so each round may add at
-# most ~50 queries without outrunning driver verification. Amendment
-# (r8): a new registration MAY take a leftover slot in its own round
-# once P1/P2 and the committed queue are seated (the invariant is
-# never-outrun-verification, not the delay itself). Everything
-# outside the window holds its green from the round its code last
-# changed, and the FULL registry is re-gated locally every pytest run
-# (tests/test_oracle_gate.py / tools/check_oracle.py, driver-parity
-# pandas fetch), so rotation never leaves an edited query unverified.
+# Everything outside the window keeps the green of its last driver row,
+# and the FULL registry is re-gated locally on every test run
+# (tests/test_oracle_gate.py, tools/check_oracle.py), so rotation never
+# leaves an edited query unverified. The queue for the next rotation is
+# kept in ROADMAP.md.
 _DRIVER_WINDOW: tuple[str, ...] = (
-    # -- Round 13 rotation: executes the r12-committed queue, AMENDED
-    # for the P1s this round's own changes created (P1 outranks the
-    # committed fills — a changed query never ships on a stale
-    # green). The r13 changes: the corpus-wide string-key sweep
-    # (VERDICT r12 item 4) converted 8 internal md5 join/groupBy keys
-    # to xxhash64 longs; quality_dsir_weights' weight table moved to
-    # the shared operators/quality_clf.dsir_log_weights (value-
-    # identical, code changed); multimodal_video_framesample was
-    # REWRITTEN onto the real AVI/MJPEG container (item 5);
-    # decode_media's RIFF branch forked WAVE/AVI (so
-    # multimodal_png_roundtrip re-gates, the r12 decode_media
-    # precedent); and eval_dsir_recall is the r13 birth (item 6,
-    # leftover-slot amendment). Cost: 10 of the committed fills roll
-    # to r14 (5 func_* + 3 text_* + window_first_last r7 greens with
-    # family cover retained, and dedup_exact — llm keeps 15+ window
-    # rows), so the r7 drain completes at r14 instead of r13.
-    #
-    # (P1, committed at r12 close) xxhash64 gram keys since r9/r8
-    # greens:
-    "dedup_substring_span",
-    "corpus_contamination",
-    # (P1, r13 changes):
-    "multimodal_video_framesample",   # real AVI/MJPEG rewrite
-    "multimodal_png_roundtrip",       # decode_media RIFF fork
-    "quality_dsir_weights",           # shared dsir_log_weights
-    "eval_dedup_recall",              # xxhash64 truth join
-    "mix_source_dup_rate",            # xxhash64 fingerprint
-    "pipeline_corpus_prep",           # xxhash64 dedup fp
-    "dedup_incremental_batch",        # xxhash64 anti-join fp
-    "report_data_card",               # xxhash64 dup fp
-    # (a0/P3, committed) the 8 r12 births — the registry's only
-    # never-windowed queries before this round — registration order
-    # (four also carry r13 xxhash64/doc changes and so are P1 too):
-    "multimodal_jpeg_color_roundtrip",
-    "eval_semdedup_recall",
+    # P1: loop, dedup and quality-model changes not yet driver-checked.
+    "graph_label_propagation",
+    "dedup_semdedup",
+    "dedup_cluster_canonical",
+    "mix_quota_by_quality",
+    "quality_classifier_score",
+    "eval_classifier_quality",
+    # P1: consumers of the edited pagerank, tfidf_weights and
+    # connected_components operators.
+    "graph_pagerank",
+    "doc_tfidf_cosine_topk",
+    "dedup_clusters",
+    "fuzzy_name_clusters",
     "split_leakage_audit",
-    "eval_simhash_recall",
-    "dedup_span_removal",
-    "eval_dim_truncation_recall",
-    "eval_contamination_recall",
-    "multimodal_jpeg_progressive_roundtrip",
-    # (new, r13) DSIR held-out-split selection eval (VERDICT r12
-    # item 6) — leftover-slot amendment (r8):
-    "eval_dsir_recall",
-    # (new, r13 second pass) packing regret vs a provably-tight
-    # optimal bound (the OTHER uncovered claim VERDICT r12 item 6
-    # named) — window_first_last rolls to r14 to make room:
-    "eval_packing_regret",
-    # (P1, r13 second pass) one-pass checkpoint fix: the encode fold
-    # ran ~6x per execution through the union branches; values
-    # unchanged but code changed, so it re-gates. window_rank_dense
-    # rolls to r14 (windows keeps window_ntile_global + the three
-    # window_* llm rows):
-    "pack_strategy_waste",
-    # (P4, committed queue item a) 27 of the 35 remaining r7 greens
-    # (the 8 rolled: func_collation_lcase, func_conditional,
-    # func_date_arith, func_explode_outer, func_nullsafe_eq,
-    # text_df_top_terms, text_fingerprint, text_mean_token_df —
-    # functions keeps 3 reps below, llm keeps 15+):
-    "agg_modern_surface",
-    "ann_cosine_topk",
-    "ann_ivf",
-    "ann_lsh_bucketed",
-    "dedup_embedding_cosine",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "etl_array_parse",
-    "eval_langid_confusion",
-    "func_variant_parse",
-    "join_left_outer",
-    "mix_upsample_rare",
-    "report_cohort_ltv",
-    "setop_union",
-    "source_xml_parse",
-    "sql_pipe_syntax",
-    "stat_bootstrap_ci",
-    "stat_cusum_drift",
-    "stat_gini_coefficient",
-    "stat_mann_whitney",
-    "text_boilerplate_blocks",        # also P1: xxhash64 block keys
-    "text_perplexity_bigram",
-    "text_quality",
-    "window_ntile_global",
-    # (P5, committed queue item b) family reps the coverage gate
-    # requires (tpch / subqueries / events / pandas_surface have no
-    # rep above); dedup_exact, the queue's fifth fill, rolls to r14:
-    "q10_returned_items",
-    "agg_percentiles",
-    "events_funnel",
-    "arrow_grouped_stats",
+    # P4: the oldest driver greens.
+    "func_collation_lcase",
+    "func_conditional",
+    "func_date_arith",
+    "func_explode_outer",
+    "func_nullsafe_eq",
+    "text_df_top_terms",
+    "text_fingerprint",
+    "text_mean_token_df",
+    "window_first_last",
+    "window_rank_dense",
+    "dedup_exact",
+    # P4 next-oldest greens, P5 representatives first (arrow_map_norms
+    # is the pandas_surface representative).
+    "text_langid",
+    "embedding_kmeans",
+    "agg_cube",
+    "window_moving_avg",
+    "join_broadcast_dim",
+    "etl_date_enrich",
+    "q8_market_share",
+    "subq_global_avg_anti",
+    "stat_chi2_independence",
+    "arrow_map_norms",
+    "agg_approx_distinct",
+    "q9_product_profit",
+    "etl_upsert",
+    "func_higher_order",
+    "window_topk_per_group",
+    "text_tokens",
+    "tokenize_bpe_encode",
+    "pivot_status_by_year",
+    "fuzzy_name_pairs",
+    "agg_rollup",
+    "q13_customer_distribution",
+    "func_sql_udf",
+    "window_quartile_scalable",
+    "multimodal_decode_stats",
+    "pack_bpe_sequences",
+    "sample_systematic",
+    "agg_grouping_sets",
+    "q15_top_supplier",
 )
-# r14 QUEUE (committed at r13 close so the next rotation is
-# mechanical; cohort ages below are post-r13):
-# (P1) none known yet — any r14 code/oracle change seats first, as
-#     always;
-# (a) the 11 fills displaced by this round's P1/birth amendments
-#     (10 r7 greens + dedup_exact (r8)) — seating them first
-#     completes the r7 drain: func_collation_lcase,
-#     func_conditional, func_date_arith, func_explode_outer,
-#     func_nullsafe_eq, text_df_top_terms, text_fingerprint,
-#     text_mean_token_df, window_first_last, window_rank_dense,
-#     dedup_exact;
-# (b) the 35 oldest r8 greens, family-spread, P5 reps first — the
-#     list the r12 close note carried (text_langid, embedding_kmeans,
-#     agg_cube, window_moving_avg, join_broadcast_dim,
-#     etl_date_enrich lead it);
-# (c) leftover slots to r8/r9 greens by age.
 
 
 def registry() -> dict[str, Query]:

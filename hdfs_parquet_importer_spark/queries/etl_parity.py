@@ -143,7 +143,7 @@ ORDER BY p_partkey
     doc="O5 array-parse: '[a, b]' string -> array<string> with []/''/null "
     "edge rules. The array itself travels as array_join(tags, '|'): the "
     "driver canonicalizes results through pandas, which cannot hash a "
-    "raw list column (r1 err: unhashable type 'list'). n_tags keeps the "
+    "raw list column (unhashable type 'list'). n_tags keeps the "
     "'[]' -> [''] (size 1) vs '' -> [] (size 0) edge observable even "
     "though both join to the empty string.",
 )

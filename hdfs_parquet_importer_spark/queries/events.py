@@ -214,8 +214,8 @@ def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # No global orderBy: the driver's digest is order-insensitive and
     # this is raw join output that grows with event volume — the only
-    # thing a full sort would add here is a range exchange (r11
-    # review; aggregate-bounded outputs elsewhere keep their sorts).
+    # thing a full sort would add here is a range exchange
+    # (aggregate-bounded outputs elsewhere keep their sorts).
 
 
 @register(
@@ -420,8 +420,8 @@ SELECT node AS event_type, ROUND(rank, 6) AS pagerank FROM r{n_iter}"""
     "transition graph. Each iteration is ONE rank-to-edges equi-join "
     "+ groupBy(dst) partial-agg sum — the dangling mass is NOT a "
     "second pass over ranks but the mass-conservation identity "
-    "1 - SUM(contrib) as a broadcast 1-row aggregate (r6: halves "
-    "the per-iteration DAG vs the old rank-checkpoint + anti-join "
+    "1 - SUM(contrib) as a broadcast 1-row aggregate (half "
+    "the per-iteration DAG of a rank-checkpoint + anti-join "
     "loop); the oracle unrolls the identical iterations CTE-for-CTE "
     "with the same identity. The loop invariants (normalized edges, "
     "nodes) materialize ONCE and the per-iteration contribution "
@@ -748,9 +748,9 @@ def events_dau_wau_mtd(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     exploded = masks.select(
-        # 1..31: the FULL January grid (ADVICE r5 — the old 1..30 grid
-        # matched the current data window but silently dropped any
-        # Jan-31 activity from the dashboard on both engines).
+        # 1..31: the FULL January grid (a 1..30 grid matches the
+        # current data window but would silently drop any Jan-31
+        # activity from the dashboard on both engines).
         "m", F.explode(F.sequence(F.lit(1), F.lit(31))).alias("d")
     )
     day_bit = F.expr("shiftleft(CAST(1 AS BIGINT), d - 1)")
@@ -866,7 +866,7 @@ ORDER BY r_score, f_score, m_score
     doc="RFM customer segmentation: per-user recency (seconds before "
     "the Jan-31 anchor), frequency, and purchase monetary value "
     "fold in ONE events pass; each metric then quintile-scores "
-    "WITHOUT a global ntile window (VERDICT r5 item 4 — the user "
+    "WITHOUT a global ntile window (the user "
     "aggregate grows with the data): per-metric row ranks come from "
     "operators/prefix.py dist_rank (two-phase bucketed prefix "
     "counts), and ntile_from_rank converts rank + broadcast user "
@@ -875,8 +875,8 @@ ORDER BY r_score, f_score, m_score
     "non-purchaser has monetary 0; frequency is small-int) bucket "
     "on plateau-value * user-id-block, monotone in the (metric, "
     "user_id) rank order; the block width derives from a broadcast "
-    "MAX(user_id) so monotonicity holds at any id range (ADVICE "
-    "r6 — a fixed width broke past 2^20). user_id tiebreaks make every quintile "
+    "MAX(user_id) so monotonicity holds at any id range (a fixed "
+    "width breaks past 2^20). user_id tiebreaks make every quintile "
     "assignment deterministic cross-engine; score-1 means best in "
     "each dimension (most recent / most frequent / highest spend). "
     "Output is the 5x5x5 segment-size cube.",
@@ -906,8 +906,8 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Four consumers (three rank passes + the count scalar):
     # materialize the per-user aggregate once.
     rfm = rfm.localCheckpoint(eager=False)
-    # Plateau fan-out block width DERIVED from the observed id range
-    # (ADVICE r6): the frequency bucket negf * 4096 + uid_block is
+    # Plateau fan-out block width DERIVED from the observed id range:
+    # the frequency bucket negf * 4096 + uid_block is
     # monotone in (negf, user_id) only while uid_block < 4096. A
     # fixed 256-wide block silently breaks once user_id >= 2^20, so
     # the width comes from a broadcast MAX instead — uid_block =
@@ -946,15 +946,15 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Three consumers below (pos/zer/neg branches) would each re-run
     # the two dist_rank pipelines above — Spark does not dedupe
-    # common subplans — so materialize once (r11 review).
+    # common subplans — so materialize once.
     m = m.localCheckpoint(eager=False)
     # Monetary DESC is MULTIMODAL: positives are near-unique (a
     # value-keyed fan-out bucket would put one bucket per purchaser —
     # an O(n) single-task totals pass), zero holds every
     # non-purchaser (a range bucket would put them all in ONE
     # partition), and NEGATIVE totals (refund-heavy users) are rare
-    # but must not vanish (r11 review: the old two-way split dropped
-    # them from the output and shifted every ntile boundary). Split
+    # but must not vanish (a two-way split would drop them from the
+    # output and shift every ntile boundary). Split
     # three ways on the zero plateau: positives range-bucket on $100
     # cells (occupied cells bounded by the spend DOMAIN); zeros rank
     # by user_id over uid blocks and shift by the broadcast positive
@@ -970,7 +970,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         out_col="m_rnk",
     )
     # Count scalars ride the cheap checkpointed per-user aggregate,
-    # not the rank pipelines (r11 review).
+    # not the rank pipelines.
     n_pos = rfm.filter(F.col("monetary_cents") > 0).agg(
         F.count(F.lit(1)).alias("npos")
     )

@@ -764,7 +764,7 @@ def agg_modern_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # double key loses exactness past 2^53, where two
                 # distinct ids tying on value would compare equal and
                 # reintroduce the nondeterminism this struct exists
-                # to remove (r11 review).
+                # to remove.
                 F.struct(F.col("value"), F.col("event_id").alias("eid")),
             ).alias("top_event_id"),
         )

@@ -127,10 +127,9 @@ def _co_activity_edges(ev: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= _MIN_SHARED_BUCKETS)
     )
-    # r13: both directions come from ONE explode instead of a
-    # unionAll of two selects over `cand` — the union's branches each
-    # re-executed the candidate join+aggregate subtree (guide §2.4:
-    # remove duplicated work feeding an exchange).
+    # Both directions come from ONE explode instead of a unionAll of
+    # two selects over `cand` — the union's branches would each
+    # re-execute the candidate join+aggregate subtree.
     dirx = cand.select(
         F.explode(
             F.array(
@@ -153,12 +152,12 @@ def _co_activity_edges(ev: DataFrame) -> DataFrame:
         .filter(F.col("r") <= _KNN)
         .select("src", "dst")
     )
-    # r13: mutuality via ONE unordered-pair aggregate — a directed
-    # pair is unique within `kept`, so an undirected pair kept by
-    # both endpoints appears exactly twice. The former reversed-key
-    # left-semi self-join re-executed the entire candidate+window
-    # pipeline for its build side (guide §2.4); the count==2 filter
-    # keeps the identical edge set with a single exchange.
+    # Mutuality via ONE unordered-pair aggregate — a directed pair is
+    # unique within `kept`, so an undirected pair kept by both
+    # endpoints appears exactly twice. A reversed-key left-semi
+    # self-join would re-execute the entire candidate+window pipeline
+    # for its build side; the count==2 filter keeps the identical
+    # edge set with a single exchange.
     return (
         kept.groupBy(
             F.least("src", "dst").alias("u"),
@@ -237,15 +236,15 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # triangles()'s orientation (its deg parameter exists for this).
     deg = _degrees(edges).localCheckpoint(eager=False)
 
-    # r13: the oriented-edge table feeds THREE consumers inside the
+    # The oriented-edge table feeds THREE consumers inside the
     # wedge+closure legs (both self-join sides and the closure
     # semi-join); without materialization the 2-join/4-exchange
-    # orientation subtree ran three times (plan before/after in
-    # plans/r13/). Checkpoint once, same rationale as `edges` above —
-    # and hash it by the wedge key first, so the wedge self-join reads
-    # two identically-partitioned sides and plans ZERO exchanges of
-    # its own (guide §2.4; measured 3.03 -> 2.34 s for the triangle
-    # leg at sf0.1, identical count).
+    # orientation subtree runs three times (plan dumps under plans/).
+    # Checkpoint once, same rationale as `edges` above — and hash it by
+    # the wedge key first, so the wedge self-join reads two
+    # identically-partitioned sides and plans ZERO exchanges of its own
+    # (guide §2.4; measured 3.03 -> 2.34 s for the triangle leg at
+    # sf0.1, identical count).
     oriented = (
         oriented_edges(edges, deg=deg)
         .repartition("a")
@@ -432,7 +431,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wedge join, the anti-join, degrees) — same materialization
     # rationale as graph_triangle_count.
     edges = _co_activity_edges(ev).localCheckpoint(eager=False)
-    # (r13 note: pre-hashing nbr by the wedge key — the triangle/LPA
+    # (Pre-hashing nbr by the wedge key — the triangle/LPA
     # pattern — measured slightly WORSE here: with no loop to
     # amortize it, the added repartition exchange costs what the
     # self-join exchange saves. Left as-is deliberately.)
@@ -534,7 +533,7 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in range(1, _KCORE_ROUNDS + 1):
         # Three consumers per round (both restriction joins + the
         # n_nodes count) — materialize the survivor set once instead
-        # of re-running the degree aggregate per reader (r13).
+        # of re-running the degree aggregate per reader.
         deg = (
             _degrees(cur)
             .filter(F.col("deg") >= _KCORE_K)

@@ -74,7 +74,7 @@ _BPE_MERGES_SQL = f"""
 
 
 def _bpe_encode_sql(merges_expr: str = "merges") -> str:
-    # Rules are whole-token "L R" pairs (ADVICE r7) — split on the
+    # Rules are whole-token "L R" pairs — split on the
     # space, compare whole tokens, exactly like operators/bpe.py.
     return (
         "list_reduce("
@@ -229,7 +229,7 @@ SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
     "min_truth_jaccard (the weakest planted pair's exact Jaccard — "
     "the margin to the threshold; a 10-word doc's ' dup' copy sits "
     "at 8/9 ~ 0.889). SCALE: the truth join shuffles 8-byte xxhash64 "
-    "longs (r13 string-key rule; the oracle's md5 is its own bridge "
+    "longs (string-key rule; the oracle's md5 is its own bridge "
     "— only content equality crosses engines), never full texts; the found set is the dedup_minhash_lsh "
     "scale path (band-bucket equi-joins only); the three count "
     "aggregates combine via 1-row broadcast cross joins. ORACLE: "
@@ -246,10 +246,10 @@ def eval_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     # Truth pairs: join dup -> source on a content hash so the
     # exchange carries fixed-width keys, not document bodies. xxhash64
-    # longs, not md5 hex (r13 string-key rule): the key never reaches
+    # longs, not md5 hex (string-key rule): the key never reaches
     # output — only content EQUALITY must match the oracle's own md5
     # bridge — and 8-byte longs shuffle/compare 10-25x cheaper than
-    # 32-char strings at the sf1 decade (SCALING.md r12 addendum).
+    # 32-char strings at the sf1 decade (SCALING.md addendum).
     hp = D.content_pair_hashes(docs)  # one text scan for both hashes
     dup_side = hp.select("doc_id", F.col("kd").alias("k"))
     src_side = hp.select(
@@ -270,7 +270,7 @@ def eval_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialized: read twice below (pair count + hit join), and
     # Spark does not dedupe common subplans — without this the whole
     # sketch+verify pipeline executes twice per run (same contract as
-    # minhash_dedup_pairs' own internal checkpoint; r10 review).
+    # minhash_dedup_pairs' own internal checkpoint).
     found = D.minhash_dedup_pairs(
         docs, "doc_id", "text", threshold=0.8
     ).localCheckpoint(eager=False)
@@ -349,9 +349,9 @@ FROM pinned p, ex ORDER BY p.index_name
     "(ann_lsh_bucketed's 6-bit x 8-table multiprobe LSH, ann_ivf's "
     "8-list/3-probe IVF, ann_pq_adc's m=4/k=16 PQ-ADC) against the "
     "exact brute-force top-10 for the same 5 query vectors — the "
-    "eval_dedup_recall pattern applied to the ANN family (VERDICT "
-    "r10 item 3): the registry ran three approximate indexes for "
-    "five rounds without ever measuring their recall as a value. "
+    "eval_dedup_recall pattern applied to the ANN family: three "
+    "approximate indexes are only trustworthy once their recall is "
+    "measured as a value. "
     "ORACLE: the exact side (n_truth, exact_id_sum) is re-derived "
     "independently by DuckDB's own brute force; the per-index hit "
     "counts are PINNED FIXED FACTS — with deterministic seeds "
@@ -441,7 +441,7 @@ FROM documents
     "O(cap^2) brute-force Hamming join (must be EQUAL — banding is "
     "exact by pigeonhole, not probabilistic) over a DETERMINISTIC "
     "hash-selected verification subset capped at ~1500 docs, so the "
-    "harness cost stays constant while the corpus grows (r6; the "
+    "harness cost stays constant while the corpus grows (the "
     "full-corpus O(n^2) check was 12.5M pairs at sf0.1 and would be "
     "1.25B at sf1 — banding completeness is a per-pair algebraic "
     "property, so a fixed-size subset checks it just as hard). The "
@@ -469,10 +469,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Verification subset: deterministic xxhash coin over the CACHED
     # fingerprint table. The subset rate depends on the corpus size,
     # but the count stays IN the plan as a broadcast 1-row aggregate
-    # (ADVICE r6: a driver-side fp.count() here ran a Spark job at
+    # (a driver-side fp.count() here would run a Spark job at
     # query-BUILD time, so every registry construction — plan lint,
-    # scaling tool, test fixtures — paid it; the builder convention
-    # is lazy). coin * max(n, cap) < 1e6 * cap is the integer-exact
+    # scaling tool, test fixtures — would pay it; the builder
+    # convention is lazy). coin * max(n, cap) < 1e6 * cap is the integer-exact
     # lazy form of coin < 1e6 * cap / n (with the n <= cap branch
     # admitting everything).
     _cap = 1500
@@ -618,7 +618,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     "quadratic, so production scales clusters with corpus size "
     "(constant expected cluster size -> linear total pair work — more "
     "SRP bits or kmeans k ~ n/size). The knob is the ``bits`` "
-    "parameter of operators/semdedup.semdedup (VERDICT r9 item 4); "
+    "parameter of operators/semdedup.semdedup; "
     "this query pins bits=3 (8 buckets) so the DuckDB oracle replays "
     "identical buckets — which is why its scaling-study ratio tracks "
     "pair growth, not row growth. tests/test_semdedup_knob.py "
@@ -1631,7 +1631,7 @@ def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", D.tokens(F.col("text")).alias("_t"))
     # Grams travel as xxhash64 LONGS, not ~50-char strings: the gram
-    # never reaches the output, and the r12 string-key measurement
+    # never reaches the output, and the string-key measurement
     # (SCALING.md addendum) showed string join keys dominating the
     # distinct + equi-join at the sf1 decade. Collision cost
     # ~n^2/2^65; the oracle joins raw gram strings, so a collision
@@ -1699,7 +1699,7 @@ SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
     "count — the detection margin (>= 3, since the shortest doc has "
     "10 tokens = 3 8-grams). FULL value oracle, no pinned facts: "
     "DuckDB re-derives truth, flags, and margin independently at any "
-    "SF. SCALE: the truth join shuffles 8-byte xxhash64 longs (r13 "
+    "SF. SCALE: the truth join shuffles 8-byte xxhash64 longs ("
     "string-key rule — the key never reaches output, and the "
     "oracle's md5 is its own equality bridge); the "
     "detector is the shipped corpus_contamination path (xxhash64 "
@@ -1856,9 +1856,9 @@ GROUP BY source
     "into non-overlapping 10-token blocks; a block whose distinct-"
     "document frequency is >= 2 is boilerplate (navigation chrome, "
     "license headers, templated text). Blocks travel as xxhash64 "
-    "longs (r13 string-key rule, SCALING.md r12 addendum: an internal "
+    "longs (string-key rule, SCALING.md addendum: an internal "
     "key that never reaches output must be a fixed-width integer "
-    "hash — 8-byte longs beat the r12 form's 32-char md5 hex through "
+    "hash — 8-byte longs beat a 32-char md5 hex key through "
     "the repartition+groupBy+join, 10-25x at the sf1 decade), never "
     "raw text; the oracle's md5 blocks are its own equality bridge — "
     "only block EQUALITY crosses engines. The df groupBy and the df "
@@ -2208,7 +2208,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM bad)
 )
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # Anti-join fingerprint = xxhash64 long (r13 string-key rule): _fp
+    # Anti-join fingerprint = xxhash64 long (string-key rule): _fp
     # never reaches output; the oracle's md5 replay is its own bridge.
     fp = F.xxhash64(D.normalize_text(F.col("text")))
     newb = docs.filter(F.col("doc_id") % 5 == 0)
@@ -2609,7 +2609,7 @@ LIMIT 10
     "length normalization from a corpus doc-length aggregate, "
     "corpus stats as a broadcast 1-row scalar — every join is a "
     "term or doc_id equi-join and the top-10 plans as "
-    "TakeOrderedAndProject. r6 plan: ONE tokenize pass computes "
+    "TakeOrderedAndProject. ONE tokenize pass computes "
     "doc length and all query-term frequencies as array "
     "expressions per row (size(filter(tokens, = t)) — no explode, "
     "no (doc, term) shuffle at all), then stack() unpivots the "
@@ -2925,7 +2925,7 @@ SELECT * FROM (
 """,
     doc="Padding-waste comparison of the three sequence-packing "
     "strategies a pretraining pipeline chooses between, at budget "
-    "L=2048, on REAL BPE token counts (VERDICT r7 item 5: the "
+    "L=2048, on REAL BPE token counts (the "
     "per-document counts come from the same learned-merge encode "
     "fold as pack_bpe_sequences, not a whitespace estimate — the "
     "waste numbers now reflect the actual tokenizer): "
@@ -2950,7 +2950,7 @@ def pack_strategy_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     merges = bpe.learn_merges(docs, "text", k=16)
-    # Eager checkpoint (r13): the doc claims ONE token-count pass, but
+    # Eager checkpoint: the doc claims ONE token-count pass, but
     # without it the encode-fold subtree feeds base AND tails, each
     # referenced by multiple union branches — the optimizer keeps a
     # copy per branch and the fold executed ~6x per run. Checkpointing
@@ -3086,9 +3086,9 @@ SELECT workload, strategy,
 FROM rows_
 ORDER BY workload, strategy
 """,
-    doc="Packing-efficiency EVAL against an optimal bound (VERDICT "
-    "r12 item 6: pack_strategy_waste reports utilization ~0.95 but "
-    "never against an optimum — this query closes that gap on both "
+    doc="Packing-efficiency EVAL against an optimal bound "
+    "(pack_strategy_waste reports utilization ~0.95 but never "
+    "against an optimum — this query closes that gap on both "
     "a provably-tight and a real workload). Budget L=2048. "
     "WORKLOAD 'planted_divisor': each doc gets a planted length "
     "256*2^(ascii(md5(doc_id)[0]) mod 4) in {256,512,1024,2048} — a "
@@ -3427,7 +3427,7 @@ ORDER BY dup_frac DESC, b.doc_id LIMIT 20
     "this measures WHERE and HOW MUCH text is copied, the statistic "
     "the span-removal pass of a dedup pipeline is driven by. Scale "
     "shape: shingles ship as fixed-width xxhash64 LONG keys (never "
-    "raw text, and not md5 STRINGS — the r12 second pass measured "
+    "raw text, and not md5 STRINGS — measured "
     "the 32-char string key 10-25x slower at the sf1 decade: string "
     "keys dominate the checkpoint, hash-agg, and join) into one "
     "(gh -> distinct-doc count) partial-agg; duplicated "
@@ -3527,8 +3527,8 @@ SELECT media_id,
             AS BIGINT) AS max_gray
 FROM f ORDER BY media_id, frame_idx
 """,
-    doc="REAL video frame sampling (r13, VERDICT r12 item 5 — the "
-    "synthetic SGMM container is replaced): each document becomes an "
+    doc="REAL video frame sampling (a real container, not the "
+    "synthetic SGMM one): each document becomes an "
     "AVI/MJPEG container (operators/multimodal.py encode_avi_mjpeg — "
     "real RIFF hdrl/movi/idx1 structure) holding 2 + doc_id % 6 "
     "grayscale baseline-JPEG frames of (16 + id%3*8) x (16 + id%2*8); "
@@ -3552,10 +3552,10 @@ def multimodal_video_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_parquet_importer_spark.operators import multimodal as M
     from hdfs_parquet_importer_spark.operators.util import ensure_parallelism
 
-    # r13 optimization: container build + parse + demux + frame decode
-    # fused into ONE mapInPandas (the unfused chain shipped every AVI
-    # payload Python -> JVM -> Python through two Arrow crossings) and
-    # the presentation orderBy dropped (guide §4.1, §2.4). At 100 TB
+    # Container build + parse + demux + frame decode are fused into
+    # ONE mapInPandas (the unfused chain ships every AVI payload
+    # Python -> JVM -> Python through two Arrow crossings), with no
+    # presentation orderBy. At 100 TB
     # payloads come from parquet and the unfused avi_frame_sample
     # operator stands unchanged.
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
@@ -3631,7 +3631,7 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- URL canonicalization + canonical-form dedup (VERDICT r8 item 8) -
+# --- URL canonicalization + canonical-form dedup --------------------
 
 # The documents table carries no URL column, so (like text_pii_scan's
 # synthetic PII) each doc derives a deterministic MESSY url from its
@@ -3942,8 +3942,8 @@ FROM cleaned ORDER BY doc_id
     "join keys are doc_id, and nothing is pairwise. The internal gram "
     "key is xxhash64 (8-byte long), not an md5 STRING: the sf1 decade "
     "measured 10-25x faster with long keys — 32-char string keys "
-    "dominate the checkpoint, hash-agg, and join at scale (measured "
-    "r12 second pass; same fix applied to dedup_substring_span). A "
+    "dominate the checkpoint, hash-agg, and join at scale (the same "
+    "key rule as dedup_substring_span). A "
     "64-bit collision marks one extra gram duplicated at ~n^2/2^65 "
     "(~1e-7 at sf1) — the oracle's md5 key has its own independent "
     "collision class, and the gate would catch a divergence. ORACLE: "
@@ -4073,7 +4073,7 @@ ORDER BY d.n_dims, q.query_id
     "eval_semdedup_recall the BUCKETING, this the REPRESENTATION "
     "(prefix truncation = 4x/2x smaller vectors and proportionally "
     "cheaper dot products — the standard first-stage/rerank split). "
-    "SCALE: ONE brute pass scores all three widths (r13; segmented "
+    "SCALE: ONE brute pass scores all three widths (segmented "
     "left-to-right folds share the prefix arithmetic bit-identically "
     "with the old per-width cosines) into a single salted two-phase "
     "top-k over a broadcast query set partitioned by (n_dims, "
@@ -4081,7 +4081,7 @@ ORDER BY d.n_dims, q.query_id
     "sets join on (query_id, vec_id); the per-(dims, query) counts "
     "are window-free bounded aggregates. Ties broken by vec_id on "
     "both engines; only set MEMBERSHIP crosses the engine boundary, "
-    "never a floating-point score. KNOWN FRAGILITY (r12 advice): the "
+    "never a floating-point score. KNOWN FRAGILITY: the "
     "membership gate still assumes Spark's and DuckDB's cosine agree "
     "on the ORDER of near-ties at the rank-10 boundary — two "
     "candidates within ~1 ulp could rank oppositely across engines "
@@ -4102,8 +4102,8 @@ def eval_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("query_vec"),
     )
 
-    # ONE scan scores all three retrieval widths (r13: previously
-    # three full brute_force_topk passes re-read and re-joined the
+    # ONE scan scores all three retrieval widths (three full
+    # brute_force_topk passes would re-read and re-join the
     # candidate set per width). The 16/32/full cosines share their
     # prefix arithmetic via segmented folds: aggregate() accumulates
     # strictly left-to-right, so seeding the next segment's fold with
@@ -4264,7 +4264,7 @@ def eval_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdfs_parquet_importer_spark.operators.util import ensure_parallelism
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # Truth pairs join on 8-byte xxhash64 longs (r13 string-key rule:
+    # Truth pairs join on 8-byte xxhash64 longs (string-key rule:
     # k never reaches output; the oracle's md5 is its own bridge).
     hp = D.content_pair_hashes(docs)  # one text scan for both hashes
     dup_side = hp.select("doc_id", F.col("kd").alias("k"))

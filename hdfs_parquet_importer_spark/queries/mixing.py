@@ -49,8 +49,7 @@ def hash_coin(key: Column) -> Column:
 def frac_threshold(f: float) -> str:
     """Hex threshold t with P(hash_coin < t) == floor(f * 16^4) / 16^4
     (int() truncates — callers get the next-lower 2^-16 step, never a
-    larger-than-f probability; r11 review fixed this doc, which
-    previously claimed round()).
+    larger-than-f probability, not round()).
 
     The comparison is LEXICOGRAPHIC on 4-char lowercase hex, so the
     threshold must stay 4 chars: f == 1.0 would format to the 5-char
@@ -164,15 +163,14 @@ GROUP BY source ORDER BY source
     "the 4-hex coin prefix): prefix collisions within a source would "
     "let the two engines order collided rows differently and diverge "
     "the running sum right at the quota boundary — sf0.1 already has "
-    "7 such diverging groups (ADVICE r4). VERDICT r7 item 4 rewrote "
-    "the cum from a per-source window (parallelism capped at "
-    "n_sources — one hot source serializes through ONE task at "
-    "100 TB) to the GROUPED two-phase prefix sum "
+    "7 such diverging groups. The cum is not a per-source window "
+    "(parallelism capped at n_sources — one hot source serializes "
+    "through ONE task at 100 TB) but the GROUPED two-phase prefix sum "
     "(operators/prefix.py group_cols): local cumsums partition by "
     "(source, md5-leading-byte bucket) — up to 256-way parallel "
     "inside every source — and the serialized base pass is one-row "
     "bucket totals PER SOURCE, windowed per source in parallel. The "
-    "bucket COUNT is scale-aware (VERDICT r8 item 5): "
+    "bucket COUNT is scale-aware: "
     "adaptive_bucket_count targets ~2k rows per bucket, so tiny "
     "inputs collapse to 1 bucket (= the plain per-source window, no "
     "two-phase machinery cost) while big inputs fan out to 256; "
@@ -289,12 +287,10 @@ GROUP BY 1, 2 ORDER BY 1, 2
     "boilerplate gram fans out at most n_sources^2, never n_docs^2 — "
     "then a gram-keyed equi-join (AQE splits residual hot grams). "
     "Scales as O(total distinct grams), like corpus_contamination. "
-    "r6 profile of the r5 +22% bench delta (VERDICT item 7): the "
-    "self-join's ReusedExchange is intact and the join+agg is <5% "
-    "of runtime — tokenize+shingle+distinct dominates and its plan "
-    "is unchanged since r4, so the delta was environment noise; "
-    "in-doc grams now array_distinct before the explode to shrink "
-    "the distinct shuffle.",
+    "Profiled: the self-join's ReusedExchange is intact and the "
+    "join+agg is <5% of runtime — tokenize+shingle+distinct "
+    "dominates, so in-doc grams array_distinct before the explode "
+    "to shrink the distinct shuffle.",
 )
 def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Tokenize + shingle is the compute-heavy stage; a small input
@@ -303,10 +299,10 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("source", D.tokens(F.col("text")).alias("_t"))
     # shingles_of_tokens is already array_distinct-ed per row
     # (operators/dedup.py), so in-doc repeat grams dedupe JVM-side
-    # before the explode with no extra pass (r11 review removed a
-    # redundant second array_distinct here).
+    # before the explode with no extra pass (a second array_distinct
+    # here would be redundant).
     # Grams travel as xxhash64 LONGS through the distinct and the
-    # self-join — the gram text never reaches the output, and the r12
+    # self-join — the gram text never reaches the output, and the
     # string-key measurement (SCALING.md addendum) showed ~50-char
     # join keys dominating exactly these two exchanges at the sf1
     # decade. Collision cost ~n^2/2^65; the oracle joins raw gram
@@ -321,7 +317,7 @@ def corpus_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Both self-join sides read this subtree; without the
         # checkpoint the tokenize+shingle+distinct pipeline executes
         # twice (the broadcast side's BroadcastExchange blocks
-        # exchange reuse — r13 plan audit).
+        # exchange reuse — seen in the plan audit).
         .localCheckpoint(eager=False)
     )
     a = sg.select(F.col("source").alias("source_a"), "gh")
@@ -412,7 +408,7 @@ FROM quota GROUP BY lang ORDER BY lang
     "dedup window on fp (fingerprints are near-unique, so its "
     "partitions stay tiny) and the quota stage, which rides the "
     "GROUPED two-phase prefix machinery so a hot source never "
-    "serializes through one window task (r11; AQE skew-splitting "
+    "serializes through one window task (AQE skew-splitting "
     "applies to joins, not window partitions). No stage "
     "materializes: Catalyst pipelines the filters into one pass.",
 )
@@ -426,7 +422,7 @@ def pipeline_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         "n_chars",
-        # Dedup fingerprint = xxhash64 long (r13 string-key rule): fp
+        # Dedup fingerprint = xxhash64 long (string-key rule): fp
         # only partitions the keep-first window and never reaches
         # output; the coin h stays md5 — the oracle replays the SAME
         # substr(md5) selection, so the coin's VALUE crosses engines.
@@ -442,20 +438,19 @@ def pipeline_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = deduped.filter(F.col("h") < frac_threshold(0.9))
     # 'g' = frac_threshold(1.0)'s keep-everything sentinel: a literal
     # 'ffff' silently drops docs whose coin is exactly 'ffff' — the
-    # hazard frac_threshold documents (r11 review).
+    # hazard frac_threshold documents.
     keep_rate = F.when(F.col("lang") == "en", F.lit("8000")).otherwise(
         F.lit(frac_threshold(1.0))
     )
     sampled = train.filter(F.col("h") < keep_rate)
-    # Quota via the GROUPED two-phase prefix machinery, not a
-    # per-source window (r11 review: a plain
-    # Window.partitionBy('source') running sum serializes a hot
-    # source through ONE task — the exact shape mix_domain_quota was
-    # rewritten off in r7; AQE skew-splitting applies to joins, not
-    # window partitions). Full-md5 order (not the 4-hex coin prefix)
-    # keeps the running sum's row order identical across engines even
-    # on prefix collisions. prefix_sums is exclusive; the window's
-    # inclusive cum == off + n_chars.
+    # Quota via the GROUPED two-phase prefix machinery, not a per-source
+    # window (a plain Window.partitionBy('source') running sum
+    # serializes a hot source through ONE task — the shape
+    # mix_domain_quota avoids the same way; AQE skew-splitting applies
+    # to joins, not window partitions). Full-md5 order (not the 4-hex
+    # coin prefix) keeps the running sum's row order identical across
+    # engines even on prefix collisions. prefix_sums is exclusive; the
+    # window's inclusive cum == off + n_chars.
     from hdfs_parquet_importer_spark.operators.prefix import (
         adaptive_bucket_count,
         md5_byte_bucket,
@@ -726,9 +721,9 @@ def tokenize_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_chars").cast("double") / F.sum("n_tokens_bpe"), 6
             ).alias("chars_per_token"),
         )
-        # r13: terminal presentation orderBy dropped (driver digest is
-        # order-insensitive; the rangepartitioning sample pass cost
-        # 2.1 s on a 5-row result — guide §2.4, multimodal precedent).
+        # No terminal presentation orderBy: the driver digest is
+        # order-insensitive, and the rangepartitioning sample pass
+        # cost 2.1 s on a 5-row result.
     )
 
 
@@ -758,14 +753,14 @@ SELECT CAST(o // 2048 AS BIGINT) AS bin_id,
        MAX(doc_id) AS last_doc
 FROM off GROUP BY 1 ORDER BY 1 LIMIT 10
 """,
-    doc="Sequence packing fed by REAL tokenizer output (VERDICT r6 "
-    "item 4 closes here): per-document token counts come from the "
-    "BPE encode fold (not a whitespace estimate), then "
-    "operators/prefix.py pack_sequences assigns every document its "
-    "stream offset and 2048-token training-chunk id via the "
-    "two-phase bucketed prefix sum — no global-order window. Output "
-    "is the first 10 chunk bins (docs starting in the bin, their "
-    "token mass, id range). The oracle recomputes the same encode "
+    doc="Sequence packing fed by REAL tokenizer output: per-document "
+    "token counts come from the BPE encode fold (not a whitespace "
+    "estimate), then operators/prefix.py pack_sequences assigns "
+    "every document its stream offset and 2048-token training-chunk "
+    "id via the two-phase bucketed prefix sum — no global-order "
+    "window. Output is the first 10 chunk bins (docs starting in the "
+    "bin, their token mass, id range). The oracle recomputes the same "
+    "encode "
     "in DuckDB and takes the single-node window cumsum it is "
     "allowed that Spark is not.",
 )
@@ -843,7 +838,7 @@ def tokenize_bpe_vocab_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     merges = bpe.learn_merges(docs, "text", k=16)
-    # r13: the sweep's output is corpus totals only, so the encode
+    # The sweep's output is corpus totals only, so the encode
     # fold runs on the frequency-weighted DISTINCT-WORDS table (the
     # same Sennrich reduction tokenize_bpe_multiround already rides)
     # instead of once per word occurrence x 4 prefixes — identical
@@ -933,7 +928,7 @@ FROM bpe_words, r{_MR_ROUNDS} GROUP BY 1, 2
 @register(
     "tokenize_bpe_multiround",
     oracle=_MULTIROUND_ORACLE,
-    doc="Multi-round BPE merge LEARNING (VERDICT r7 item 6 — real "
+    doc="Multi-round BPE merge LEARNING (real "
     "BPE re-counts pair frequencies after every adopted merge, so "
     "later rules build on earlier outputs: the corpus learns rules "
     "like 'ta ble'): bpe.learn_merges_iterative runs 8 Sennrich "
@@ -963,7 +958,7 @@ def tokenize_bpe_multiround(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # exhaust merge pairs before _MR_ROUNDS, leaving the
                 # merges array short — element_at would abort the
                 # whole query under ANSI where the oracle's LEFT JOIN
-                # yields NULL rule (r11 review).
+                # yields NULL rule.
                 F.try_element_at(m, F.lit(k)).alias("rule"),
                 (
                     F.col("wn")
@@ -1235,12 +1230,12 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grams = toks.select(
         "doc_id",
-        # shingles_of_tokens already dedupes per row (r11 review
-        # removed a redundant second array_distinct).
+        # shingles_of_tokens already dedupes per row (no second
+        # array_distinct needed).
         F.explode(D.shingles_of_tokens(F.col("t"), 5)).alias("g"),
         # Grams travel as xxhash64 LONGS through the first-seen
         # aggregate and the join (gram text never reaches the output;
-        # r12 string-key rule, SCALING.md addendum). Collision cost
+        # string-key rule, SCALING.md addendum). Collision cost
         # ~n^2/2^65 — a collision marking a gram non-novel would flip
         # the raw-string-keyed oracle's gate.
     ).select("doc_id", F.xxhash64("g").alias("gh"))
@@ -1290,7 +1285,7 @@ GROUP BY source ORDER BY source
 )
 def mix_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # Fingerprint = xxhash64 long, not md5 hex (r13 string-key rule):
+    # Fingerprint = xxhash64 long, not md5 hex (string-key rule):
     # f is a groupBy + join-back key that never reaches output, and
     # the oracle's md5 fingerprint is its own equality bridge.
     fp = docs.select(
@@ -1419,7 +1414,7 @@ GROUP BY 1, 2 ORDER BY 1, 2
     "in the rank order with ~80 occupied cells. Per-doc bits are "
     "ROUND(6)-ed BEFORE ranking so the rank order is engine-"
     "independent; the oracle keeps the naive global-ntile, "
-    "token-instance formulation. r7: ONE tokenize pass — the "
+    "token-instance formulation. ONE tokenize pass — the "
     "(doc_id, term, n) shared intermediate (operators/tokenize.py) "
     "feeds both corpus tf (re-aggregation) and the scoring join, "
     "with term weights replacing per-instance log sums.",
@@ -1436,15 +1431,15 @@ def quality_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # ONE tokenize pass over the corpus (VERDICT r6 residual nit: the
-    # r6 form tokenized twice — once for tf, once for scoring). The
+    # ONE tokenize pass over the corpus, not one for tf and one for
+    # scoring. The
     # shared intermediate is the (doc_id, term, n) table
     # (operators/tokenize.py); materialized once, it feeds BOTH the
     # vocab-bounded corpus tf (a re-aggregation, not a corpus pass)
     # and the per-doc scoring join.
-    # r13 second pass: `source` rides the tokenize aggregation and the
-    # scoring groupBy as a carried per-doc column (guide §2.4), so the
-    # former docs join under the final rollup disappears. corpus tf is
+    # `source` rides the tokenize aggregation and the scoring groupBy
+    # as a carried per-doc column, so no docs join sits under the
+    # final rollup. corpus tf is
     # a groupBy(term) re-aggregation — the extra column changes
     # nothing there.
     doc_tf = doc_term_counts(docs, carry=("source",)).localCheckpoint(
@@ -1474,7 +1469,7 @@ def quality_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EAGER: double-sum subtree with multiple consumers — a lazy
     # checkpoint admits a cache race where two stages compute the
     # subtree independently and shuffle-merge order could round a
-    # boundary-straddling sum differently per branch (r13).
+    # boundary-straddling sum differently per branch.
     pd = pd.localCheckpoint(eager=True)
     ranked = dist_rank(
         pd, ["bits", "doc_id"], F.floor(F.col("bits") * 8), out_col="r"
@@ -1880,14 +1875,13 @@ def quality_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # .hashed_doc_features — DSIR and the NB classifier must score
     # over the SAME feature space, and a single definition makes that
     # equivalence structural instead of two copies that must stay
-    # byte-identical (r10 review). r13 second pass: `source` rides the
-    # aggregation as a carried column instead of a join back
-    # (guide §2.4; identical integer bucket counts).
+    # byte-identical. `source` rides the aggregation as a carried
+    # column instead of a join back (identical integer bucket counts).
     doc_b = hashed_doc_features(docs, carry=("source",)).localCheckpoint(
         eager=False
     )
     # Weight table via the SHARED operators/quality_clf
-    # .dsir_log_weights (r13: eval_dsir_recall measures this exact
+    # .dsir_log_weights (eval_dsir_recall measures this exact
     # definition, so it lives in one place — same contract as
     # hashed_doc_features).
     from hdfs_parquet_importer_spark.operators.quality_clf import (
@@ -1900,8 +1894,8 @@ def quality_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(w), "b")
         # Grouping on the carried `source` too: doc_id determines it,
         # so the groups — and the float sum order within each group —
-        # are unchanged, and the former join back for the source
-        # column disappears (r13 second pass).
+        # are unchanged, and no join back for the source column is
+        # needed.
         .groupBy("doc_id", "source")
         .agg(
             F.round(F.sum(F.col("n") * F.col("w")) / F.sum("n"), 6).alias(
@@ -1974,8 +1968,8 @@ SELECT k.k AS n_truth,
        END AS lift
 FROM k CROSS JOIN nt CROSS JOIN hit
 """,
-    doc="DSIR selection EVAL against planted truth (VERDICT r12 item "
-    "6 — quality_dsir_weights' selection quality, measured): the "
+    doc="DSIR selection EVAL against planted truth "
+    "(quality_dsir_weights' selection quality, measured): the "
     "classic held-out-curated-split protocol. The corpus plants "
     "' dup' copies of earlier docs; the copies form a coherent "
     "'curated domain' (shared provenance AND a shared marker "
@@ -2024,16 +2018,16 @@ def eval_dsir_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Planted curated set: docs that are ' dup' copies of another doc
     # — the pair join shuffles 8-byte xxhash64 longs (string-key
     # rule), never text. Even ids train the weights, odd ids are the
-    # held-out truth. r14 (VERDICT r13 item 3): ONE text scan for the
+    # held-out truth. ONE text scan for the
     # whole query — the pair hashes ride the SAME projection that
     # tokenizes (the tokenize-once-upstream contract, tokenize.py
     # module docstring), and both the hash self-join and the feature
     # aggregation read the persisted (doc_id, kd, ks, tokens) rows
     # instead of each re-reading the parquet text column. Zero-token
     # docs stay visible to the hash side (the projection is per-doc,
-    # no explode above the checkpoint — the documented hazard that
-    # blocked this fusion in r13), and still vanish from the feature
-    # rows exactly as before (hashed_doc_features explodes below).
+    # no explode above the checkpoint — an explode there would drop
+    # them), and still vanish from the feature rows
+    # (hashed_doc_features explodes below).
     kd, ks = D.content_pair_hash_cols(F.col("text"))
     base = doc_tokens(
         docs.select("doc_id", "text", kd.alias("kd"), ks.alias("ks")),
@@ -2172,9 +2166,9 @@ def _clf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # r13 second pass: `source` rides the feature aggregation as a
-    # carried per-doc column, so BOTH former doc_id joins — labels
-    # into training, source back onto scores — vanish (guide §2.4).
+    # `source` rides the feature aggregation as a carried per-doc
+    # column, so neither doc_id join — labels into training, source
+    # back onto scores — is needed.
     # Bucket sums and model weights are integer-derived and identical;
     # labels is still passed for the bias (it counts ALL docs,
     # including zero-token ones feats cannot see) but costs only a
@@ -2186,7 +2180,7 @@ def _clf_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Trusted closed-form path (model fresh from nb_linear_classifier
     # in the same lineage): validate=False skips the swap-point
     # driver collect that a per-run query path pays on every
-    # execution (r13; the operator docstring's documented contract).
+    # execution (the operator docstring's documented contract).
     # The checkpoint keeps the <=256-row model single-computed for
     # its two reads (weight join + bias row).
     model = nb_linear_classifier(
@@ -2204,8 +2198,8 @@ FROM sc JOIN documents d USING (doc_id)
 WHERE d.source <> 'src0'
 ORDER BY prob DESC, sc.doc_id LIMIT 20
 """,
-    doc="Model-scored quality filter, scoring half (VERDICT r9 item "
-    "6): the classifier-based filtering stage of CCNet/Gopher/LLaMA "
+    doc="Model-scored quality filter, scoring half: the "
+    "classifier-based filtering stage of CCNet/Gopher/LLaMA "
     "data work. A linear classifier over hashed unigram features "
     "(the SAME 256 md5-prefix buckets quality_dsir_weights built) is "
     "trained in closed form as the Naive-Bayes log-count ratio "
@@ -2344,7 +2338,7 @@ SELECT n_planted, n_candidates, n_rejected, n_hit,
 FROM cnt
 """,
     doc="Classifier-quality EVAL against planted ground truth "
-    "(VERDICT r11 item 5 — the eval_langid_confusion / "
+    "(the eval_langid_confusion / "
     "eval_dedup_recall / eval_ann_recall pattern applied to the "
     "quality_classifier_filter gate): deterministically plant one "
     "boilerplate-spam document per 10 corpus docs (fixed junk "
@@ -2398,15 +2392,15 @@ def eval_classifier_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("planted").alias("source"),
     )
     corpus = docs.select("doc_id", "text", "source").unionByName(planted)
-    # r13 second pass: carry `source` through the feature aggregation
-    # — the labels join into training and the source join onto scores
-    # both vanish (guide §2.4; _clf_scored rationale).
+    # Carry `source` through the feature aggregation — no labels join
+    # into training and no source join onto scores (_clf_scored
+    # rationale).
     feats = hashed_doc_features(corpus, carry=("source",)).localCheckpoint(
         eager=False
     )
     labels = corpus.select("doc_id", (F.col("source") == "src0").alias("pos"))
     # validate=False: trusted closed-form path, no per-run swap-point
-    # driver collect (r13); lazy checkpoint single-computes the
+    # driver collect; lazy checkpoint single-computes the
     # <=256-row model for its two reads.
     model = nb_linear_classifier(
         feats, labels, pos_col=F.col("source") == "src0"
@@ -2532,10 +2526,10 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # Truth pairs join on 8-byte xxhash64 longs (r13 string-key rule:
+    # Truth pairs join on 8-byte xxhash64 longs (string-key rule:
     # the key never reaches output; the oracle's md5 is its own
     # equality bridge — only content equality crosses engines). Both
-    # hashes from ONE text scan (content_pair_hashes, r13).
+    # hashes from ONE text scan (content_pair_hashes).
     hp = D.content_pair_hashes(docs)
     dup_side = hp.select("doc_id", F.col("kd").alias("k"))
     src_side = hp.select(
@@ -2592,9 +2586,9 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (hash_coin) and its canonical id — and every pair member is in
     # cc by construction (pairs built the edge list). So the leak
     # counts need only the TINY cc label table joined twice, not two
-    # joins against the all-docs lab table (r13: the old shape
-    # shuffled every doc's labels through two SortMergeJoins to
-    # decorate ~5% of docs' pairs; same values, pair-scale bytes).
+    # joins against the all-docs lab table (that shape shuffles every
+    # doc's labels through two SortMergeJoins to decorate ~5% of
+    # docs' pairs; same values, pair-scale bytes).
     cca = cc.select(
         F.col("node").alias("id_a"), F.col("component").alias("comp_a")
     )

@@ -426,7 +426,7 @@ FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
     "contract is a bound: |approx - exact| / exact < 5% (rsd=0.02, so "
     "5% is ~2.5 sigma). Spark emits the exact count plus the bound "
     "verdict; the oracle emits the exact count plus literal TRUE — a "
-    "full hash check instead of r1's rows-only `no_oracle`.",
+    "full hash check instead of a rows-only `no_oracle`.",
 )
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
@@ -1078,7 +1078,7 @@ def stat_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             # The denominator in DOUBLE: long n*(n*n-1) overflows at
             # ~2.1M rows — ARITHMETIC_OVERFLOW under ANSI, silent
-            # garbage without (r11 review); rho is a double anyway.
+            # garbage without; rho is a double anyway.
             F.lit(1.0)
             - 6.0
             * F.col("sum_d2").cast("double")
@@ -1554,7 +1554,7 @@ def profile_fk_inclusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             # NULL is not an FK violation (and COUNT(DISTINCT) in the
             # oracle excludes it) — keep NULL out of the distinct set
             # or a single NULL child value caps inclusion below 1.0
-            # and misreports a true FK (r11 review).
+            # and misreports a true FK.
             .filter(F.col(child_c).isNotNull())
             .distinct()
         )
@@ -1626,7 +1626,7 @@ def join_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cov = (
         # No broadcast hint: part grows with sf (file header policy) —
-        # AQE picks broadcast while it fits (r11 review).
+        # AQE picks broadcast while it fits.
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey")
         .agg(F.countDistinct("p_type").alias("n_covered"))
@@ -1687,7 +1687,7 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # AQE decides), and the incidence table is materialized ONCE:
         # five plan branches consume it (n_orders, sup twice, both
         # self-join sides) and exchange reuse is not guaranteed across
-        # differently-shaped consumers (r11 review).
+        # differently-shaped consumers.
         li.join(part, li.l_partkey == part.p_partkey)
         .select(F.col("l_orderkey").alias("ok"), F.col("p_type").alias("t"))
         .distinct()
@@ -1757,7 +1757,7 @@ FROM ranked
     "carry 80% of revenue, and the top decile's share. Per-supplier "
     "revenue folds in one exact-cents pass; rank AND running cumsum "
     "both come from operators/prefix.py's two-phase bucketed prefix "
-    "machinery (VERDICT r5 item 4 — the supplier aggregate is "
+    "machinery (the supplier aggregate is "
     "key-bounded but grows WITH the data, so no unpartitioned "
     "window over it): ONE prefix_sums pass in (cents DESC, suppkey) "
     "order carries both the exclusive revenue prefix (-> running "

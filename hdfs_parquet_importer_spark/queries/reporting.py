@@ -103,11 +103,11 @@ def _fuzzy_candidate_pairs(names: DataFrame) -> DataFrame:
     each left name probes lengths {L-1, L, L+1} via a 3-way explode so
     the join is an EQUI-join on candidate length (lossless for
     dist<=1 — one edit changes length by at most 1). ONE shared
-    implementation for fuzzy_name_pairs and fuzzy_name_clusters (r11
-    review: the block was duplicated verbatim, so a blocking-scheme
-    change could silently give the two queries different candidate
-    sets). Returns (name_a, name_b, dist), name_a < name_b; no dedup
-    needed — a pair matches exactly one probe band."""
+    implementation for fuzzy_name_pairs and fuzzy_name_clusters (two
+    copies would let a blocking-scheme change silently give the two
+    queries different candidate sets). Returns (name_a, name_b, dist),
+    name_a < name_b; no dedup needed — a pair matches exactly one probe
+    band."""
     left = names.select(
         F.col("name").alias("name_a"),
         F.explode(
@@ -187,7 +187,7 @@ ORDER BY m.month
     doc="Period-over-period revenue report: monthly revenue (exact "
     "integer cents) with month-over-month and year-over-year "
     "percentage deltas via CALENDAR-key self-joins of the month "
-    "aggregate (r11 review: row-offset lag(1)/lag(12) silently "
+    "aggregate (row-offset lag(1)/lag(12) silently "
     "misaligns every delta after a gap month — a filtered subset or "
     "sparse dataset would label 1996-02 as 'year over' 1997-03). "
     "The ONLY full-table work is the monthly groupBy (map-side "
@@ -341,7 +341,7 @@ def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "value", F.lit(1).alias("is_obs")
     )
     u = grid.unionByName(obs)
-    # event_id tiebreak makes the sort a TOTAL order (r11 review):
+    # event_id tiebreak makes the sort a TOTAL order:
     # duplicate observations at one (user_id, ts) would otherwise
     # leave pv/nv partition-layout-dependent. Grid rows carry NULL
     # event_id but never tie with each other, and the is_obs key
@@ -478,7 +478,7 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SKIPS nulls (so a NULL field hashed like a missing field and
     # diverged from the oracle's null-propagating ||), and a silently
     # null-dropped row would weaken exactly the mutation detection
-    # this checksum exists for (r11 review).
+    # this checksum exists for.
     def _f(c: F.Column) -> F.Column:
         return F.coalesce(c.cast("string"), F.lit("<NULL>"))
 
@@ -692,7 +692,7 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = ev.agg(F.min("es").alias("e0"), F.max("es").alias("e1"))
     # Materialize (value, is_ref) once: rv and binned both read it,
     # and without the checkpoint each consumer replays the full events
-    # scan (r11 review — the same reuse shape report_data_card
+    # scan (the same reuse shape report_data_card
     # already checkpoints).
     tagged = ev.crossJoin(F.broadcast(bounds)).select(
         "value", (F.col("es") < F.expr("(e0 + e1) div 2")).alias("is_ref")
@@ -895,7 +895,7 @@ GROUP BY f.source ORDER BY f.source
     "to (source, lang, n_chars, fp, n_tok) feeding a per-source "
     "partial agg, plus one fp-keyed count whose >= 2 survivors join "
     "back as a flag — fingerprints travel as 8-byte xxhash64 longs "
-    "(r13 string-key rule; the oracle's md5 is its own bridge), text "
+    "(string-key rule; the oracle's md5 is its own bridge), text "
     "is read once. All ratios are means of exact 0/1 indicators, "
     "ROUND(4).",
 )
@@ -907,7 +907,7 @@ def report_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "lang",
         "n_chars",
-        # Dup fingerprint = xxhash64 long (r13 string-key rule): fp is
+        # Dup fingerprint = xxhash64 long (string-key rule): fp is
         # a groupBy + join-back key that never reaches output; the
         # oracle's md5 fingerprint is its own equality bridge.
         F.xxhash64(D.normalize_text(F.col("text"))).alias("fp"),

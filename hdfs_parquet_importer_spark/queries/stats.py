@@ -5,7 +5,7 @@ statistics surface, so everything here is additive).
 Design rule shared by the module: every statistic reduces through
 ONE partial-aggregable pass over the fact table (map-side combine →
 tiny shuffle), never a global sort or an unpartitioned window — the
-r4 `stat_spearman_rank` lesson applied from birth. Contingency /
+`stat_spearman_rank` lesson applied throughout. Contingency /
 cross tables are materialized only at category granularity (bounded
 by the product of distinct-category counts, never by row count).
 """
@@ -548,11 +548,11 @@ FROM ranked
     "content). Term counting is the usual vocab-bounded groupBy; "
     "the frequency rank comes from operators/prefix.py dist_rank "
     "(two-phase bucketed prefix counts — NO unpartitioned window "
-    "over the vocabulary; VERDICT r5 item 4), bucketed on "
+    "over the vocabulary), bucketed on "
     "(-f, first char of term): monotone in the (f DESC, term ASC) "
     "rank order, and the first-char split keeps the heavy f=1/f=2 "
     "tie plateaus from collapsing into one task. The fit itself is "
-    "the algebraic regr_slope/r2 aggregate. Deterministic term "
+    "the algebraic regr_slope/regr_r2 aggregate. Deterministic term "
     "tiebreak; ROUND(6) absorbs log-sum accumulation drift. Oracle "
     "keeps the naive row_number formulation as the correctness "
     "reference — identical ranks.",
@@ -572,7 +572,7 @@ def stat_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -f*128 + least(ascii(term[0]), 127) is monotone in that
     # composite order, so per-bucket windows compose into the exact
     # global row_number; ties on f split across ~36 first-char cells.
-    # The clamp (ADVICE r6) keeps monotonicity even if the tokenizer
+    # The clamp keeps monotonicity even if the tokenizer
     # ever admits non-ASCII first chars (ascii() then returns the
     # full codepoint >= 128, which would interleave plateaus);
     # least() maps them all onto the last cell, still monotone
@@ -773,8 +773,8 @@ def stat_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("swt / CAST(nullif(sw, 0) AS DOUBLE)").alias("mb")
     )
     # Count the PRE-repartition scan: counting o would replay the
-    # ensure_parallelism round-robin exchange just for a row count
-    # (r11 review); the raw scan count is metadata-pushable.
+    # ensure_parallelism round-robin exchange just for a row count;
+    # the raw scan count is metadata-pushable.
     n_rows = raw.agg(F.count(F.lit(1)).alias("n_rows"))
     return (
         means.agg(
@@ -817,7 +817,7 @@ FROM rk
     "row_number in textbook SQL — rides operators/prefix.py "
     "dist_rank (two-phase bucketed prefix counts, revenue-range "
     "bucket key), so no supplier-proportional input ever crosses one "
-    "task (VERDICT r5 item 4 discipline). Revenues are ROUND(2)-ed "
+    "task. Revenues are ROUND(2)-ed "
     "BEFORE ranking on both engines so the rank order itself is "
     "engine-independent; the final statistic is one algebraic "
     "aggregate. Oracle keeps the naive window formulation.",

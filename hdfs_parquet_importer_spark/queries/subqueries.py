@@ -206,7 +206,7 @@ def pivot_status_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pivot().count() leaves EMPTY cells NULL where the oracle's
     # COUNT(*) FILTER yields 0 (and the NULL decays the pandas column
     # to float64) — coalesce to 0 so a year missing one status stays
-    # parity-green (r11 review; gate data happens to fill every cell).
+    # parity-green (gate data happens to fill every cell).
     return pivoted.select(
         "order_year",
         *[F.coalesce(F.col(s), F.lit(0)).alias(s) for s in ("F", "O", "P")],
@@ -274,7 +274,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             # ONE percentile buffer for all four quantiles (the
             # array form agg_approx_percentile already uses): four
             # scalar calls would each hold the full per-group value
-            # list (r11 review). Integer labels avoid f"{int(p*100)}"
+            # list. Integer labels avoid f"{int(p*100)}"
             # float-truncation traps (0.29*100 -> 28).
             F.expr(
                 "percentile(l_extendedprice,"
@@ -314,7 +314,7 @@ FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     "[q-0.02, q+0.02] quantile envelope (accuracy=10000 guarantees "
     "rank error <= n/10000, far inside that band). The ENVELOPE "
     "itself ships as value columns that DuckDB re-derives with its "
-    "own exact quantile_cont (ADVICE r2: the bound must be "
+    "own exact quantile_cont (the bound must be "
     "independently derived, leaving only the engine-specific sketch "
     "estimate on the Spark side); Spark additionally emits the "
     "per-quantile verdicts vs literal TRUEs.",
@@ -384,7 +384,7 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
     "count must land within 6 binomial sigma of fraction*n_total "
     "(p=1e-9 false-alarm). The [mean-6s, mean+6s] acceptance band "
     "ships as value columns the oracle re-derives from its own exact "
-    "totals (ADVICE r2: independently-derived bounds); only the "
+    "totals (independently-derived bounds); only the "
     "sampled count itself stays Spark-side, distilled to the verdict.",
 )
 def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -442,7 +442,7 @@ def func_map_props(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             # try_cast, not cast: under Spark 4's default ANSI mode a
             # single non-integral props['k'] would abort the whole
-            # query instead of nulling the row (r11 review).
+            # query instead of nulling the row.
             F.try_element_at(m, F.lit("k")).try_cast("long").alias("k_val"),
             F.size(F.map_keys(m)).cast("long").alias("n_keys"),
         )

@@ -176,11 +176,10 @@ GROUP BY o_year
 ORDER BY o_year
 """,
     doc="TPC-H Q8: NATION_3's share of ECONOMY-part revenue sold into "
-    "ASIA, by order year (conditional-aggregate ratio). r11 restores "
-    "the spec's o_orderdate BETWEEN 1995-01-01 AND 1996-12-31 "
-    "restriction, previously dropped without documentation — it "
-    "pushes into the orders scan and cuts the joined lineitem volume "
-    "~3.5x at every sf.",
+    "ASIA, by order year (conditional-aggregate ratio). The spec's "
+    "o_orderdate BETWEEN 1995-01-01 AND 1996-12-31 restriction is "
+    "kept — it pushes into the orders scan and cuts the joined "
+    "lineitem volume ~3.5x at every sf.",
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
@@ -413,7 +412,7 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pattern) — NOT an unbounded partitionBy() window, which would pull
 # every supplier aggregate through one task at scale. Revenue
 # accumulates in EXACT integer cent-percent units (the q9 hardening):
-# r11 review found a supplier whose float revenue sum lands exactly on
+# a supplier's float revenue sum can land exactly on
 # a round-half-cent tie, where ROUND-before-max depends on
 # accumulation order — with exact bigint sums divided once at the end,
 # both engines round the identical double and the max-equality (row
@@ -487,7 +486,7 @@ def q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Brand#5 EXISTS in the testdata domain (Brand#1..25) so the
     # NOT-brand predicate genuinely excludes rows — the spec's
     # Brand#45 was out of domain and the filter was vacuous, proving
-    # nothing about the != pushdown path (r11 review).
+    # nothing about the != pushdown path.
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#5")
         & (F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49))
@@ -552,9 +551,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") <= 10) & (F.col("p_type") == "ECONOMY")
     )
-    # Pre-aggregate ONLY lineitem rows of qualifying parts (r11
-    # review: ~3% survive at gate scale, so aggregating all of
-    # lineitem first wasted a 32x-larger shuffle; legal because the
+    # Pre-aggregate ONLY lineitem rows of qualifying parts (~3%
+    # survive at gate scale, so aggregating all of lineitem first
+    # would waste a 32x-larger shuffle; legal because the
     # part filter is per-partkey, so min over the restricted rows
     # equals the spec's min). Catalyst cannot push the later part
     # join below the groupBy on its own — the left_semi does it.
@@ -878,8 +877,8 @@ WHERE p_partkey = l_partkey
 def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
-    # Per-part averages over ONLY the brand's lineitem rows (r11
-    # review: ~4% survive, so averaging all of lineitem wasted a
+    # Per-part averages over ONLY the brand's lineitem rows (~4%
+    # survive, so averaging all of lineitem would waste a
     # 27x-larger shuffle; avg is per-partkey, so the restriction is
     # value-neutral — Catalyst cannot infer it through the aggregate).
     avg_qty = (

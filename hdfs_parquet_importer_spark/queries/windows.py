@@ -162,10 +162,10 @@ ORDER BY l_suppkey, l_orderkey, l_linenumber
     "different prices made the frame sums engine- and run-dependent. "
     "With the value as tiebreak, any remaining ties are "
     "value-identical and every tie permutation yields the same "
-    "output multiset. The r1 driver hash-fail was NOT tie order: "
+    "output multiset. Tie order is not the parity hazard here: "
     "DuckDB SUM(BIGINT) yields HUGEINT, which pandas materializes as "
     "float64 (123.0) while Spark emits int64 (123) — the driver's "
-    "dtype-sensitive hasher sees different values. Oracle now CASTs "
+    "dtype-sensitive hasher sees different values. The oracle CASTs "
     "the windowed quotient back to BIGINT (see tools/dtype_audit.py).",
 )
 def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,7 +314,7 @@ ORDER BY total, o_orderkey
     doc="RANGE frame (value-based, not row-based): how many orders "
     "fall within $10k below each order's price. Range frames bound "
     "the frame by the ORDER BY value — ties and gaps behave unlike "
-    "ROWS frames. Computed by operators/prefix.banded_range_agg (r5): "
+    "ROWS frames. Computed by operators/prefix.banded_range_agg: "
     "a trailing $10k frame can only reach one $10k price cell back, "
     "so rows are mirrored into their own and the next cell and a "
     "cell-PARTITIONED range window aggregates — exact, parallel per "
@@ -446,7 +446,7 @@ FROM seq ORDER BY user_id, event_id
     "explicit value-IS-NOT-NULL filter on BOTH sides: Spark's "
     "collect_list silently drops NULLs while DuckDB's list() keeps "
     "them, so parity must not depend on the generator never emitting "
-    "nulls (ADVICE r4). Unbounded-history EWMA over a stream belongs "
+    "nulls. Unbounded-history EWMA over a stream belongs "
     "to applyInPandasWithState (streaming/), where per-key state "
     "carries the accumulator.",
 )

@@ -83,8 +83,8 @@ def write_partitioned_parquet(
     """
     out = df.repartition(*partition_cols)
     if sort_cols:
-        # Partition columns must LEAD the in-partition sort (r11
-        # review): the partitioned writer requires ordering by the
+        # Partition columns must LEAD the in-partition sort: the
+        # partitioned writer requires ordering by the
         # partition columns and injects its own NON-STABLE sort when
         # unsatisfied — which silently destroyed the sort_cols order.
         # Leading with them satisfies the requirement, so the writer
@@ -139,7 +139,7 @@ def cached_tmp_dataset(namespace: str, src_paths: list[str], build) -> str:
     copy, so readers (gated on the final path existing) never observe
     a half-written or mid-overwrite directory.
 
-    Shared-host hardening (ADVICE r8 item 3): the cache root is
+    Shared-host hardening: the cache root is
     namespaced by UID and created mode 0700 (another user can neither
     pre-create our entries nor read them), and an entry is served only
     if it carries the completeness marker this function writes after a
@@ -179,7 +179,7 @@ def cached_tmp_dataset(namespace: str, src_paths: list[str], build) -> str:
         )
     # makedirs' mode only applies when it CREATES the directory; a
     # pre-existing same-uid root with wider perms would silently keep
-    # them (ADVICE r9). chmod unconditionally (after the ownership
+    # them. chmod unconditionally (after the ownership
     # check, so a squatted dir still gets the clean error above) so
     # the documented 0700 holds no matter who created it first.
     os.chmod(root_dir, 0o700)

@@ -443,8 +443,8 @@ def check_partition_layout(spark, path: str) -> None:
     session's configuration (``Path.getFileSystem``), not driver-
     local ``os`` calls — so the contract holds for ``hdfs://`` /
     ``s3a://`` / ``file://`` URIs exactly as for bare local paths
-    (VERDICT r7 item 8; the old ``os.path`` form no-opped on any
-    remote URI). Module-level so the guard is unit-testable without
+    (a plain ``os.path`` form would no-op on any remote URI).
+    Module-level so the guard is unit-testable without
     running a stream.
     """
     _jvm, fs, jpath = _hadoop_fs(spark, path)
@@ -486,7 +486,7 @@ def write_stream_parquet(
     layouts, so the first batch fails fast instead.
 
     The mixed-layout guard runs through the session's Hadoop
-    FileSystem API (VERDICT r7 item 8), so it holds for ANY target
+    FileSystem API, so it holds for ANY target
     URI the cluster can write — ``hdfs://``, ``s3a://``, ``file://``
     and bare local paths all resolve through the same
     ``Path.getFileSystem(hadoopConf)`` dispatch; at 100 TB the sink
@@ -544,13 +544,13 @@ def recover_upsert_target(path: str, spark) -> None:
       but its cleanup didn't; stale ``__staging_*`` dirs are
       incomplete writes from a dead batch. Both are safe to drop.
 
-    Runs through the Hadoop FileSystem API (r8, completing VERDICT r7
-    item 8: the old ``os``/``shutil`` form silently skipped recovery
-    for any remote URI). The staging sweep lists the parent directory
-    and matches names LITERALLY by prefix — no globbing at all — so a
-    target containing glob metacharacters ([, ?, *) still sweeps its
-    own leftovers and can never sweep a look-alike neighbor (the old
-    glob form needed explicit escaping for the same guarantee).
+    Runs through the Hadoop FileSystem API (an ``os``/``shutil`` form
+    would silently skip recovery for any remote URI). The staging sweep
+    lists the parent directory and matches names LITERALLY by prefix —
+    no globbing at all — so a target containing glob metacharacters ([,
+    ?, *) still sweeps its own leftovers and can never sweep a
+    look-alike neighbor (the old glob form needed explicit escaping for
+    the same guarantee).
 
     SINGLE WRITER only: recovery assumes no other process is mid-swap
     on the same target. Structured Streaming enforces this for the
@@ -601,14 +601,14 @@ def write_stream_upsert(
     between the two renames), stale asides and staging dirs are
     swept, and THEN the redelivered micro-batch merges against the
     restored pre-crash table — so replay can never collapse the
-    target to just the batch's own keys (ADVICE r5). Late or
+    target to just the batch's own keys. Late or
     replayed rows can never regress a key (argmax is idempotent and
     order-insensitive), so redelivered micro-batches after a crash
     recover exactly-once table state from the checkpointed source
     offsets. At scale the rewrite narrows to changed partitions
     (dynamic partition overwrite) or a format with real MERGE; the
     per-batch plan is identical. All filesystem steps go through the
-    Hadoop FileSystem API (r8), so remote URIs take the same code
+    Hadoop FileSystem API, so remote URIs take the same code
     path as local dirs; the crash-safety argument additionally needs
     ATOMIC directory rename, which local filesystems and HDFS provide
     — object stores whose rename is copy+delete (s3a) get the same

@@ -3,9 +3,12 @@ and a union-find cross-check over the real MinHash pair graph."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from hdfs_parquet_importer_spark.operators import dedup as D
+from hdfs_parquet_importer_spark.operators import graph as G
 from hdfs_parquet_importer_spark.operators.graph import connected_components
 from hdfs_parquet_importer_spark.tables import load_table
 
@@ -127,24 +130,6 @@ def test_pagerank_uniform_on_symmetric_cycle(spark):
         assert abs(v - 1.0 / 3.0) < 1e-12
 
 
-def test_pagerank_checkpointed_equals_unchckpointed(spark):
-    # checkpoint_every only applies on the lazy (materialize=False)
-    # path — with the per-iteration contrib checkpoint on it would be
-    # duplicate work and is skipped (ADVICE r6).
-    edges = [("a", "b", 1.0), ("b", "a", 3.0), ("b", "c", 1.0), ("c", "a", 1.0)]
-    lazy = _pagerank_spark(spark, edges, damping=0.85, n_iter=6)
-    ckpt = _pagerank_spark(
-        spark,
-        edges,
-        damping=0.85,
-        n_iter=6,
-        checkpoint_every=2,
-        materialize=False,
-    )
-    for k in lazy:
-        assert abs(lazy[k] - ckpt[k]) < 1e-15
-
-
 def _ref_lpa(edge_list, rounds):
     """Pure-Python synchronous LPA, tiebreak (count DESC, label ASC)."""
     from collections import Counter, defaultdict
@@ -216,16 +201,10 @@ def _union_find_reference(edge_rows):
 
 
 def test_cc_matches_independent_union_find(spark, sf_dir):
-    """connected_components (pointer-jumping since r9) must compute
-    the identical fixpoint (min reachable id) as a driver-side
-    union-find on a long chain (the shortcut's worst-case input) and
-    on the real MinHash pair graph; the _jump alias stays
-    value-identical."""
-    from hdfs_parquet_importer_spark.operators.graph import (
-        connected_components,
-        connected_components_jump,
-    )
-
+    """The pointer-jumping connected_components must compute the
+    identical fixpoint (min reachable id) as a driver-side union-find
+    on a long chain (the shortcut's worst-case input) and on the real
+    MinHash pair graph."""
     chain_edges = [(i, i + 1) for i in range(30, 60)]
     chain = spark.createDataFrame(chain_edges, ["id_a", "id_b"])
     got = {
@@ -235,11 +214,6 @@ def test_cc_matches_independent_union_find(spark, sf_dir):
     want = set(_union_find_reference(chain_edges).items())
     assert got == want
     assert all(c == 30 for _, c in got)
-    alias = {
-        (r.node, r.component)
-        for r in connected_components_jump(chain).collect()
-    }
-    assert alias == want
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_dedup_pairs(
@@ -255,17 +229,13 @@ def test_cc_matches_independent_union_find(spark, sf_dir):
 
 
 def test_cc_converges_exactly_at_max_iter(spark):
-    """ADVICE r8 item 5: a graph whose labels stop moving exactly on
-    round max_iter is CONVERGED — the verification round must observe
-    changed == 0 instead of raising; movement beyond max_iter still
-    raises; max_iter=0 is rejected (not a silent identity labeling).
-    Round counts are for the r9 folded (pointer-jumping) operator: a
-    31-node path converges in exactly 4 rounds."""
+    """A graph whose labels stop moving exactly on round max_iter is
+    CONVERGED — the verification round must observe changed == 0
+    instead of raising; movement beyond max_iter still raises;
+    max_iter=0 is rejected (not a silent identity labeling). With the
+    propagate+jump round, a 31-node path converges in exactly 4
+    rounds."""
     import pytest
-
-    from hdfs_parquet_importer_spark.operators.graph import (
-        connected_components,
-    )
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], ["id_a", "id_b"]
@@ -285,11 +255,18 @@ def test_cc_converges_exactly_at_max_iter(spark):
         connected_components(chain, max_iter=0)
 
 
-def test_cc_driver_and_distributed_strategies_agree(spark):
-    """r14: connected_components picks a driver-local strategy for
-    size-gated graphs (the broadcast-join analogy). Both strategies
-    must produce identical labelings, identical schemas, and the
-    identical max_iter/raise contract."""
+def _distributed_cc(monkeypatch, edges, **kw):
+    """connected_components with the driver gate closed."""
+    with monkeypatch.context() as m:
+        m.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", 0)
+        return connected_components(edges, **kw)
+
+
+def test_cc_driver_and_distributed_strategies_agree(spark, monkeypatch):
+    """connected_components picks a driver-local strategy for
+    graphs under DRIVER_CC_MAX_SYM_ROWS (the broadcast-join analogy).
+    Both strategies must produce identical labelings, identical
+    schemas, and the identical max_iter/raise contract."""
     import pytest
 
     edges = (
@@ -299,7 +276,7 @@ def test_cc_driver_and_distributed_strategies_agree(spark):
     )
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     local_df = connected_components(df)
-    dist_df = connected_components(df, driver_max_sym_rows=0)
+    dist_df = _distributed_cc(monkeypatch, df)
     assert [f.dataType for f in local_df.schema.fields] == [
         f.dataType for f in dist_df.schema.fields
     ]
@@ -315,7 +292,7 @@ def test_cc_driver_and_distributed_strategies_agree(spark):
         (r.node, r.component) for r in connected_components(sdf).collect()
     } == {
         (r.node, r.component)
-        for r in connected_components(sdf, driver_max_sym_rows=0).collect()
+        for r in _distributed_cc(monkeypatch, sdf).collect()
     } == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
 
     # The convergence contract is strategy-independent: a 31-node
@@ -324,17 +301,16 @@ def test_cc_driver_and_distributed_strategies_agree(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], ["id_a", "id_b"]
     )
-    for kw in ({}, {"driver_max_sym_rows": 0}):
-        got = {
-            (r.node, r.component)
-            for r in connected_components(chain, max_iter=4, **kw).collect()
-        }
+    for cc in (connected_components, partial(_distributed_cc, monkeypatch)):
+        got = {(r.node, r.component) for r in cc(chain, max_iter=4).collect()}
         assert got == {(i, 0) for i in range(31)}
         with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(chain, max_iter=3, **kw)
+            cc(chain, max_iter=3)
 
 
-def test_cc_mixed_int_long_ids_same_schema_on_both_strategies(spark):
+def test_cc_mixed_int_long_ids_same_schema_on_both_strategies(
+    spark, monkeypatch
+):
     """An int ``src`` and a long ``dst`` widen to long in the
     symmetrized edge list; the driver path must report that type,
     exactly as the distributed path does."""
@@ -342,7 +318,7 @@ def test_cc_mixed_int_long_ids_same_schema_on_both_strategies(spark):
         [(1, 2), (2, 3), (7, 3_000_000_000)], "id_a int, id_b long"
     )
     local_df = connected_components(df)
-    dist_df = connected_components(df, driver_max_sym_rows=0)
+    dist_df = _distributed_cc(monkeypatch, df)
     assert local_df.schema == dist_df.schema
     assert {f.dataType.simpleString() for f in local_df.schema.fields} == {
         "bigint"
@@ -350,3 +326,63 @@ def test_cc_mixed_int_long_ids_same_schema_on_both_strategies(spark):
     local = {(r.node, r.component) for r in local_df.collect()}
     assert local == {(r.node, r.component) for r in dist_df.collect()}
     assert local == {(1, 1), (2, 1), (3, 1), (7, 7), (3_000_000_000, 7)}
+
+
+def test_cc_max_iter_rejected_before_any_spark_job(spark):
+    """An invalid max_iter is a caller error: it must raise before the
+    symmetrized edge list is built or checkpointed, so the call runs
+    no Spark job."""
+    import pytest
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    sc = spark.sparkContext
+    group = "test_cc_max_iter_rejected_before_any_spark_job"
+    sc.setJobGroup(group, "connected_components(max_iter=0)")
+    try:
+        with pytest.raises(ValueError, match="max_iter"):
+            connected_components(df, max_iter=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_cc_driver_gate_boundary(spark, monkeypatch):
+    """DRIVER_CC_MAX_SYM_ROWS is inclusive: a graph whose symmetrized
+    edge list has exactly that many rows takes _driver_cc, one row
+    fewer takes the distributed loop, and both return the same
+    labels."""
+    edges = [(i, i + 1) for i in range(9)] + [(20, 21), (21, 22)]
+    sym_rows = len({(a, b) for a, b in edges} | {(b, a) for a, b in edges})
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+
+    driver_calls, legs = [], []
+    real_driver_cc, real_record = G._driver_cc, G.record_loop_leg
+
+    def driver_spy(sym, max_iter):
+        driver_calls.append(max_iter)
+        return real_driver_cc(sym, max_iter)
+
+    def record_spy(label, frame):
+        legs.append(label)
+        return real_record(label, frame)
+
+    monkeypatch.setattr(G, "_driver_cc", driver_spy)
+    monkeypatch.setattr(G, "record_loop_leg", record_spy)
+
+    monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", sym_rows)
+    at_gate = {(r.node, r.component) for r in connected_components(df).collect()}
+    assert len(driver_calls) == 1 and legs == []
+
+    monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", sym_rows - 1)
+    past_gate = {
+        (r.node, r.component) for r in connected_components(df).collect()
+    }
+    assert len(driver_calls) == 1
+    assert legs and set(legs) == {"connected_components.leg"}
+
+    assert at_gate == past_gate
+    assert at_gate == {(i, 0) for i in range(10)} | {
+        (20, 20), (21, 20), (22, 20)
+    }

@@ -1,12 +1,11 @@
 """Multimodal pipeline tests: binary payload schema, Arrow-batched
-mapInPandas decode/features/frame-sample plumbing, stub gating."""
+mapInPandas decode plumbing, stub gating."""
 
 from __future__ import annotations
 
 import zlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from hdfs_parquet_importer_spark.operators import multimodal as M
 from hdfs_parquet_importer_spark.tables import load_table
@@ -54,30 +53,6 @@ def test_decode_matches_local_computation(spark):
     body = payload[M._HDR_SIZE:]
     assert r["byte_sum"] == sum(body)
     assert r["crc32"] == zlib.crc32(body)
-
-
-def test_extract_features_shape_and_norm(media):
-    rows = M.extract_features(media, dim=16).collect()
-    assert len(rows) == 30
-    for r in rows:
-        assert len(r["feature"]) == 16
-        n = sum(x * x for x in r["feature"])
-        assert n == pytest.approx(1.0, abs=1e-3)
-
-
-def test_frame_sample_multiplies_rows(media):
-    frames = M.frame_sample(media.filter(F.col("kind") == "video"), every_n=2)
-    per = {
-        r["media_id"]: r["n"]
-        for r in frames.groupBy("media_id").agg(F.count("*").alias("n")).collect()
-    }
-    meta = {
-        r["media_id"]: r["meta"]["n_frames"]
-        for r in media.filter(F.col("kind") == "video").collect()
-    }
-    assert per, "video rows expected"
-    for mid, n in per.items():
-        assert n == (meta[mid] + 1) // 2  # ceil(n_frames / every_n)
 
 
 # ---------------------------------------------------------------------------

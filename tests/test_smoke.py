@@ -83,7 +83,7 @@ def test_no_rdd_api_in_package():
     """The DataFrame API is the contract: `.rdd` forces an RDD
     lineage materialization per call and breaks under Spark Connect.
     Grep-gate the whole package (code, not prose) so it can't creep
-    back (ADVICE r4 found it in ensure_parallelism)."""
+    back."""
     import pathlib
     import re
 
@@ -95,6 +95,50 @@ def test_no_rdd_api_in_package():
             if re.search(r"\.rdd\b", code) and '``' not in line:
                 offenders.append(f"{py.name}:{lineno}")
     assert not offenders, offenders
+
+
+def _package_prose(src: str):
+    """(line, text) of every comment, docstring and ``doc=`` keyword
+    string in one module's source — its prose, never its code or the
+    oracle SQL string literals."""
+    import ast
+    import io
+    import tokenize
+
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            yield tok.start[0], tok.string
+    docstring_owners = (
+        ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef
+    )
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, docstring_owners):
+            doc = ast.get_docstring(node, clean=False)
+            if doc is not None:
+                yield node.body[0].lineno, doc
+        elif isinstance(node, ast.keyword) and node.arg == "doc":
+            for sub in ast.walk(node.value):
+                if isinstance(sub, ast.Constant) and isinstance(sub.value, str):
+                    yield sub.lineno, sub.value
+
+
+def test_no_round_history_in_package_prose():
+    """Package comments, docstrings and query ``doc=`` text state the
+    condition they protect, so a reader can check them against the
+    code alone; round and review tags (``r13``, ``VERDICT``,
+    ``ADVICE``) point at logs that are not part of the package."""
+    import pathlib
+    import re
+
+    tag = re.compile(r"\b(r\d{1,2}|VERDICT|ADVICE)\b")
+    pkg = pathlib.Path(__file__).parent.parent / "hdfs_parquet_importer_spark"
+    offenders = [
+        f"{py.relative_to(pkg)}:{lineno}: {m.group(0)}"
+        for py in sorted(pkg.rglob("*.py"))
+        for lineno, text in _package_prose(py.read_text())
+        for m in tag.finditer(text)
+    ]
+    assert not offenders, f"{len(offenders)} round-history tags: {offenders}"
 
 
 def test_bench_stdout_line_fits_driver_tail():

@@ -88,7 +88,7 @@ def test_fingerprints(spark):
         for r in df.select(
             "doc_id",
             T.md5_fingerprint(F.col("text")).alias("fp"),
-            T.kgram_min_fingerprint(F.col("text"), 5).alias("kg"),
+            T.kgram_min_from_tokens(T.tokens(F.col("text")), 5).alias("kg"),
         ).collect()
     }
     assert rows[1] == rows[2]
