@@ -67,8 +67,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hdfs_parquet_importer_spark.operators.util import record_loop_leg
-
 from hdfs_parquet_importer_spark.operators import dedup as D
 
 SEP = "."
@@ -266,7 +264,6 @@ def learn_merges_iterative(
             .orderBy(F.desc("n"), "pair")
             .limit(1)
         )
-        record_loop_leg("bpe_multiround.leg", top)
         merges = (
             merges.join(F.broadcast(top), F.lit(True), "left")
             .select(

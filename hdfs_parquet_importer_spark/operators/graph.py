@@ -26,11 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hdfs_parquet_importer_spark.operators.util import (
-    loop_leg_capture_active,
-    record_loop_leg,
-)
-
 # Size gate for the driver-local CC strategy, read on every call. The
 # analogy is Spark's own broadcast-join selection: pick the physical
 # strategy by measured input size. 2e5 symmetrized rows is a few MB
@@ -88,14 +83,8 @@ def connected_components(
     # most DRIVER_CC_MAX_SYM_ROWS rows (one count over the
     # checkpointed sym), _driver_cc runs the identical rounds on the
     # driver: same propagate+jump schedule, same per-round changed
-    # test, same max_iter/raise contract, same labels. Loop-leg
-    # capture forces the distributed path so the plan-audit gates
-    # keep seeing the iterated join.
-    if (
-        DRIVER_CC_MAX_SYM_ROWS > 0
-        and not loop_leg_capture_active()
-        and sym.count() <= DRIVER_CC_MAX_SYM_ROWS
-    ):
+    # test, same max_iter/raise contract, same labels.
+    if DRIVER_CC_MAX_SYM_ROWS > 0 and sym.count() <= DRIVER_CC_MAX_SYM_ROWS:
         return _driver_cc(sym, max_iter)
 
     labels = (
@@ -147,7 +136,6 @@ def connected_components(
             .withColumn("_changed", F.col("label") < F.col("_prev"))
             .drop("_prev")
         )
-        record_loop_leg("connected_components.leg", new_labels)
         new_labels = new_labels.localCheckpoint(eager=False)
         changed = new_labels.filter(F.col("_changed")).count()
         labels = new_labels.drop("_changed")
@@ -361,7 +349,6 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        record_loop_leg("pagerank.leg", ranks)
     return ranks
 
 
@@ -529,5 +516,4 @@ def label_propagation(
             )
             .select("node", F.col("top.label").alias("label"))
         )
-        record_loop_leg("label_propagation.leg", lbl)
     return lbl.localCheckpoint(eager=False)

@@ -22,8 +22,6 @@ from __future__ import annotations
 
 import math
 
-from hdfs_parquet_importer_spark.operators.util import record_loop_leg
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -95,7 +93,6 @@ def kmeans_fit(
     for _ in range(max_iter):
         cluster_col, dist2_col = _assign_exprs(centroids)
         assigned = vecs.select(id_col, "embedding", cluster_col, dist2_col)
-        record_loop_leg("kmeans.leg", assigned)
         # One pass computes the update AND the objective: inertia is
         # the sum of dist2 under the current centroids, folded into
         # the same (cluster, dim) partial-agg shuffle via grouping on

@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hdfs_parquet_importer_spark.operators.util import record_loop_leg
-
 
 def covariance_long(emb: DataFrame, col: str = "embedding") -> DataFrame:
     """(i, j, cov) population covariance of an array<float> column.
@@ -101,7 +99,6 @@ def top_eigenvector(
                 (F.col("av") / F.col("nrm")).alias("v"),
             )
         )
-        record_loop_leg("pca_power.leg", v)
         # EAGER: v is a normalized double-sum vector read by the
         # next iteration AND the Rayleigh quotient — a recompute
         # race could hand consumers ulp-different vectors.

@@ -2,64 +2,7 @@
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
-
-# ---------------------------------------------------------------------------
-# Loop-leg plan capture.
-#
-# Iterative operators (pagerank, connected components, LPA, k-core,
-# k-means, PCA power iteration, the BPE trainer) execute their joins
-# at PLAN-CONSTRUCTION time behind eager localCheckpoints, so the
-# final DataFrame's plan — the only thing tools/plan_audit.py and the
-# tests/test_plans.py cartesian/window gates used to see — covers
-# only the last leg. Loop bodies call ``record_loop_leg`` on the
-# per-iteration frame BEFORE it is checkpointed; outside a
-# ``capture_loop_legs()`` context this is a None-check no-op, so
-# production paths pay nothing.
-# ---------------------------------------------------------------------------
-
-_LOOP_LEGS: dict[str, list[str]] | None = None
-_MAX_LEGS_PER_LABEL = 2  # iteration 1 + one steady-state leg
-
-
-def record_loop_leg(label: str, df: DataFrame) -> None:
-    """Record ``df``'s formatted plan under ``label`` if capture is on."""
-    global _LOOP_LEGS
-    if _LOOP_LEGS is None:
-        return
-    legs = _LOOP_LEGS.setdefault(label, [])
-    if len(legs) >= _MAX_LEGS_PER_LABEL:
-        return
-    jvm = df.sparkSession._jvm
-    legs.append(
-        df._jdf.queryExecution().explainString(
-            jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-    )
-
-
-def loop_leg_capture_active() -> bool:
-    """True inside a :func:`capture_loop_legs` context — operators
-    with a size-gated local strategy (connected_components) force
-    their distributed loop under capture so the plan-audit gates keep
-    seeing the iterated joins."""
-    return _LOOP_LEGS is not None
-
-
-@contextmanager
-def capture_loop_legs():
-    """Enable loop-leg capture; yields {label: [formatted plans]}."""
-    global _LOOP_LEGS
-    saved = _LOOP_LEGS
-    _LOOP_LEGS = {}
-    try:
-        yield _LOOP_LEGS
-    finally:
-        _LOOP_LEGS = saved
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -74,62 +74,61 @@ def register(name: str, oracle: str | None, doc: str = ""):
 # leaves an edited query unverified. The queue for the next rotation is
 # kept in ROADMAP.md.
 _DRIVER_WINDOW: tuple[str, ...] = (
-    # P1: loop, dedup and quality-model changes not yet driver-checked.
-    "graph_label_propagation",
-    "dedup_semdedup",
+    # P1: the six near-dup oracles now built on the shared
+    # shingle-overlap CTE, and graph_k_core, whose loop body changed.
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "eval_dedup_recall",
     "dedup_cluster_canonical",
-    "mix_quota_by_quality",
-    "quality_classifier_score",
-    "eval_classifier_quality",
-    # P1: consumers of the edited pagerank, tfidf_weights and
-    # connected_components operators.
-    "graph_pagerank",
-    "doc_tfidf_cosine_topk",
-    "dedup_clusters",
-    "fuzzy_name_clusters",
-    "split_leakage_audit",
+    "dedup_incremental_batch",
+    "dedup_containment",
+    "graph_k_core",
     # P4: the oldest driver greens.
-    "func_collation_lcase",
-    "func_conditional",
-    "func_date_arith",
-    "func_explode_outer",
-    "func_nullsafe_eq",
-    "text_df_top_terms",
-    "text_fingerprint",
-    "text_mean_token_df",
-    "window_first_last",
-    "window_rank_dense",
-    "dedup_exact",
-    # P4 next-oldest greens, P5 representatives first (arrow_map_norms
-    # is the pandas_surface representative).
-    "text_langid",
-    "embedding_kmeans",
-    "agg_cube",
-    "window_moving_avg",
-    "join_broadcast_dim",
-    "etl_date_enrich",
-    "q8_market_share",
-    "subq_global_avg_anti",
-    "stat_chi2_independence",
-    "arrow_map_norms",
-    "agg_approx_distinct",
-    "q9_product_profit",
-    "etl_upsert",
-    "func_higher_order",
-    "window_topk_per_group",
-    "text_tokens",
-    "tokenize_bpe_encode",
-    "pivot_status_by_year",
-    "fuzzy_name_pairs",
-    "agg_rollup",
-    "q13_customer_distribution",
-    "func_sql_udf",
-    "window_quartile_scalable",
-    "multimodal_decode_stats",
-    "pack_bpe_sequences",
-    "sample_systematic",
-    "agg_grouping_sets",
-    "q15_top_supplier",
+    "asof_join_nearest",
+    "embedding_centroids",
+    "tokenize_bpe_vocab_sweep",
+    "window_distribution",
+    "agg_stats",
+    "q16_supplier_cnt",
+    "text_top_ngrams",
+    "tokenize_bpe_multiround",
+    "join_interval_bucketed",
+    "q21_waiting_suppliers",
+    "text_rolling_hash",
+    "multimodal_audio_resample",
+    "embedding_quantize_int8",
+    # P5: the etl_parity and pandas_surface representatives.
+    "etl_csv_roundtrip",
+    "pandas_udf_log_price",
+    # P4: next-oldest greens, spread across families.
+    "q3_shipping_priority",
+    "q5_local_supplier",
+    "join_salted_skew",
+    "agg_salted_two_phase",
+    "topk_orders",
+    "q2_min_cost_supplier",
+    "agg_approx_top_k",
+    "sql_recursive_cte",
+    "func_parameterized_sql",
+    "window_running_sum",
+    "events_session_window",
+    "text_repetition",
+    "text_pii_scan",
+    "pack_sequences",
+    "ann_mips_topk",
+    "vocab_growth_heaps",
+    "mix_domain_quota",
+    "pack_sorted_stream",
+    "text_kneser_ney_bigram",
+    "subq_scalar_avg_qty",
+    "subq_in_heavy_orders",
+    "unpivot_brand_metrics",
+    "agg_approx_percentile",
+    "stat_theil_sen_slope",
+    "dq_psi_drift",
+    "dq_observe_metrics",
+    "ts_ewma",
+    "graph_jaccard_neighbors",
 )
 
 

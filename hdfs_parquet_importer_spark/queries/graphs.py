@@ -42,10 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hdfs_parquet_importer_spark.operators.util import (
-    ensure_parallelism,
-    record_loop_leg,
-)
+from hdfs_parquet_importer_spark.operators.util import ensure_parallelism
 from hdfs_parquet_importer_spark.queries import register
 from hdfs_parquet_importer_spark.tables import load_table
 
@@ -543,7 +540,6 @@ def graph_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         na = deg.select(F.col("node").alias("u"))
         nb = deg.select(F.col("node").alias("v"))
         cur = cur.join(na, "u").join(nb, "v")
-        record_loop_leg("k_core_peel.leg", cur)
         cur = cur.localCheckpoint(eager=False)
         n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
         n_edges = cur.agg(F.count(F.lit(1)).alias("n_edges"))

@@ -117,20 +117,35 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exact_dedup(docs, F.md5(D.normalize_text(F.col("text"))), "doc_id")
 
 
+# Word-3-gram shingle overlap for the near-dup oracles, as CTEs to
+# follow a WITH: `sh` (doc_id, distinct shingle list s) and `overlap`,
+# one row per unordered pair (id_a < id_b) that shares a shingle, with
+# the shared count `inter` and both set sizes `la`, `lb`. The pairs
+# come from an equi-join of unnested shingles, so the cost follows
+# shared shingles instead of all pairs. Exact: every pair with
+# Jaccard >= 0.8 or containment >= 0.9 shares a shingle, and
+# _JACCARD_SQL and inter / least(la, lb) are the same integer ratios
+# that list_intersect / list_distinct over the two lists give.
+_SHINGLE_OVERLAP_CTES = f"""
+toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
+sh AS (SELECT doc_id, {_shingles_sql(3)} AS s FROM toks),
+g AS (SELECT doc_id, unnest(s) AS gram, len(s) AS n FROM sh),
+overlap AS MATERIALIZED (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter,
+         a.n AS la, b.n AS lb
+  FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id, a.n, b.n)"""
+_JACCARD_SQL = "inter::DOUBLE / (la + lb - inter)"
+
 # Exact near-dup pair set (Jaccard >= 0.8 over word-3-gram shingles),
 # derived start-to-finish in DuckDB. Shared by dedup_ngram_jaccard
-# (whose Spark side is the same brute force) and dedup_minhash_lsh
-# (whose Spark side must REDISCOVER this exact set through the
-# sketch + verify pipeline).
+# (whose Spark side is a brute force) and dedup_minhash_lsh (whose
+# Spark side must REDISCOVER this exact set through the sketch +
+# verify pipeline).
 _JACCARD_PAIRS_SQL = f"""
-WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-sh AS (SELECT doc_id, {_shingles_sql(3)} AS s FROM toks)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       len(list_intersect(a.s, b.s))::DOUBLE
-         / len(list_distinct(a.s || b.s)) AS jaccard
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE len(list_intersect(a.s, b.s))::DOUBLE
-        / len(list_distinct(a.s || b.s)) >= 0.8
+WITH {_SHINGLE_OVERLAP_CTES}
+SELECT id_a, id_b, {_JACCARD_SQL} AS jaccard
+FROM overlap WHERE {_JACCARD_SQL} >= 0.8
 """
 
 
@@ -173,7 +188,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact-Jaccard verified at >= 0.8. The only joins are band-bucket "
     "equi-joins — no cross join anywhere; detection prob at s=0.9 is "
     "1-(1-0.9^4)^8 ~ 0.9998. The 100 TB scale path. Oracle: the FULL "
-    "exact pair set, brute-forced independently in DuckDB — verified "
+    "exact pair set, derived independently in DuckDB — verified "
     "candidates can never exceed it (exact-Jaccard filter), and with "
     "deterministic xxhash64 sketches the LSH recall at this SF is a "
     "fixed fact (1.0 here; per-pair detection >= 0.985 at s=0.8), so "
@@ -188,18 +203,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_dedup_recall",
     oracle=f"""
-WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-sh AS (SELECT doc_id, {_shingles_sql(3)} AS s FROM toks),
+WITH {_SHINGLE_OVERLAP_CTES},
 truth AS (
   SELECT DISTINCT LEAST(d.doc_id, s.doc_id) AS id_a,
                   GREATEST(d.doc_id, s.doc_id) AS id_b
   FROM documents d JOIN documents s
     ON md5(d.text) = md5(s.text || ' dup') AND d.doc_id <> s.doc_id),
 found AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-  WHERE len(list_intersect(a.s, b.s))::DOUBLE
-          / len(list_distinct(a.s || b.s)) >= 0.8),
+  SELECT id_a, id_b FROM overlap WHERE {_JACCARD_SQL} >= 0.8),
 tj AS (
   SELECT len(list_intersect(a.s, b.s))::DOUBLE
            / len(list_distinct(a.s || b.s)) AS j
@@ -234,7 +245,7 @@ SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
     "scale path (band-bucket equi-joins only); the three count "
     "aggregates combine via 1-row broadcast cross joins. ORACLE: "
     "truth replayed rule-identically; the found set is the exact "
-    "brute-force Jaccard pair set, which the dedup_minhash_lsh gate "
+    "Jaccard pair set, which the dedup_minhash_lsh gate "
     "separately proves equal to the LSH-verified set at this SF — a "
     "mismatch HERE means the eval harness (truth join, hit join, "
     "ratio arithmetic) broke, while a recall drop would fail BOTH "
@@ -2010,15 +2021,11 @@ _QUALITY_EXPR_SQL = f"""
 @register(
     "dedup_cluster_canonical",
     oracle=f"""
-WITH RECURSIVE
-toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-sh AS (SELECT doc_id, {_shingles_sql(3)} AS s FROM toks),
-p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s))::DOUBLE
-              / len(list_distinct(a.s || b.s)) >= 0.8),
-sym AS (SELECT id_a AS u, id_b AS v FROM p
-        UNION SELECT id_b, id_a FROM p),
+WITH RECURSIVE {_SHINGLE_OVERLAP_CTES},
+p AS MATERIALIZED (
+  SELECT id_a, id_b FROM overlap WHERE {_JACCARD_SQL} >= 0.8),
+sym AS MATERIALIZED (SELECT id_a AS u, id_b AS v FROM p
+                     UNION SELECT id_b, id_a FROM p),
 reach AS (SELECT u, v FROM sym
           UNION
           SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u),
@@ -2045,7 +2052,7 @@ GROUP BY s.component, s.n_members, s.qmax
     "not just finding near-dup pairs but choosing which copy "
     "survives. FULL value-level oracle: DuckDB rebuilds the clusters "
     "via a recursive-CTE transitive closure over the independently "
-    "brute-forced exact Jaccard pair set and applies the identical "
+    "exact Jaccard pair set and applies the identical "
     "quality argmax — a strictly stronger check than dedup_clusters' "
     "bound-check anchors. Quality equality joins are safe cross-"
     "engine: both sides compute the identical double from identical "
@@ -2176,12 +2183,8 @@ new2 AS (SELECT n.* FROM newb n
          WHERE md5(trim(regexp_replace(regexp_replace(lower(n.text),
                '[^a-z0-9\\s]', ' ', 'g'), '\\s+', ' ', 'g')))
                NOT IN (SELECT fp FROM exfp)),
-toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-sh AS (SELECT doc_id, {_shingles_sql(3)} AS s FROM toks),
-p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s))::DOUBLE
-              / len(list_distinct(a.s || b.s)) >= 0.8),
+{_SHINGLE_OVERLAP_CTES},
+p AS (SELECT id_a, id_b FROM overlap WHERE {_JACCARD_SQL} >= 0.8),
 sym AS (SELECT id_a AS u, id_b AS v FROM p
         UNION ALL SELECT id_b, id_a FROM p),
 bad AS (
@@ -2202,7 +2205,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM bad)
     "drops if it pairs at Jaccard >= 0.8 with any existing doc or "
     "any lower-id new doc (greedy-by-id, recursion-free so the "
     "decision is a pure join). FULL value-level oracle: DuckDB "
-    "replays both stages with brute-forced exact Jaccard pairs — "
+    "replays both stages with exact Jaccard pairs — "
     "LSH recall at this SF is exact (see dedup_minhash_lsh), so a "
     "mismatch means the sketch path dropped or invented a pair.",
 )
@@ -2753,18 +2756,13 @@ def text_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS t FROM documents),
-sh AS (SELECT doc_id, {_shingles_sql(3)} AS s FROM toks)
-SELECT a.doc_id AS id_small, b.doc_id AS id_big,
-       ROUND(len(list_intersect(a.s, b.s))::DOUBLE
-               / len(list_distinct(a.s)), 6) AS containment
-FROM sh a JOIN sh b
-  ON a.doc_id != b.doc_id
-WHERE len(list_distinct(a.s)) <= len(list_distinct(b.s))
-  AND NOT (len(list_distinct(a.s)) = len(list_distinct(b.s))
-           AND a.doc_id > b.doc_id)
-  AND len(list_intersect(a.s, b.s))::DOUBLE
-        / len(list_distinct(a.s)) >= 0.9
+WITH {_SHINGLE_OVERLAP_CTES}
+-- small side: fewer shingles, the lower doc_id (id_a) on a size tie
+SELECT CASE WHEN la <= lb THEN id_a ELSE id_b END AS id_small,
+       CASE WHEN la <= lb THEN id_b ELSE id_a END AS id_big,
+       ROUND(inter::DOUBLE / least(la, lb), 6) AS containment
+FROM overlap
+WHERE inter::DOUBLE / least(la, lb) >= 0.9
 ORDER BY id_small, id_big
 """,
     doc="Broder CONTAINMENT near-dup pairs (|A n B| / |A| >= 0.9, "

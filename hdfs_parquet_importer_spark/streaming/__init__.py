@@ -12,7 +12,6 @@ from hdfs_parquet_importer_spark.streaming.pipeline import (  # noqa: F401
     read_events_stream,
     run_to_memory,
     running_user_totals,
-    running_user_totals_tws,
     sessionized_counts,
     sliding_counts,
     stream_static_enrich,

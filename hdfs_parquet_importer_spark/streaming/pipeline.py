@@ -183,80 +183,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on Spark 4's ``transformWithStateInPandas``
-    — the successor API to ``applyInPandasWithState`` (same semantics
-    as :func:`running_user_totals`, so the test asserts equality).
-
-    What the new API buys at scale: named typed state handles
-    (ValueState/ListState/MapState) instead of one opaque tuple,
-    per-state TTL, event-time/processing-time timers for
-    emit-without-input, and a first-class initial-state hand-off —
-    the building blocks of production feature stores and CDC
-    processors. Requires the RocksDB state store provider (state
-    lives off-heap, snapshots to the checkpoint), which is also the
-    right provider at 100 TB: HDFS-backed in-memory state OOMs long
-    before RocksDB's SST files do.
-
-    Environment note: the TWS Python<->JVM state protocol is
-    protobuf-framed (``pyspark.sql.streaming.proto``), so this
-    operator additionally needs ``google.protobuf`` at runtime —
-    absent it, the state-server handshake dies with an opaque
-    "driver worker exited unexpectedly". The parity test skips when
-    protobuf is missing (this sandbox); the applyInPandasWithState
-    twin above has no such dependency and carries the tested
-    semantics.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, total double"
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator["pd.DataFrame"], timerValues
-        ) -> Iterator["pd.DataFrame"]:
-            if self._totals.exists():
-                n, total = self._totals.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_ewma(events: DataFrame, alpha: float = 0.3) -> DataFrame:
     """Unbounded-history EWMA per user — the stateful streaming twin
     of the batch ``window_ewma`` query (which truncates to a bounded

@@ -1,6 +1,10 @@
-"""Shared pytest fixtures: one session-scoped SparkSession."""
+"""Shared pytest fixtures: one session-scoped SparkSession, the smoke
+scale factor and the plan-audit tool."""
 
 from __future__ import annotations
+
+import importlib.util
+import os
 
 import pytest
 
@@ -19,3 +23,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def plan_audit():
+    """tools/plan_audit.py, loaded by path (tools/ is not a package):
+    ``sql_executions`` reads the plans Spark ran, ``summarize`` counts
+    their operators."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools",
+        "plan_audit.py",
+    )
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod

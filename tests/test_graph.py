@@ -348,39 +348,46 @@ def test_cc_max_iter_rejected_before_any_spark_job(spark):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-def test_cc_driver_gate_boundary(spark, monkeypatch):
+def test_cc_driver_gate_boundary(spark, monkeypatch, plan_audit):
     """DRIVER_CC_MAX_SYM_ROWS is inclusive: a graph whose symmetrized
     edge list has exactly that many rows takes _driver_cc, one row
     fewer takes the distributed loop, and both return the same
-    labels."""
+    labels. Spark's execution records tell the paths apart: only the
+    distributed loop runs a join."""
     edges = [(i, i + 1) for i in range(9)] + [(20, 21), (21, 22)]
     sym_rows = len({(a, b) for a, b in edges} | {(b, a) for a, b in edges})
     df = spark.createDataFrame(edges, "id_a long, id_b long")
 
-    driver_calls, legs = [], []
-    real_driver_cc, real_record = G._driver_cc, G.record_loop_leg
+    driver_calls = []
+    real_driver_cc = G._driver_cc
 
     def driver_spy(sym, max_iter):
         driver_calls.append(max_iter)
         return real_driver_cc(sym, max_iter)
 
-    def record_spy(label, frame):
-        legs.append(label)
-        return real_record(label, frame)
+    def joins(plans):
+        return sum(
+            s["bhj"] + s["smj"] + s["shj"] + s["bnlj"] + s["cartesian"]
+            for s in map(plan_audit.summarize, plans)
+        )
 
     monkeypatch.setattr(G, "_driver_cc", driver_spy)
-    monkeypatch.setattr(G, "record_loop_leg", record_spy)
 
     monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", sym_rows)
-    at_gate = {(r.node, r.component) for r in connected_components(df).collect()}
-    assert len(driver_calls) == 1 and legs == []
+    with plan_audit.sql_executions(spark) as driver_plans:
+        at_gate = {
+            (r.node, r.component) for r in connected_components(df).collect()
+        }
+    assert len(driver_calls) == 1 and driver_plans
+    assert joins(driver_plans) == 0
 
     monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", sym_rows - 1)
-    past_gate = {
-        (r.node, r.component) for r in connected_components(df).collect()
-    }
+    with plan_audit.sql_executions(spark) as loop_plans:
+        past_gate = {
+            (r.node, r.component) for r in connected_components(df).collect()
+        }
     assert len(driver_calls) == 1
-    assert legs and set(legs) == {"connected_components.leg"}
+    assert joins(loop_plans) > 0
 
     assert at_gate == past_gate
     assert at_gate == {(i, 0) for i in range(10)} | {

@@ -567,43 +567,52 @@ def test_aqe_skew_join_splits(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Loop-leg gates (VERDICT r8 item 4): iterative operators execute
-# their joins at plan-construction time behind eager localCheckpoints,
-# so the gates above never see the iterated join in the final plan.
-# Loop bodies record each leg's formatted plan via
-# operators/util.record_loop_leg; here one query per loop family runs
-# under capture and every captured leg passes the cartesian gate.
+# Loop gates: iterative operators run their rounds while the query is
+# built (lazy localCheckpoints, fixpoint counts, centroid collects),
+# so the final plan, the only one the gates above see, holds at most
+# the last round. Spark records every plan it runs: one query per loop
+# family is built and collected inside plan_audit.sql_executions, and
+# every plan it ran passes the cartesian gate.
 # ---------------------------------------------------------------------------
 
-# Leg labels allowed a BroadcastNestedLoopJoin: each is a 1-row
-# scalar broadcast (dangling mass / n / merge-state append) — the
-# same justification as the owning query's BRUTE_FORCE_OK entry.
-LOOP_LEG_BNLJ_OK = {"pagerank.leg", "bpe_multiround.leg", "pca_power.leg"}
+LOOP_LEG_FAMILIES = (
+    "dedup_clusters",
+    "embedding_kmeans",
+    "graph_k_core",
+    "graph_label_propagation",
+    "graph_pagerank",
+    "tokenize_bpe_multiround",
+)
 
-LOOP_LEG_FAMILIES = {
-    "graph_pagerank": "pagerank.leg",
-    "graph_label_propagation": "label_propagation.leg",
-    "graph_k_core": "k_core_peel.leg",
-    "dedup_clusters": "connected_components.leg",
-    "tokenize_bpe_multiround": "bpe_multiround.leg",
-    "embedding_kmeans": "kmeans.leg",
-}
+# Families allowed a BroadcastNestedLoopJoin while built: each is a
+# 1-row scalar broadcast per round (PageRank's node count and dangling
+# mass, the BPE trainer's merge-state append), the same justification
+# as the query's BRUTE_FORCE_OK entry.
+LOOP_LEG_BNLJ_OK = {"graph_pagerank", "tokenize_bpe_multiround"}
 
 
-@pytest.mark.parametrize("qname", sorted(LOOP_LEG_FAMILIES))
-def test_loop_leg_plans_pass_gates(spark, sf_dir, qname):
-    from hdfs_parquet_importer_spark.operators.util import capture_loop_legs
+@pytest.mark.parametrize("qname", LOOP_LEG_FAMILIES)
+def test_loop_leg_plans_pass_gates(spark, sf_dir, qname, monkeypatch, plan_audit):
+    from hdfs_parquet_importer_spark.operators import graph as G
 
-    with capture_loop_legs() as legs:
-        # Construction executes the loop (eager checkpoints); the
-        # final collect is irrelevant to the leg capture.
-        registry()[qname].fn(spark, sf_dir)
-    want = LOOP_LEG_FAMILIES[qname]
-    assert want in legs and legs[want], (
-        f"{qname} captured no '{want}' leg — loop instrumentation lost"
+    # Below DRIVER_CC_MAX_SYM_ROWS connected_components runs its rounds
+    # on the driver; closing the gate keeps the distributed loop's
+    # joins under this gate.
+    monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", 0)
+    with plan_audit.sql_executions(spark) as built:
+        df = registry()[qname].fn(spark, sf_dir)
+    with plan_audit.sql_executions(spark) as ran:
+        df.collect()
+    assert built, (
+        f"{qname} ran no Spark job while built: its loop rounds are "
+        "no longer visible to this gate"
     )
-    for label, plans_ in legs.items():
-        for p in plans_:
-            assert "CartesianProduct" not in p, (qname, label)
-            if label not in LOOP_LEG_BNLJ_OK:
-                assert "BroadcastNestedLoopJoin" not in p, (qname, label)
+    for when, plans_, bnlj_ok in (
+        ("built", built, qname in LOOP_LEG_BNLJ_OK),
+        ("collect", ran, qname in BRUTE_FORCE_OK),
+    ):
+        for i, p in enumerate(plans_):
+            s = plan_audit.summarize(p)
+            assert s["cartesian"] == 0, (qname, when, i, p)
+            if not bnlj_ok:
+                assert s["bnlj"] == 0, (qname, when, i, p)

@@ -123,18 +123,18 @@ def _package_prose(src: str):
 
 
 def test_no_round_history_in_package_prose():
-    """Package comments, docstrings and query ``doc=`` text state the
-    condition they protect, so a reader can check them against the
-    code alone; round and review tags (``r13``, ``VERDICT``,
-    ``ADVICE``) point at logs that are not part of the package."""
-    import pathlib
+    """Package and tool comments, docstrings and query ``doc=`` text
+    state the condition they protect, so a reader can check them
+    against the code alone; round and review tags (``r13``,
+    ``VERDICT``, ``ADVICE``) point at logs that are not part of the
+    code."""
     import re
 
     tag = re.compile(r"\b(r\d{1,2}|VERDICT|ADVICE)\b")
-    pkg = pathlib.Path(__file__).parent.parent / "hdfs_parquet_importer_spark"
     offenders = [
-        f"{py.relative_to(pkg)}:{lineno}: {m.group(0)}"
-        for py in sorted(pkg.rglob("*.py"))
+        f"{py.relative_to(ROOT)}:{lineno}: {m.group(0)}"
+        for top in ("hdfs_parquet_importer_spark", "tools")
+        for py in sorted((ROOT / top).rglob("*.py"))
         for lineno, text in _package_prose(py.read_text())
         for m in tag.finditer(text)
     ]

@@ -137,57 +137,3 @@ def test_stream_hash_coin_sampling_matches_batch(spark, sf_dir, events_stream):
         for r in load_table(spark, sf_dir, "events").filter(keep).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_running_user_totals_transform_with_state(spark, sf_dir, events_stream):
-    """Spark 4 transformWithStateInPandas twin of running_user_totals:
-    identical final per-user state under the successor API (typed
-    ValueState handle, RocksDB state store — the provider the API
-    requires, and the one that survives 100 TB state). Skips where
-    google.protobuf is unavailable: the TWS state protocol is
-    protobuf-framed and the handshake hard-crashes without it
-    (verified empirically — 'driver worker exited unexpectedly')."""
-    pytest.importorskip(
-        "google.protobuf", reason="TWS state protocol needs protobuf"
-    )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = ST.run_to_memory(
-            ST.running_user_totals_tws(events_stream),
-            "t_totals_tws",
-            output_mode="update",
-        )
-        _drain(q)
-        got = {
-            r["user_id"]: (r["n_events"], r["total_value"])
-            for r in spark.sql(
-                "SELECT user_id, max_by(n_events, n_events) n_events,"
-                " max_by(total_value, n_events) total_value"
-                " FROM t_totals_tws GROUP BY user_id"
-            ).collect()
-        }
-        batch = (
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("tv"),
-            )
-        )
-        want = {r["user_id"]: (r["n"], r["tv"]) for r in batch.collect()}
-        assert set(got) == set(want)
-        for uid, (n, tv) in want.items():
-            assert got[uid][0] == n
-            assert got[uid][1] == pytest.approx(tv, abs=0.05)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )

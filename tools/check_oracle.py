@@ -53,10 +53,9 @@ def fetch_oracle(con, sql: str) -> tuple[list[str], list[tuple]]:
     `con.execute(sql).df()` is the driver's fetch path, and it is
     lossier than `fetchall()`: DuckDB HUGEINT (the default type of an
     uncast integer SUM) decays to float64 in pandas while `fetchall`
-    would hand back exact Python ints. Round 5 shipped two queries
-    that were green under the fetchall replica and red under the
-    driver for exactly this reason (VERDICT r5 "What's wrong" 1-3) —
-    so the replica now walks the same plank the driver does.
+    would hand back exact Python ints. A query can be green under a
+    fetchall replica and red under the driver for exactly this
+    reason, so the replica walks the same plank the driver does.
     """
     odf = con.execute(sql).df()
     return [str(c) for c in odf.columns], _pandas_rows(odf)
@@ -85,8 +84,8 @@ def canon(v) -> str:
     if isinstance(v, float):
         # Dtype-STRICT: a float64 123.0 must NOT canonicalize like an
         # int64 123 — the driver's pandas-based hasher distinguishes
-        # them, and collapsing here hid the r1 window_moving_avg fail
-        # (DuckDB HUGEINT sums decay to float64 in pandas). Keep the
+        # them, and collapsing here would hide a HUGEINT sum that
+        # decays to float64 in pandas. Keep the
         # replica at least as strict as the driver.
         if math.isnan(v):
             return "<nan>"

@@ -1,10 +1,9 @@
 """Cross-engine pandas-dtype parity audit.
 
-Root cause of the r1 `window_moving_avg` driver hash-fail: the driver
-canonicalizes results through pandas DataFrames, where value identity
-is dtype-sensitive — an int64 123 (Spark) and a float64 123.0 (DuckDB
-HUGEINT sums decay to float64 in `fetchdf`) hash differently. Since
-r6 `tools/check_oracle.py` fetches BOTH engines through pandas
+The driver canonicalizes results through pandas DataFrames, where
+value identity is dtype-sensitive — an int64 123 (Spark) and a float64
+123.0 (DuckDB HUGEINT sums decay to float64 in `fetchdf`) hash
+differently. `tools/check_oracle.py` fetches BOTH engines through pandas
 (`fetch_spark` / `fetch_oracle`) with a dtype-strict `canon()`, so
 the replica reproduces this class directly; this audit remains the
 fast column-level lens (dtype kinds only, no value hashing) for

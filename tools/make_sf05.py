@@ -1,11 +1,11 @@
 """Generate a TRUE synthetic sf0.5 dataset under /tmp for the scaling
-study's fourth decade (VERDICT r8 item 6, replacing the key-shifted
-5x replication of earlier rounds).
+study's fourth decade (distinct values grow with SF; no key-shifted
+replication of a smaller decade).
 
 The driver ships sf{0.001,0.01,0.1} only and /root/testdata is
 read-only, so the fourth point is GENERATED from scratch with the
 same construction the shipped decades evidently use — measured from
-sf0.1 (tools-local analysis, r9):
+sf0.1 (tools-local analysis):
 
 * dims: region/nation are the fixed 5/25-row literals;
 * customer/supplier/part/orders: uniform keys over 5x ranges, the
@@ -40,7 +40,7 @@ growth is now genuinely linear in SF: no repeated fact values, no
 replicated payloads, and the old "TPC-H fact values repeat 5x"
 SCALING.md caveat is gone.
 
-r10 (VERDICT r9 item 3): the generator is SF-parameterized — the
+The generator is SF-parameterized — the
 construction above is per-SF row counts scaled linearly, so any
 decade point can be produced. The scaling study generates sf0.5 AND
 sf1.0, giving the superlinear-operator screen a true 10x step
@@ -335,7 +335,7 @@ def _gen_documents(spark: SparkSession, scale: float) -> DataFrame:
     # source that is itself a dup-doc is nudged down one id, REPEATED
     # until the landed-on id is a non-dup: a single step could land on
     # another dup (~5% chance), whose recomputed body is NOT its
-    # actual text (ADVICE r9). Six unrolled steps bound the residual
+    # actual text. Six unrolled steps bound the residual
     # at 20^-6 ≈ 1.6e-8 per doc — zero expected misses even at sf1.
     is_dup = (_i("id", salt="d_isdup", n=20) == 19) & (id_ >= 20)
     src_raw = _i("id", salt="d_src", n=n_docs)
@@ -351,8 +351,8 @@ def _gen_documents(spark: SparkSession, scale: float) -> DataFrame:
     # copies of the base hash expression — and _doc_words would embed
     # that tree once PER GENERATED WORD (up to 100). The checkpoint
     # collapses src to a plain column (2 longs x n_docs — tiny) so
-    # Catalyst analyzes the text expression once, not 10^5 times
-    # (r10 review). Values are identical; only the plan shrinks.
+    # Catalyst analyzes the text expression once, not 10^5 times.
+    # Values are identical; only the plan shrinks.
     ids = ids.select(id_, src.alias("_src")).localCheckpoint(eager=True)
     src = F.col("_src")
     src_words = 10 + _i(src, salt="d_len", n=91)
@@ -418,8 +418,9 @@ def generate(
     """Write all ten tables; idempotent per (seed, scale) marker."""
     if out_dir is None:
         out_dir = out_dir_for(scale)
-    # v bumped r10: the dup-source nudge now iterates (ADVICE r9), so
-    # documents content changed — stale r9 trees must regenerate.
+    # The version names the dup-source rule (six iterated nudges);
+    # change it whenever generated content changes, so trees written
+    # under an older rule regenerate.
     tag = f"seed={SEED} scale={scale} v=r10-nudge6"
     marker = os.path.join(out_dir, _MARKER)
     if os.path.exists(marker):

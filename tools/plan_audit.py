@@ -1,9 +1,14 @@
 """Plan-shape audit: dump a physical-plan summary for every HEADLINE
 query into PLANS.md — the evidence trail behind the scale claims.
 
-For each query: exchange count (shuffles), join strategies chosen,
-whole-stage-codegen span count, scan-level pushed filters, and
-whether AQE re-planned anything. Run after plan-affecting changes:
+Every plan a query runs is audited, read from Spark's own execution
+records (:func:`sql_executions`): the jobs that run while the query is
+built (lazy localCheckpoints, fixpoint counts, centroid collects — the
+rounds of every iterative operator) and the final collect. For each:
+exchange count (shuffles), join strategies chosen, whole-stage-codegen
+span count and scan-level pushed filters, counted over the plan that
+actually ran (AQE's final plan, not its initial estimate). Run after
+plan-affecting changes:
 
     python tools/plan_audit.py [--sf-dir /root/testdata/sf0.01]
 """
@@ -14,48 +19,104 @@ import argparse
 import os
 import re
 import sys
+from collections import Counter
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from hdfs_parquet_importer_spark.operators.util import capture_loop_legs
-from hdfs_parquet_importer_spark.queries import registry
-from hdfs_parquet_importer_spark.session import build_session
+from hdfs_parquet_importer_spark.queries import registry  # noqa: E402
+from hdfs_parquet_importer_spark.session import build_session  # noqa: E402
 
 
-def summarize_leg(plan: str) -> dict[str, int]:
-    """Summary of a loop-leg plan (FORMATTED explain: '(N) Op' lines
-    with Arguments: blocks, unlike the executed-plan tree below)."""
-    ops = re.findall(r"^\s*\(\d+\)\s+([A-Za-z]+)", plan, re.M)
-    return {
-        "exchanges": sum(1 for o in ops if o == "Exchange"),
-        "broadcasts": sum(1 for o in ops if o == "BroadcastExchange"),
-        "bhj": sum(1 for o in ops if o == "BroadcastHashJoin"),
-        "smj": sum(1 for o in ops if o == "SortMergeJoin"),
-        "bnlj": sum(1 for o in ops if o == "BroadcastNestedLoopJoin"),
-        "cartesian": sum(1 for o in ops if o == "CartesianProduct"),
-    }
+@contextmanager
+def sql_executions(spark):
+    """Yield a list that, on exit, holds the formatted physical plans
+    of the SQL executions that started inside the block, in start
+    order: those with an execution id above the highest one at entry,
+    read from the session's SQL status store once the listener bus has
+    drained. The store keeps the last ``spark.sql.ui.retainedExecutions``
+    executions (1000 by default), which bounds what one block can
+    see."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
+
+    start = max((e.executionId() for e in executions()), default=-1)
+    plans: list[str] = []
+    yield plans
+    plans.extend(
+        e.physicalPlanDescription()
+        for e in sorted(executions(), key=lambda e: e.executionId())
+        if e.executionId() > start
+    )
 
 
-def summarize(plan: str) -> dict[str, object]:
-    def count(pat: str) -> int:
-        return len(re.findall(pat, plan))
+# A tree line of a formatted plan ends in the node id: "+- * Op ... (N)".
+_TREE_NODE = re.compile(r"^[ :|+*-]*[A-Z]\w*.* \((\d+)\)$")
+# A details block opens with "(N) Op ...".
+_DETAIL = re.compile(r"^\((\d+)\) (\w+)", re.M)
 
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-    pushed_n = sum(1 for p in pushed if p.strip())
-    return {
-        "exchanges": count(r"Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)"),
-        "broadcasts": count(r"BroadcastExchange"),
-        "bhj": count(r"BroadcastHashJoin"),
-        "smj": count(r"SortMergeJoin"),
-        "shj": count(r"ShuffledHashJoin"),
-        "bnlj": count(r"BroadcastNestedLoopJoin"),
-        # Post-execution plans mark codegen stages as "*(N) Op";
-        # distinct ids = whole-stage spans.
-        "codegen": len(set(re.findall(r"\*\((\d+)\)", plan))),
-        "scans_with_pushdown": pushed_n,
-        "group_limit": count(r"WindowGroupLimit"),
-        "top_k": count(r"TakeOrderedAndProject"),
-    }
+_OPS = {
+    "exchanges": "Exchange",
+    "broadcasts": "BroadcastExchange",
+    "bhj": "BroadcastHashJoin",
+    "smj": "SortMergeJoin",
+    "shj": "ShuffledHashJoin",
+    "bnlj": "BroadcastNestedLoopJoin",
+    "cartesian": "CartesianProduct",
+    "group_limit": "WindowGroupLimit",
+    "top_k": "TakeOrderedAndProject",
+}
+COLUMNS = (*_OPS, "codegen", "scans_with_pushdown")
+
+
+def summarize(plan: str) -> dict[str, int]:
+    """Operator counts of one ``explain("formatted")`` plan, over the
+    nodes that ran: an adaptive plan lists its final plan and then its
+    initial one, and nodes only the initial plan names are skipped.
+    ``codegen`` counts whole-stage-codegen spans; ``scans_with_pushdown``
+    counts scans with non-empty parquet PushedFilters."""
+    ran: set[str] = set()
+    initial = False
+    for line in plan.splitlines():
+        if "== Initial Plan ==" in line:
+            initial = True
+        elif "== Final Plan ==" in line or line.startswith("Subquery:"):
+            initial = False
+        else:
+            m = _TREE_NODE.match(line.rstrip())
+            if m and not initial:
+                ran.add(m.group(1))
+    blocks = re.split(r"\n(?=\(\d+\) )", plan)
+    ops: Counter[str] = Counter()
+    codegen: set[str] = set()
+    pushdown = 0
+    for block in blocks:
+        m = _DETAIL.match(block)
+        if not m or m.group(1) not in ran:
+            continue
+        ops[m.group(2)] += 1
+        header = block.split("\n", 1)[0]
+        codegen.update(re.findall(r"\[codegen id : (\d+)\]", header))
+        pushed = re.search(r"^PushedFilters: \[(.*)\]$", block, re.M)
+        pushdown += bool(pushed and pushed.group(1).strip())
+    out = {k: ops[op] for k, op in _OPS.items()}
+    out["codegen"] = len(codegen)
+    out["scans_with_pushdown"] = pushdown
+    return out
+
+
+def _row(label: str, plans: list[str]) -> str:
+    """One PLANS.md row: execution count, then each summary column
+    summed over ``plans``."""
+    total = sum((Counter(summarize(p)) for p in plans), Counter())
+    cells = [label, str(len(plans))] + [str(total[c]) for c in COLUMNS]
+    return "| " + " | ".join(cells) + " |"
 
 
 def main() -> int:
@@ -68,32 +129,38 @@ def main() -> int:
 
     spark = build_session(threads=8, shuffle_partitions=8)
     reg = registry()
+    header = ["query", "execs", "exch", "bcast", "BHJ", "SMJ", "SHJ", "BNLJ",
+              "CP", "grpLimit", "topK", "codegen", "pushdown scans"]
     lines = [
         "# PLANS — physical-plan audit of the bench headline",
         "",
-        f"Generated by `tools/plan_audit.py` at `{args.sf_dir}`. Columns:",
-        "shuffle exchanges / broadcast exchanges / join strategies",
+        f"Generated by `tools/plan_audit.py` at `{args.sf_dir}`, from the",
+        "plans Spark recorded for each SQL execution the query ran",
+        "(`plan_audit.sql_executions`). Columns: executions, shuffle",
+        "exchanges / broadcast exchanges / join strategies",
         "(BHJ=broadcast-hash, SMJ=sort-merge, SHJ=shuffled-hash,",
         "BNLJ=broadcast-nested-loop — only allowlisted brute-force",
-        "baselines carry BNLJ), whole-stage-codegen spans, scans with",
-        "non-empty parquet PushedFilters, WindowGroupLimit (per-group",
+        "baselines and 1-row scalar broadcasts carry BNLJ,",
+        "CP=CartesianProduct — none may), WindowGroupLimit (per-group",
         "top-k before shuffle), TakeOrderedAndProject (global top-k",
-        "without a global sort).",
+        "without a global sort), whole-stage-codegen spans, scans with",
+        "non-empty parquet PushedFilters. Adaptive plans count their",
+        "final plan only.",
         "",
-        "Queries built around eager localCheckpoint loops (pagerank,",
-        "LPA, k-core, CC, k-means, the BPE trainer) run most of their",
-        "stages during plan CONSTRUCTION; their main row covers only",
-        "the final leg, so each captured per-iteration leg plan",
-        "(operators/util.capture_loop_legs, VERDICT r8 item 4) gets",
-        "its own indented `[leg]` row — that is where the iterated",
-        "join shape is audited. `loopLegs` counts captured legs.",
+        "Each query's row is its final collect. Queries that run jobs",
+        "while they are built — every iterative operator's rounds (CC,",
+        "PageRank, LPA, k-core, k-means, the BPE trainer) and every lazy",
+        "localCheckpoint — get an indented `[plan-time]` row summing",
+        "those executions; its `execs` is how many there were.",
+        "Connected components takes the path production takes at this",
+        "size (the driver loop below `DRIVER_CC_MAX_SYM_ROWS`).",
         "",
-        "| query | exch | bcast | BHJ | SMJ | SHJ | BNLJ | codegen | pushdown scans | grpLimit | topK | loopLegs |",
-        "|---|---|---|---|---|---|---|---|---|---|---|---|",
+        "| " + " | ".join(header) + " |",
+        "|" + "---|" * len(header),
     ]
     # Loop-family queries that are not bench headliners still get
-    # audited rows: their leg plans are the whole point of the
-    # instrumentation (VERDICT r8 item 4).
+    # audited rows: their plan-time rows are where the iterated join
+    # shapes show.
     extra = [
         "dedup_clusters",
         "graph_k_core",
@@ -104,39 +171,13 @@ def main() -> int:
     for name in audit:
         if name not in reg:
             continue
-        with capture_loop_legs() as legs:
+        with sql_executions(spark) as built:
             df = reg[name].fn(spark, args.sf_dir)
-            # Execute first so AQE finalizes: the audited plan is the
-            # one that actually ran (SMJ->BHJ conversions, coalesced
-            # partitions), not the static estimate.
+        with sql_executions(spark) as ran:
             df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # AQE prints "== Final Plan ==" followed by "== Initial
-        # Plan ==" — audit only what actually ran.
-        plan = plan.split("== Initial Plan ==")[0]
-        s = summarize(plan)
-        n_legs = sum(len(ps) for ps in legs.values())
-        lines.append(
-            f"| {name} | {s['exchanges']} | {s['broadcasts']} | {s['bhj']} "
-            f"| {s['smj']} | {s['shj']} | {s['bnlj']} | {s['codegen']} "
-            f"| {s['scans_with_pushdown']} | {s['group_limit']} | {s['top_k']} "
-            f"| {n_legs} |"
-        )
-        for label, plans_ in sorted(legs.items()):
-            # One row per distinct leg shape (iteration 1 + steady
-            # state are captured; dedupe identical summaries).
-            seen = []
-            for p in plans_:
-                ls = summarize_leg(p)
-                if ls in seen:
-                    continue
-                seen.append(ls)
-                lines.append(
-                    f"| &nbsp;&nbsp;`[leg]` {label} | {ls['exchanges']} "
-                    f"| {ls['broadcasts']} | {ls['bhj']} | {ls['smj']} | - "
-                    f"| {ls['bnlj']} | - | - | - | - | "
-                    f"{'CARTESIAN!' if ls['cartesian'] else '-'} |"
-                )
+        lines.append(_row(name, ran))
+        if built:
+            lines.append(_row("&nbsp;&nbsp;`[plan-time]`", built))
     out = "\n".join(lines) + "\n"
     with open(args.out, "w") as f:
         f.write(out)

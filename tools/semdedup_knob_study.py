@@ -1,6 +1,5 @@
-"""Measure the SemDeDup cluster-count knob at scale (VERDICT r9 item
-4; recall column added per VERDICT r10 item 2): at the study's sf0.5
-and sf1 points, compare candidate-pair space, wall time, AND detected
+"""Measure the SemDeDup cluster-count knob at scale: at the study's
+sf0.5 and sf1 points, compare candidate-pair space, wall time, AND detected
 edge-set / removed-doc recall at bits=3 (the registered query's pinned
 demo setting) vs bits=6 (the production direction — more clusters as
 the corpus grows), and write the measured table into SCALING.md

@@ -1,7 +1,7 @@
-"""Root-cause probe for the r13 'in-session inflation' of iterative
-cells (VERDICT r13 item 2): graph-family queries measured ~15-40%
-slower inside a full 58-query bench session than isolated in a fresh
-session, with UI retention already ruled out by an r13 A/B.
+"""Root-cause probe for the 'in-session inflation' of iterative cells:
+graph-family queries measured ~15-40% slower inside a full 58-query
+bench session than isolated in a fresh session, with UI retention
+already ruled out by an A/B.
 
 Protocol (same-session, so ambient host drift cancels):
 
