@@ -18,7 +18,10 @@ Scale notes: the labels DataFrame is ``localCheckpoint``-ed every
 round — iterative plans otherwise grow the lineage exponentially and
 re-execute every prior round at each action. Convergence is detected
 with a count of changed labels (one action per round, the canonical
-fixpoint test).
+fixpoint test). Graphs whose symmetrized edge list has at most
+``DRIVER_MAX_SYM_ROWS`` rows skip the distributed rounds: connected
+components and label propagation replay them on the driver over one
+bounded collect.
 """
 
 from __future__ import annotations
@@ -26,13 +29,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Size gate for the driver-local CC strategy, read on every call. The
-# analogy is Spark's own broadcast-join selection: pick the physical
-# strategy by measured input size. 2e5 symmetrized rows is a few MB
-# collected, bounded at any corpus scale (the same argument as the
-# k-row kmeans init and the <=256-row model collects); graphs past the
-# gate, and every graph when it is 0, take the distributed loop.
-DRIVER_CC_MAX_SYM_ROWS = 200_000
+# Size gate for the driver-local strategies of the iterative graph
+# operators (connected_components, label_propagation), read on every
+# call, in rows of the symmetrized edge list. The analogy is Spark's
+# own broadcast-join selection: pick the physical strategy by measured
+# input size. 2e5 symmetrized rows is a few MB collected, bounded at
+# any corpus scale (the same argument as the k-row kmeans init and the
+# <=256-row model collects); graphs past the gate, and every graph
+# when it is 0, take the distributed loop.
+DRIVER_MAX_SYM_ROWS = 200_000
+
+
+def _rows_below_gate(df: DataFrame):
+    """``df``'s rows as an Arrow table when it has at most
+    DRIVER_MAX_SYM_ROWS rows, else None. One bounded collect both
+    measures the input and fetches it; no Spark job runs when the gate
+    is 0."""
+    if DRIVER_MAX_SYM_ROWS <= 0:
+        return None
+    rows = df.limit(DRIVER_MAX_SYM_ROWS + 1).toArrow()
+    return rows if rows.num_rows <= DRIVER_MAX_SYM_ROWS else None
 
 
 def connected_components(
@@ -80,12 +96,13 @@ def connected_components(
     # blocking micro-jobs per round regardless of data size (measured
     # 1.93 s / 29 jobs, 1.37 s of it driver time between jobs, for a
     # 243-edge graph at sf0.1). When the symmetrized edge list is at
-    # most DRIVER_CC_MAX_SYM_ROWS rows (one count over the
-    # checkpointed sym), _driver_cc runs the identical rounds on the
-    # driver: same propagate+jump schedule, same per-round changed
-    # test, same max_iter/raise contract, same labels.
-    if DRIVER_CC_MAX_SYM_ROWS > 0 and sym.count() <= DRIVER_CC_MAX_SYM_ROWS:
-        return _driver_cc(sym, max_iter)
+    # most DRIVER_MAX_SYM_ROWS rows, _driver_cc runs the identical
+    # rounds on the driver over the rows the gate collected: same
+    # propagate+jump schedule, same per-round changed test, same
+    # max_iter/raise contract, same labels.
+    rows = _rows_below_gate(sym)
+    if rows is not None:
+        return _driver_cc(sym, rows, max_iter)
 
     labels = (
         sym.select(F.col("u").alias("node"))
@@ -154,19 +171,21 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def _driver_cc(sym: DataFrame, max_iter: int) -> DataFrame:
+def _driver_cc(sym: DataFrame, rows, max_iter: int) -> DataFrame:
     """Driver-local replay of :func:`connected_components`' exact
-    round schedule for size-gated graphs: synchronous neighbor-min
+    round schedule over ``rows``, the Arrow table of ``sym`` collected
+    by the size gate: synchronous neighbor-min
     propagation, then the pointer jump over the SAME round's
     post-propagation labels, changed = (label < round-start label),
     break at changed == 0, raise past ``max_iter`` — so convergence
     behavior (including the extra verification round) is
     indistinguishable from the distributed loop, and the labeling is
     the identical min-reachable-id fixpoint."""
-    rows = sym.collect()
     nbrs: dict = {}
-    for r in rows:
-        nbrs.setdefault(r["u"], []).append(r["v"])
+    for u, v in zip(
+        rows.column("u").to_pylist(), rows.column("v").to_pylist()
+    ):
+        nbrs.setdefault(u, []).append(v)
     labels = {n: n for n in nbrs}
     changed = 0
     for _ in range(max_iter + 1):
@@ -457,22 +476,30 @@ def label_propagation(
     label ASC, the same deterministic winner as a sorted window but
     with map-side partial aggregation and no per-partition sort.
 
-    NO per-round checkpoint — the label state is referenced exactly ONCE
-    per round (the message join), so the unrolled lineage grows LINEARLY
-    in ``rounds`` (unlike CC and pagerank, whose per-round state is read
-    twice and would double the plan per un-checkpointed round). The
+    Strategy by size, as in :func:`connected_components`: when the
+    symmetrized neighbor list (both directions of every edge) has at
+    most DRIVER_MAX_SYM_ROWS rows, the rows the gate collected are
+    replayed on the driver (:func:`_driver_lpa`, the same rounds in
+    numpy) and no round runs a Spark job. Past the gate the rounds run
+    distributed: the label state is referenced exactly ONCE per round
+    (the message join), so the unrolled lineage grows LINEARLY in
+    ``rounds`` (unlike CC and pagerank, whose per-round state is read
+    twice and would double the plan per un-checkpointed round) and the
     whole loop is one lazy plan: one driver round-trip instead of
-    ``rounds`` blocking localCheckpoint materializations (each of which
-    stalled the driver while AQE materialized every stage below it — the
-    mechanism behind the flat 8->32-core scaling of the loop queries).
-    All aggregates are integer counts and struct-MIN, so the values are
-    partitioning-independent; only the final state is checkpointed, for
-    consumers that read it more than once.
+    ``rounds`` blocking localCheckpoint materializations. All
+    aggregates are integer counts and struct-MIN, so the values are
+    partitioning-independent and both strategies return the same
+    labels; the distributed result is checkpointed once, at the end,
+    for consumers that read it more than once.
     """
     nbr = edges.select(
         F.col(src).alias("node"), F.col(dst).alias("nb")
     ).unionAll(
         edges.select(F.col(dst).alias("node"), F.col(src).alias("nb"))
+    )
+    rows = _rows_below_gate(nbr)
+    if rows is not None:
+        return _driver_lpa(nbr, rows, rounds)
     # Loop-invariant, read once per round plus once for the initial
     # labels: without materialization the upstream EDGES pipeline
     # (often itself a banded self-join) re-executes ~2x per round —
@@ -480,7 +507,7 @@ def label_propagation(
     # pagerank its edge table. Pre-partitioned by the join key ONCE,
     # so no round ever shuffles the edge side again (two operations
     # keyed the same way share one exchange).
-    ).repartition("nb").localCheckpoint(eager=False)
+    nbr = nbr.repartition("nb").localCheckpoint(eager=False)
     lbl = (
         nbr.select("node")
         .distinct()
@@ -517,3 +544,74 @@ def label_propagation(
             .select("node", F.col("top.label").alias("label"))
         )
     return lbl.localCheckpoint(eager=False)
+
+
+def _driver_lpa(nbr: DataFrame, rows, rounds: int) -> DataFrame:
+    """Driver-local replay of :func:`label_propagation`'s rounds over
+    ``rows``, the Arrow table of ``nbr`` (node, nb) collected by the
+    size gate. Ids are ranked once in Arrow's sort order (Spark's for
+    integers and strings), so comparing ranks compares ids. Each round
+    is synchronous and counts every (node, nb) row as one vote for
+    nb's label, exactly the distributed round's message join: the
+    winner is count DESC then label ASC, a node's own label votes only
+    through a self-loop row, a null nb joins no label, and a node that
+    received no vote leaves the state, as its group does in the
+    distributed aggregate."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = (
+        pa.chunked_array(
+            rows.column("node").chunks + rows.column("nb").chunks,
+            rows.schema.field("node").type,
+        )
+        .combine_chunks()
+        .dictionary_encode()
+    )
+    uniq = ids.dictionary
+    n = len(uniq)
+    order = pc.sort_indices(uniq).to_numpy()
+    rank = np.empty(n + 1, np.int64)
+    rank[order] = np.arange(n)
+    rank[n] = n  # the null id: it joins no label, so no vote carries it
+    code = rank[ids.indices.fill_null(n).to_numpy()]
+    node, nb = code[: rows.num_rows], code[rows.num_rows :]
+
+    label = np.arange(n + 1)
+    present = np.zeros(n + 1, bool)
+    present[node] = True
+    live = nb < n
+    node, nb = node[live], nb[live]
+    for _ in range(int(rounds)):
+        voted = present[nb]
+        key, cnt = np.unique(
+            node[voted] * (n + 1) + label[nb[voted]], return_counts=True
+        )
+        to, lab = np.divmod(key, n + 1)
+        # Per node: count DESC, then label ASC; the first row wins.
+        ranked = np.lexsort((lab, -cnt, to))
+        first = np.ones(len(ranked), bool)
+        first[1:] = to[ranked][1:] != to[ranked][:-1]
+        win = ranked[first]
+        present[:] = False
+        present[to[win]] = True
+        label[to[win]] = lab[win]
+
+    from pyspark.sql.types import StructField, StructType
+
+    out = np.flatnonzero(present)
+    values = pa.concat_arrays([uniq.take(order), pa.nulls(1, uniq.type)])
+    # The distributed result's schema: nbr's widened node field, and a
+    # label that is the node itself before any round and a nullable
+    # struct-MIN field after one.
+    nf = nbr.schema["node"]
+    schema = StructType(
+        [nf, StructField("label", nf.dataType, rounds > 0 or nf.nullable)]
+    )
+    return nbr.sparkSession.createDataFrame(
+        pa.table(
+            {"node": values.take(out), "label": values.take(label[out])}
+        ),
+        schema,
+    )

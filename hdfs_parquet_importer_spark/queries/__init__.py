@@ -74,61 +74,62 @@ def register(name: str, oracle: str | None, doc: str = ""):
 # leaves an edited query unverified. The queue for the next rotation is
 # kept in ROADMAP.md.
 _DRIVER_WINDOW: tuple[str, ...] = (
-    # P1: the six near-dup oracles now built on the shared
-    # shingle-overlap CTE, and graph_k_core, whose loop body changed.
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "eval_dedup_recall",
+    # P1: label propagation and the connected-components consumers,
+    # whose plans changed with the shared driver-strategy size gate.
+    "graph_label_propagation",
+    "dedup_clusters",
     "dedup_cluster_canonical",
-    "dedup_incremental_batch",
-    "dedup_containment",
-    "graph_k_core",
+    "fuzzy_name_clusters",
+    "split_leakage_audit",
     # P4: the oldest driver greens.
-    "asof_join_nearest",
-    "embedding_centroids",
-    "tokenize_bpe_vocab_sweep",
-    "window_distribution",
-    "agg_stats",
-    "q16_supplier_cnt",
-    "text_top_ngrams",
-    "tokenize_bpe_multiround",
-    "join_interval_bucketed",
-    "q21_waiting_suppliers",
-    "text_rolling_hash",
-    "multimodal_audio_resample",
-    "embedding_quantize_int8",
-    # P5: the etl_parity and pandas_surface representatives.
-    "etl_csv_roundtrip",
-    "pandas_udf_log_price",
-    # P4: next-oldest greens, spread across families.
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "join_salted_skew",
-    "agg_salted_two_phase",
-    "topk_orders",
-    "q2_min_cost_supplier",
-    "agg_approx_top_k",
-    "sql_recursive_cte",
-    "func_parameterized_sql",
-    "window_running_sum",
-    "events_session_window",
-    "text_repetition",
-    "text_pii_scan",
-    "pack_sequences",
-    "ann_mips_topk",
-    "vocab_growth_heaps",
-    "mix_domain_quota",
-    "pack_sorted_stream",
-    "text_kneser_ney_bigram",
-    "subq_scalar_avg_qty",
-    "subq_in_heavy_orders",
-    "unpivot_brand_metrics",
-    "agg_approx_percentile",
-    "stat_theil_sen_slope",
-    "dq_psi_drift",
-    "dq_observe_metrics",
-    "ts_ewma",
-    "graph_jaccard_neighbors",
+    "setop_except",
+    "q14_promo_effect",
+    "q19_disjunctive_pred",
+    "setop_union_by_name",
+    "join_skew_aqe",
+    "embedding_hard_negatives",
+    "sample_bernoulli",
+    # P4: the next-oldest greens by registration order, family-spread;
+    # the etl_parity pair doubles as that family's P5 representative.
+    "join_semi",
+    "join_anti",
+    "join_full_outer",
+    "join_range",
+    "agg_having",
+    "setop_intersect",
+    "agg_freq_items",
+    "q12_priority_shipping",
+    "q11_important_value",
+    "q20_excess_quantity",
+    "cdc_latest_per_key",
+    "etl_schema_evolution",
+    "func_string",
+    "func_date",
+    "func_math",
+    "func_array",
+    "func_explode",
+    "window_lag_lead",
+    "asof_join_purchase_view",
+    "window_forward_fill",
+    "asof_join_next_purchase",
+    "window_share_of_total",
+    "events_tumbling_window",
+    "events_sliding_window",
+    "events_user_activity",
+    "events_interval_join",
+    "url_canonicalize",
+    "dedup_url_canonical",
+    "sample_stratified",
+    "corpus_train_eval_split",
+    "sample_weighted",
+    "quality_classifier_filter",
+    "func_map_props",
+    "events_hourly_rollup",
+    "stat_corr_matrix",
+    "report_mom_yoy",
+    "graph_degree_distribution",
+    # P5: the pandas_surface representative with the oldest driver row.
+    "udtf_text_chunks",
 )
 
 

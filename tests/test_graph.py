@@ -255,16 +255,22 @@ def test_cc_converges_exactly_at_max_iter(spark):
         connected_components(chain, max_iter=0)
 
 
+def _gate_closed(monkeypatch, op, edges, **kw):
+    """A graph operator with the driver gate closed: the distributed
+    loop."""
+    with monkeypatch.context() as m:
+        m.setattr(G, "DRIVER_MAX_SYM_ROWS", 0)
+        return op(edges, **kw)
+
+
 def _distributed_cc(monkeypatch, edges, **kw):
     """connected_components with the driver gate closed."""
-    with monkeypatch.context() as m:
-        m.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", 0)
-        return connected_components(edges, **kw)
+    return _gate_closed(monkeypatch, connected_components, edges, **kw)
 
 
 def test_cc_driver_and_distributed_strategies_agree(spark, monkeypatch):
     """connected_components picks a driver-local strategy for
-    graphs under DRIVER_CC_MAX_SYM_ROWS (the broadcast-join analogy).
+    graphs under DRIVER_MAX_SYM_ROWS (the broadcast-join analogy).
     Both strategies must produce identical labelings, identical
     schemas, and the identical max_iter/raise contract."""
     import pytest
@@ -348,8 +354,16 @@ def test_cc_max_iter_rejected_before_any_spark_job(spark):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
+def _joins(plan_audit, plans):
+    """Joins of any strategy in the plans Spark ran."""
+    return sum(
+        s["bhj"] + s["smj"] + s["shj"] + s["bnlj"] + s["cartesian"]
+        for s in map(plan_audit.summarize, plans)
+    )
+
+
 def test_cc_driver_gate_boundary(spark, monkeypatch, plan_audit):
-    """DRIVER_CC_MAX_SYM_ROWS is inclusive: a graph whose symmetrized
+    """DRIVER_MAX_SYM_ROWS is inclusive: a graph whose symmetrized
     edge list has exactly that many rows takes _driver_cc, one row
     fewer takes the distributed loop, and both return the same
     labels. Spark's execution records tell the paths apart: only the
@@ -361,35 +375,137 @@ def test_cc_driver_gate_boundary(spark, monkeypatch, plan_audit):
     driver_calls = []
     real_driver_cc = G._driver_cc
 
-    def driver_spy(sym, max_iter):
-        driver_calls.append(max_iter)
-        return real_driver_cc(sym, max_iter)
-
-    def joins(plans):
-        return sum(
-            s["bhj"] + s["smj"] + s["shj"] + s["bnlj"] + s["cartesian"]
-            for s in map(plan_audit.summarize, plans)
-        )
+    def driver_spy(sym, rows, max_iter):
+        driver_calls.append(rows.num_rows)
+        return real_driver_cc(sym, rows, max_iter)
 
     monkeypatch.setattr(G, "_driver_cc", driver_spy)
 
-    monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", sym_rows)
+    monkeypatch.setattr(G, "DRIVER_MAX_SYM_ROWS", sym_rows)
     with plan_audit.sql_executions(spark) as driver_plans:
         at_gate = {
             (r.node, r.component) for r in connected_components(df).collect()
         }
-    assert len(driver_calls) == 1 and driver_plans
-    assert joins(driver_plans) == 0
+    assert driver_calls == [sym_rows] and driver_plans
+    assert _joins(plan_audit, driver_plans) == 0
 
-    monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", sym_rows - 1)
+    monkeypatch.setattr(G, "DRIVER_MAX_SYM_ROWS", sym_rows - 1)
     with plan_audit.sql_executions(spark) as loop_plans:
         past_gate = {
             (r.node, r.component) for r in connected_components(df).collect()
         }
     assert len(driver_calls) == 1
-    assert joins(loop_plans) > 0
+    assert _joins(plan_audit, loop_plans) > 0
 
     assert at_gate == past_gate
     assert at_gate == {(i, 0) for i in range(10)} | {
         (20, 20), (21, 20), (22, 20)
     }
+
+
+# Two triangles joined by a bridge, plus a pendant.
+_LPA_BRIDGE = [
+    (1, 2), (2, 3), (1, 3),
+    (10, 11), (11, 12), (10, 12),
+    (3, 10), (12, 13),
+]
+
+
+def _distributed_lpa(monkeypatch, edges, **kw):
+    """label_propagation with the driver gate closed."""
+    return _gate_closed(monkeypatch, G.label_propagation, edges, **kw)
+
+
+def _lpa_pairs(df):
+    return {(r.node, r.label) for r in df.collect()}
+
+
+def test_lpa_driver_and_distributed_strategies_agree(spark, monkeypatch):
+    """label_propagation replays its rounds on the driver for graphs
+    under DRIVER_MAX_SYM_ROWS. Both strategies must return the same
+    labels and the same schema, on integer, string and mixed int/long
+    ids, and on the corner rows of the message join (a duplicate edge,
+    a self-loop, a null id)."""
+    df = spark.createDataFrame(_LPA_BRIDGE, "u long, v long")
+    for rounds in (0, 1, 2, 4):
+        local_df = G.label_propagation(df, rounds=rounds)
+        dist_df = _distributed_lpa(monkeypatch, df, rounds=rounds)
+        assert local_df.schema == dist_df.schema, rounds
+        local = _lpa_pairs(local_df)
+        assert local == _lpa_pairs(dist_df), rounds
+        assert local == set(_ref_lpa(_LPA_BRIDGE, rounds).items()), rounds
+
+    # The tie-heavy graph of test_label_propagation_deterministic.
+    ties = [(i, (i * 3) % 17) for i in range(17) if i != (i * 3) % 17]
+    tdf = spark.createDataFrame(ties, "u long, v long")
+    local = _lpa_pairs(G.label_propagation(tdf, rounds=3))
+    assert local == _lpa_pairs(_distributed_lpa(monkeypatch, tdf, rounds=3))
+    assert local == set(_ref_lpa(ties, 3).items())
+
+    # String ids: the tiebreak is the ids' own order.
+    words = [("b", "c"), ("a", "b"), ("c", "a"), ("x", "y"), ("y", "zz")]
+    sdf = spark.createDataFrame(words, "u string, v string")
+    for rounds in (1, 2):
+        local = _lpa_pairs(G.label_propagation(sdf, rounds=rounds))
+        assert local == _lpa_pairs(
+            _distributed_lpa(monkeypatch, sdf, rounds=rounds)
+        )
+        assert local == set(_ref_lpa(words, rounds).items())
+
+    # An int src and a long dst widen to bigint on both paths, with the
+    # same nullability.
+    mdf = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (7, 3_000_000_000)], "u int, v long"
+    )
+    local_df = G.label_propagation(mdf, rounds=2)
+    dist_df = _distributed_lpa(monkeypatch, mdf, rounds=2)
+    assert local_df.schema == dist_df.schema
+    assert {f.dataType.simpleString() for f in local_df.schema.fields} == {
+        "bigint"
+    }
+    assert _lpa_pairs(local_df) == _lpa_pairs(dist_df)
+
+    # Every (node, nb) row is one vote, as in the distributed join: a
+    # duplicate edge votes twice, a self-loop lets a node vote for
+    # itself, and a null id joins no label (so its lone neighbor gets
+    # no vote and leaves the state).
+    odd = [(1, 2), (1, 2), (2, 3), (3, 3), (4, None), (5, 6)]
+    odf = spark.createDataFrame(odd, "u long, v long")
+    for rounds in (0, 1, 2, 3):
+        local_df = G.label_propagation(odf, rounds=rounds)
+        dist_df = _distributed_lpa(monkeypatch, odf, rounds=rounds)
+        assert local_df.schema == dist_df.schema, rounds
+        assert _lpa_pairs(local_df) == _lpa_pairs(dist_df), rounds
+
+
+def test_lpa_driver_gate_boundary(spark, monkeypatch, plan_audit):
+    """label_propagation shares DRIVER_MAX_SYM_ROWS with CC, counted in
+    rows of its symmetrized neighbor list (two per edge): exactly that
+    many rows take _driver_lpa, one row fewer the distributed rounds,
+    and both return the same labels. Only the distributed rounds run a
+    join."""
+    sym_rows = 2 * len(_LPA_BRIDGE)
+    df = spark.createDataFrame(_LPA_BRIDGE, "u long, v long")
+
+    driver_calls = []
+    real_driver_lpa = G._driver_lpa
+
+    def driver_spy(nbr, rows, rounds):
+        driver_calls.append(rows.num_rows)
+        return real_driver_lpa(nbr, rows, rounds)
+
+    monkeypatch.setattr(G, "_driver_lpa", driver_spy)
+
+    monkeypatch.setattr(G, "DRIVER_MAX_SYM_ROWS", sym_rows)
+    with plan_audit.sql_executions(spark) as driver_plans:
+        at_gate = _lpa_pairs(G.label_propagation(df, rounds=4))
+    assert driver_calls == [sym_rows] and driver_plans
+    assert _joins(plan_audit, driver_plans) == 0
+
+    monkeypatch.setattr(G, "DRIVER_MAX_SYM_ROWS", sym_rows - 1)
+    with plan_audit.sql_executions(spark) as loop_plans:
+        past_gate = _lpa_pairs(G.label_propagation(df, rounds=4))
+    assert len(driver_calls) == 1
+    assert _joins(plan_audit, loop_plans) > 0
+
+    assert at_gate == past_gate == set(_ref_lpa(_LPA_BRIDGE, 4).items())

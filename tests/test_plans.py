@@ -595,10 +595,10 @@ LOOP_LEG_BNLJ_OK = {"graph_pagerank", "tokenize_bpe_multiround"}
 def test_loop_leg_plans_pass_gates(spark, sf_dir, qname, monkeypatch, plan_audit):
     from hdfs_parquet_importer_spark.operators import graph as G
 
-    # Below DRIVER_CC_MAX_SYM_ROWS connected_components runs its rounds
-    # on the driver; closing the gate keeps the distributed loop's
-    # joins under this gate.
-    monkeypatch.setattr(G, "DRIVER_CC_MAX_SYM_ROWS", 0)
+    # Below DRIVER_MAX_SYM_ROWS connected_components and
+    # label_propagation run their rounds on the driver; closing the
+    # gate keeps both distributed loops' joins under this gate.
+    monkeypatch.setattr(G, "DRIVER_MAX_SYM_ROWS", 0)
     with plan_audit.sql_executions(spark) as built:
         df = registry()[qname].fn(spark, sf_dir)
     with plan_audit.sql_executions(spark) as ran:

@@ -152,8 +152,10 @@ def main() -> int:
         "PageRank, LPA, k-core, k-means, the BPE trainer) and every lazy",
         "localCheckpoint — get an indented `[plan-time]` row summing",
         "those executions; its `execs` is how many there were.",
-        "Connected components takes the path production takes at this",
-        "size (the driver loop below `DRIVER_CC_MAX_SYM_ROWS`).",
+        "Connected components and label propagation take the path",
+        "production takes at this size: below `DRIVER_MAX_SYM_ROWS`",
+        "symmetrized edge rows they run their rounds on the driver, so",
+        "their plan-time rows hold the one bounded collect, not the loop.",
         "",
         "| " + " | ".join(header) + " |",
         "|" + "---|" * len(header),
